@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
+import org.apache.spark.sql.types.LongType
 
 /** Loaders for the driver-provided TPC-H-ish testdata
   * (`/root/repo/TESTDATA.md`). One parquet per table; explicit helper so
@@ -112,35 +114,49 @@ object Tables {
     // where the plan will be analyzed (round-14 ADVICE: construction-time
     // getActiveSession registration can hit the wrong session)
     graft.expressions.Registration.registerAll(spark)
-    if (name == "events") {
-      // nanos column; see events() below. The legacy flag stays set ONLY
-      // when the file really is the nanos layout (the frame's execution
-      // needs it); for native-micros generations it is restored so it
-      // cannot silently re-type later parquet reads on the shared session
-      // (same discipline as the streaming-side layout probe).
-      val key = "spark.sql.legacy.parquet.nanosAsLong"
-      val prev = spark.conf.getOption(key)
-      spark.conf.set(key, "true")
-      val df = cachedRead(spark, s"$sfDir/events.parquet")
-      // (the set/restore dance runs on every call — only the relation
-      // construction is memoized — so a nanos-layout frame always has
-      // the flag re-asserted before execution, memo hit or miss)
-      if (df.schema("ts").dataType != org.apache.spark.sql.types.LongType)
-        prev match {
-          case Some(v) => spark.conf.set(key, v)
-          case None    => spark.conf.unset(key)
-        }
-      maybeInjectFault(df, name)
-    } else maybeInjectFault(
-      cachedRead(spark, s"$sfDir/$name.parquet"), name)
+    // only the relation is memoized: the layout probe runs on every call,
+    // so a nanos-layout frame always has the flag re-asserted
+    val df =
+      if (name == "events")
+        withTsLayout(spark)(cachedRead(spark, s"$sfDir/events.parquet"))._1
+      else cachedRead(spark, s"$sfDir/$name.parquet")
+    maybeInjectFault(df, name)
   }
 
+  private val nanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
+
+  /** Physical-layout probe for an events-shaped parquet: runs `read` under
+    * `spark.sql.legacy.parquet.nanosAsLong` and reports whether `ts` came
+    * back as raw Long nanos (the TIMESTAMP(NANOS) layout) or as native
+    * micros. The flag stays set ONLY for the nanos layout (the frame's
+    * execution needs it); otherwise, and when `read` throws, the previous
+    * value is restored — the session is shared, and a leaked flag would
+    * silently re-type every later nanos parquet read on it. Batch
+    * ([[table]]) and streaming (`EventsStream`) readers both probe here. */
+  private[graft] def withTsLayout(spark: SparkSession)(
+      read: => DataFrame): (DataFrame, Boolean) = {
+    val prev = spark.conf.getOption(nanosAsLong)
+    spark.conf.set(nanosAsLong, "true")
+    var nanos = false
+    try {
+      val df = read
+      nanos = df.schema("ts").dataType == LongType
+      (df, nanos)
+    } finally if (!nanos) prev match {
+      case Some(v) => spark.conf.set(nanosAsLong, v)
+      case None    => spark.conf.unset(nanosAsLong)
+    }
+  }
+
+  /** Micros TimestampType `ts` from either physical layout: raw nanos are
+    * truncated to micros (identical to DuckDB's microsecond TIMESTAMP). */
+  private[graft] def tsMicros(nanos: Boolean): Column =
+    if (nanos) timestamp_micros(expr("ts div 1000")) else col("ts")
+
   /** `events.parquet` has stored `ts` as parquet TIMESTAMP(NANOS) in some
-    * driver generations (Spark has no native type for it — we read raw
-    * Long nanos via `spark.sql.legacy.parquet.nanosAsLong` and truncate
-    * to micros, identical to DuckDB's microsecond TIMESTAMP) and as plain
-    * TIMESTAMP(MICROS) in others. Dispatch on the physical type so both
-    * layouts land on the same timestamp_ntz micros column.
+    * driver generations (Spark has no native type for it — see
+    * [[withTsLayout]]) and as plain TIMESTAMP(MICROS) in others; both land
+    * on the same timestamp_ntz micros column.
     */
   def events(s: SparkSession, d: String): DataFrame = {
     // timestamp_ntz, matching how Spark reads the other tables' naive
@@ -148,15 +164,8 @@ object Tables {
     // would dump as isAdjustedToUTC=true parquet and mismatch the oracle's
     // naive timestamps. Session TZ is pinned UTC so the cast is a rebadge.
     val raw = table(s, d, "events")
-    val tsCol = raw.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType => // nanos-as-long layout
-        org.apache.spark.sql.functions.timestamp_micros(
-          org.apache.spark.sql.functions.expr("ts div 1000"))
-          .cast("timestamp_ntz")
-      case _ => // native micros layout
-        org.apache.spark.sql.functions.col("ts").cast("timestamp_ntz")
-    }
-    raw.withColumn("ts", tsCol)
+    raw.withColumn("ts",
+      tsMicros(raw.schema("ts").dataType == LongType).cast("timestamp_ntz"))
   }
 
   val allNames: Seq[String] = Seq(

@@ -104,7 +104,8 @@ class StreamingSpec extends SparkSpec {
     // the split source really produced multiple micro-batches: THIS
     // run's sink (exact scoped dir, not a newest-mtime guess that a
     // concurrent sibling process could win) carries >= 2 batch subdirs
-    val sink = EventsStream.embeddingDriftBase(sf("sf0.001"))
+    val sink = EventsStream.scopedBase("embdrift", Some(sf("sf0.001")),
+                                       table = "embeddings")
     val batchIds = spark.read.parquet(s"$sink/out")
       .select("batch").distinct().count()
     batchIds should be >= 2L
@@ -121,7 +122,7 @@ class StreamingSpec extends SparkSpec {
     r2 shouldBe 1000L
     // a fake LIVE sibling (owner pid = a running process that is not us:
     // pid 1) must survive the GC; a dead-owner sibling must be removed
-    val root = java.nio.file.Paths.get("/root/repo/target/scratch")
+    val root = EventsStream.scratchRoot
     val sfKey = EventsStream.pathKey(sf("sf0.001"))
     val live = root.resolve(s"stream_inc_${sfKey}_p1_m0")
     val dead = root.resolve(s"stream_inc_${sfKey}_p999999999_m0")
@@ -131,6 +132,17 @@ class StreamingSpec extends SparkSpec {
     java.nio.file.Files.exists(live) shouldBe true // never rm a live writer
     java.nio.file.Files.exists(dead) shouldBe false // dead pids are GC'd
     java.nio.file.Files.delete(live)
+  }
+
+  test("every streaming entry restores shuffle partitions and the " +
+       "parquet nanos-as-long flag it sets while running") {
+    val keys = Seq("spark.sql.shuffle.partitions",
+                   "spark.sql.legacy.parquet.nanosAsLong")
+    graft.ops.Streaming.queries.toSeq.sortBy(_._1).foreach { case (name, q) =>
+      val before = keys.map(spark.conf.getOption)
+      q(spark, sf("sf0.001")).collect()
+      withClue(s"$name: ") { keys.map(spark.conf.getOption) shouldBe before }
+    }
   }
 
   test("stream dedup lands in a file sink, re-runs exactly-once, equals batch dedup") {
