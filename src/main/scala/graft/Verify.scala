@@ -136,6 +136,8 @@ object DumpContract {
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json): Unit
   }
 
+  /** Default output dir: `target/verify_out` under the working
+    * directory, so a dump from any checkout stays inside it. */
   def main(args: Array[String]): Unit =
-    write(args.headOption.getOrElse("/root/repo/target/verify_out"))
+    write(args.headOption.getOrElse("target/verify_out"))
 }

@@ -626,10 +626,59 @@ object Clustering {
     "ext_knn_mutual_clusters" -> extKnnMutualClusters,
     "ext_knn_ann_clusters" -> extKnnAnnClusters)
 
-  // The oracle replays the minhash banding bit-for-bit (same md5/perm
-  // constants as the ext_minhash_dedup oracle), then resolves components
-  // with a recursive transitive closure and takes min reachable id —
-  // tractable at test scale because near-dup clusters are tiny.
+  /** Recursive component closure CTEs: `e(u, v)` (the edge list in both
+    * directions), `reach(node, r)` (every node reachable from each node),
+    * `cl(node, cluster_id)` (min reachable id, the
+    * [[connectedComponents]] label), `sz(cluster_id, <sizeCol>)` and,
+    * with `share`, `g(max_component_share)` — the SQL twin of
+    * [[clusterReport]]. Document graphs (`docs`) read the MinHash
+    * `pairs(da, db)` CTE of [[Dedup.minhashPairsSql]] and seed every
+    * document; vector graphs read a `p(u, v)` CTE and seed every
+    * embedding. A list of CTEs without WITH or a trailing comma. Shared
+    * by the five cluster oracles here and Quality's ext_keep_best. */
+  private[ops] def closureSql(docs: Boolean,
+                              sizeCol: String = "cluster_size",
+                              share: Boolean = true): String = {
+    val (e, id, table) =
+      if (docs) ("""e AS (SELECT da AS u, db AS v FROM pairs
+                   |      UNION ALL SELECT db, da FROM pairs)""".stripMargin,
+                 "doc_id", "documents")
+      else ("e AS (SELECT u, v FROM p UNION ALL SELECT v, u FROM p)",
+            "vec_id", "embeddings")
+    val g =
+      if (share) s""",
+                    |g AS (SELECT CAST(max($sizeCol) AS DOUBLE) /
+                    |             CAST(sum($sizeCol) AS DOUBLE)
+                    |        AS max_component_share FROM sz)""".stripMargin
+      else ""
+    s"""$e,
+       |reach(node, r) AS (
+       |  SELECT $id, $id FROM $table
+       |  UNION
+       |  SELECT reach.node, e.v FROM reach JOIN e ON reach.r = e.u),
+       |cl AS (SELECT node, min(r) AS cluster_id FROM reach GROUP BY node),
+       |sz AS (SELECT cluster_id, CAST(count(*) AS BIGINT) AS $sizeCol
+       |       FROM cl GROUP BY 1)$g""".stripMargin
+  }
+
+  /** [[closureSql]] plus the per-node cluster report SELECT (node id,
+    * cluster_id, cluster_size, is_representative, max_component_share)
+    * of ext_dedup_clusters, ext_embed_clusters and
+    * ext_knn_mutual_clusters. */
+  private def clusterReportSql(docs: Boolean): String = {
+    val id = if (docs) "doc_id" else "vec_id"
+    s"""${closureSql(docs)}
+       |SELECT node AS $id, cluster_id, cluster_size,
+       |  node = cluster_id AS is_representative, max_component_share
+       |FROM cl JOIN sz USING (cluster_id) CROSS JOIN g
+       |ORDER BY $id""".stripMargin
+  }
+
+  // The oracles replay the minhash banding bit-for-bit (the shared
+  // Dedup.minhashPairsSql chain of the ext_minhash_dedup oracle), then
+  // resolve components with the recursive closure of closureSql and take
+  // the min reachable id — tractable at test scale because near-dup
+  // clusters are tiny.
   val oracles: Map[String, String] = Map(
     // same degree orientation: edge → higher-(deg, id) endpoint; the
     // triangle total is orientation-invariant but the replay mirrors
@@ -666,88 +715,15 @@ object Clustering {
         |m AS (SELECT CAST(count(*) AS BIGINT) AS n_edges FROM e)
         |SELECT n_nodes, n_edges, n_triangles FROM n, m, t""".stripMargin,
     "ext_dedup_clusters" ->
-      """WITH RECURSIVE sh AS (
-        |  SELECT doc_id, unnest(CASE WHEN len(t) >= 3
-        |    THEN list_transform(range(1, len(t) - 1), i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])
-        |    ELSE [lower(text)] END) AS s
-        |  FROM (SELECT doc_id, text, string_split(lower(text), ' ') AS t FROM documents)),
-        |hs AS (SELECT doc_id,
-        |  list_reduce(list_transform(range(1, 16), i ->
-        |    CAST(strpos('0123456789abcdef', substr(md5(s), i, 1)) - 1 AS BIGINT)),
-        |    (a, b) -> a * 16 + b) % 2147483647 AS h
-        |  FROM sh),
-        |perms(k, a, b) AS (SELECT * FROM (VALUES
-        |  (0, 414281673, 1412461474), (1, 779796209, 608464424),
-        |  (2, 2057138611, 371426352), (3, 636929129, 1051709367),
-        |  (4, 148700537, 556582936), (5, 280017523, 1049994530),
-        |  (6, 1225570701, 1482240542), (7, 531732645, 453882425),
-        |  (8, 653258605, 199196378), (9, 2024089755, 1542891919),
-        |  (10, 219612255, 1948470694), (11, 2004763803, 1426709303),
-        |  (12, 347532637, 1392420289), (13, 1523061221, 1369392366),
-        |  (14, 430040917, 1109423241), (15, 1822934603, 410969165)) v(k, a, b)),
-        |sig AS (SELECT doc_id, k, min((CAST(a AS BIGINT) * h + b) % 2147483647) AS v
-        |  FROM hs CROSS JOIN perms GROUP BY 1, 2),
-        |bk AS (SELECT doc_id, k // 4 AS band,
-        |  string_agg(CAST(v AS VARCHAR), ':' ORDER BY k) AS band_key
-        |  FROM sig GROUP BY 1, 2),
-        |pairs AS (SELECT DISTINCT x.doc_id AS da, y.doc_id AS db FROM bk x JOIN bk y
-        |  ON x.band = y.band AND x.band_key = y.band_key AND x.doc_id < y.doc_id),
-        |e AS (SELECT da AS u, db AS v FROM pairs
-        |      UNION ALL SELECT db, da FROM pairs),
-        |reach(node, r) AS (
-        |  SELECT doc_id, doc_id FROM documents
-        |  UNION
-        |  SELECT reach.node, e.v FROM reach JOIN e ON reach.r = e.u),
-        |cl AS (SELECT node, min(r) AS cluster_id FROM reach GROUP BY node),
-        |sz AS (SELECT cluster_id, CAST(count(*) AS BIGINT) AS cluster_size
-        |       FROM cl GROUP BY 1),
-        |g AS (SELECT CAST(max(cluster_size) AS DOUBLE) /
-        |             CAST(sum(cluster_size) AS DOUBLE)
-        |        AS max_component_share FROM sz)
-        |SELECT node AS doc_id, cluster_id, cluster_size,
-        |  node = cluster_id AS is_representative, max_component_share
-        |FROM cl JOIN sz USING (cluster_id) CROSS JOIN g
-        |ORDER BY doc_id""".stripMargin,
+      s"""WITH RECURSIVE ${Dedup.minhashPairsSql},
+        |${clusterReportSql(docs = true)}""".stripMargin,
 
     // dedup_clusters' closure replay + size-capped within-cluster pair
     // audit: direct = LSH candidate, chained = transitively joined only;
     // similarity estimate = 1/16-quantum signature agreement
     "ext_cluster_dilution" ->
-      """WITH RECURSIVE sh AS (
-        |  SELECT doc_id, unnest(CASE WHEN len(t) >= 3
-        |    THEN list_transform(range(1, len(t) - 1), i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])
-        |    ELSE [lower(text)] END) AS s
-        |  FROM (SELECT doc_id, text, string_split(lower(text), ' ') AS t FROM documents)),
-        |hs AS (SELECT doc_id,
-        |  list_reduce(list_transform(range(1, 16), i ->
-        |    CAST(strpos('0123456789abcdef', substr(md5(s), i, 1)) - 1 AS BIGINT)),
-        |    (a, b) -> a * 16 + b) % 2147483647 AS h
-        |  FROM sh),
-        |perms(k, a, b) AS (SELECT * FROM (VALUES
-        |  (0, 414281673, 1412461474), (1, 779796209, 608464424),
-        |  (2, 2057138611, 371426352), (3, 636929129, 1051709367),
-        |  (4, 148700537, 556582936), (5, 280017523, 1049994530),
-        |  (6, 1225570701, 1482240542), (7, 531732645, 453882425),
-        |  (8, 653258605, 199196378), (9, 2024089755, 1542891919),
-        |  (10, 219612255, 1948470694), (11, 2004763803, 1426709303),
-        |  (12, 347532637, 1392420289), (13, 1523061221, 1369392366),
-        |  (14, 430040917, 1109423241), (15, 1822934603, 410969165)) v(k, a, b)),
-        |sig AS (SELECT doc_id, k, min((CAST(a AS BIGINT) * h + b) % 2147483647) AS v
-        |  FROM hs CROSS JOIN perms GROUP BY 1, 2),
-        |bk AS (SELECT doc_id, k // 4 AS band,
-        |  string_agg(CAST(v AS VARCHAR), ':' ORDER BY k) AS band_key
-        |  FROM sig GROUP BY 1, 2),
-        |pairs AS (SELECT DISTINCT x.doc_id AS da, y.doc_id AS db FROM bk x JOIN bk y
-        |  ON x.band = y.band AND x.band_key = y.band_key AND x.doc_id < y.doc_id),
-        |e AS (SELECT da AS u, db AS v FROM pairs
-        |      UNION ALL SELECT db, da FROM pairs),
-        |reach(node, r) AS (
-        |  SELECT doc_id, doc_id FROM documents
-        |  UNION
-        |  SELECT reach.node, e.v FROM reach JOIN e ON reach.r = e.u),
-        |cl AS (SELECT node, min(r) AS cluster_id FROM reach GROUP BY node),
-        |sz AS (SELECT cluster_id, CAST(count(*) AS BIGINT) AS csize
-        |       FROM cl GROUP BY 1),
+      s"""WITH RECURSIVE ${Dedup.minhashPairsSql},
+        |${closureSql(docs = true, sizeCol = "csize", share = false)},
         |wa AS (SELECT cl.cluster_id, cl.node FROM cl JOIN sz USING (cluster_id)
         |       WHERE csize BETWEEN 2 AND 20),
         |wp AS (SELECT x.node AS a, y.node AS b FROM wa x JOIN wa y
@@ -783,42 +759,19 @@ object Clustering {
         |SELECT n_clusters_audited, n_clusters_large, n_pairs, n_direct,
         |  n_chained, chained_ppm, mean_direct_est_ppm, mean_chained_est_ppm
         |FROM cs, ps""".stripMargin,
-    "ext_embed_clusters" -> {
-      val cos = "list_aggregate(list_transform(list_zip(a.embedding, b.embedding), " +
-        "s -> CAST(s[1] AS DOUBLE) * CAST(s[2] AS DOUBLE)), 'sum') / " +
-        "(sqrt(list_aggregate(list_transform(a.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum')) * " +
-        "sqrt(list_aggregate(list_transform(b.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum')))"
+    "ext_embed_clusters" ->
       s"""WITH RECURSIVE p AS (
          |  SELECT a.vec_id AS u, b.vec_id AS v
          |  FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-         |  WHERE $cos >= 0.35),
-         |e AS (SELECT u, v FROM p UNION ALL SELECT v, u FROM p),
-         |reach(node, r) AS (
-         |  SELECT vec_id, vec_id FROM embeddings
-         |  UNION
-         |  SELECT reach.node, e.v FROM reach JOIN e ON reach.r = e.u),
-         |cl AS (SELECT node, min(r) AS cluster_id FROM reach GROUP BY node),
-         |sz AS (SELECT cluster_id, CAST(count(*) AS BIGINT) AS cluster_size
-         |       FROM cl GROUP BY 1),
-         |g AS (SELECT CAST(max(cluster_size) AS DOUBLE) /
-         |             CAST(sum(cluster_size) AS DOUBLE)
-         |        AS max_component_share FROM sz)
-         |SELECT node AS vec_id, cluster_id, cluster_size,
-         |  node = cluster_id AS is_representative, max_component_share
-         |FROM cl JOIN sz USING (cluster_id) CROSS JOIN g
-         |ORDER BY vec_id""".stripMargin
-    },
+         |  WHERE ${Similarity.cosSql("a.embedding", "b.embedding")} >= 0.35),
+         |${clusterReportSql(docs = false)}""".stripMargin,
     // mutual-kNN replay: same bit-exact cosine spelling, per-node rank
     // (cos DESC, nbr ASC — exact ties break on the unique neighbor id),
     // mutual top-2 filter, then the same recursive-closure component
     // resolution as the other cluster oracles
-    "ext_knn_mutual_clusters" -> {
-      val cos = "list_aggregate(list_transform(list_zip(a.embedding, b.embedding), " +
-        "s -> CAST(s[1] AS DOUBLE) * CAST(s[2] AS DOUBLE)), 'sum') / " +
-        "(sqrt(list_aggregate(list_transform(a.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum')) * " +
-        "sqrt(list_aggregate(list_transform(b.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum')))"
+    "ext_knn_mutual_clusters" ->
       s"""WITH RECURSIVE c AS (
-         |  SELECT a.vec_id AS node, b.vec_id AS nbr, $cos AS cos
+         |  SELECT a.vec_id AS node, b.vec_id AS nbr, ${Similarity.cosSql("a.embedding", "b.embedding")} AS cos
          |  FROM embeddings a JOIN embeddings b ON a.vec_id <> b.vec_id),
          |r AS (SELECT node, nbr,
          |        row_number() OVER (PARTITION BY node
@@ -828,22 +781,7 @@ object Clustering {
          |p AS (SELECT x.node AS u, x.nbr AS v FROM k x
          |      JOIN k y ON x.node = y.nbr AND x.nbr = y.node
          |      WHERE x.node < x.nbr),
-         |e AS (SELECT u, v FROM p UNION ALL SELECT v, u FROM p),
-         |reach(node, r) AS (
-         |  SELECT vec_id, vec_id FROM embeddings
-         |  UNION
-         |  SELECT reach.node, e.v FROM reach JOIN e ON reach.r = e.u),
-         |cl AS (SELECT node, min(r) AS cluster_id FROM reach GROUP BY node),
-         |sz AS (SELECT cluster_id, CAST(count(*) AS BIGINT) AS cluster_size
-         |       FROM cl GROUP BY 1),
-         |g AS (SELECT CAST(max(cluster_size) AS DOUBLE) /
-         |             CAST(sum(cluster_size) AS DOUBLE)
-         |        AS max_component_share FROM sz)
-         |SELECT node AS vec_id, cluster_id, cluster_size,
-         |  node = cluster_id AS is_representative, max_component_share
-         |FROM cl JOIN sz USING (cluster_id) CROSS JOIN g
-         |ORDER BY vec_id""".stripMargin
-    },
+         |${clusterReportSql(docs = false)}""".stripMargin,
     // ANN-backed replay: scale-adaptive codebook (smallest power of two
     // S with S*S >= N, seeds = vec_id < S), argmin assignment
     // (seed_cos DESC, seed_id), nprobe=2 multiprobe candidates, top-2
@@ -851,12 +789,7 @@ object Clustering {
     // the bounded audit (exact mutual edges incident to vec_id < 32,
     // replayed from the FULL exact rank, which restricted to the batch
     // equals the entry's bounded broadcast scans) and the ppm recall.
-    "ext_knn_ann_clusters" -> {
-      def cosOn(x: String, y: String) =
-        s"list_aggregate(list_transform(list_zip($x, $y), " +
-          "s -> CAST(s[1] AS DOUBLE) * CAST(s[2] AS DOUBLE)), 'sum') / " +
-          s"(sqrt(list_aggregate(list_transform($x, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum')) * " +
-          s"sqrt(list_aggregate(list_transform($y, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum')))"
+    "ext_knn_ann_clusters" ->
       s"""WITH RECURSIVE nn AS (SELECT count(*) AS n FROM embeddings),
          |sq AS (SELECT CAST(1 AS BIGINT) << min(k) AS s
          |       FROM range(0, 32) t(k), nn
@@ -864,7 +797,7 @@ object Clustering {
          |seeds AS (SELECT vec_id AS seed_id, embedding AS se
          |          FROM embeddings, sq WHERE vec_id < sq.s),
          |asg AS (SELECT e.vec_id, e.embedding, s.seed_id,
-         |          ${cosOn("e.embedding", "s.se")} AS seed_cos
+         |          ${Similarity.cosSql("e.embedding", "s.se")} AS seed_cos
          |        FROM embeddings e CROSS JOIN seeds s),
          |rk AS (SELECT vec_id, embedding, seed_id,
          |         row_number() OVER (PARTITION BY vec_id
@@ -875,7 +808,7 @@ object Clustering {
          |prb AS (SELECT vec_id AS qid, embedding AS qe, seed_id AS cell
          |        FROM rk WHERE rn <= 2),
          |cnd AS (SELECT qid AS node, cid AS nbr,
-         |          ${cosOn("qe", "ce")} AS cos
+         |          ${Similarity.cosSql("qe", "ce")} AS cos
          |        FROM prb JOIN mem USING (cell) WHERE qid <> cid),
          |kr AS (SELECT node, nbr,
          |         row_number() OVER (PARTITION BY node
@@ -885,19 +818,9 @@ object Clustering {
          |p AS (SELECT x.node AS u, x.nbr AS v FROM k2 x
          |      JOIN k2 y ON x.node = y.nbr AND x.nbr = y.node
          |      WHERE x.node < x.nbr),
-         |e AS (SELECT u, v FROM p UNION ALL SELECT v, u FROM p),
-         |reach(node, r) AS (
-         |  SELECT vec_id, vec_id FROM embeddings
-         |  UNION
-         |  SELECT reach.node, e.v FROM reach JOIN e ON reach.r = e.u),
-         |cl AS (SELECT node, min(r) AS cluster_id FROM reach GROUP BY node),
-         |sz AS (SELECT cluster_id, CAST(count(*) AS BIGINT) AS cluster_size
-         |       FROM cl GROUP BY 1),
-         |g AS (SELECT CAST(max(cluster_size) AS DOUBLE) /
-         |             CAST(sum(cluster_size) AS DOUBLE)
-         |        AS max_component_share FROM sz),
+         |${closureSql(docs = false)},
          |xc AS (SELECT a.vec_id AS node, b.vec_id AS nbr,
-         |         ${cosOn("a.embedding", "b.embedding")} AS cos
+         |         ${Similarity.cosSql("a.embedding", "b.embedding")} AS cos
          |       FROM embeddings a JOIN embeddings b
          |         ON a.vec_id <> b.vec_id),
          |xr AS (SELECT node, nbr,
@@ -921,6 +844,5 @@ object Clustering {
          |  node = cluster_id AS is_representative, max_component_share,
          |  audit_exact_edges, audit_ann_edges, knn_edge_recall_ppm
          |FROM cl JOIN sz USING (cluster_id) CROSS JOIN g CROSS JOIN aud
-         |ORDER BY vec_id""".stripMargin
-    })
+         |ORDER BY vec_id""".stripMargin)
 }

@@ -82,9 +82,9 @@ object Dedup {
   private val P31 = 2147483647L // Mersenne prime 2^31-1
   /** Deterministic 31-bit affine-permutation constants (LCG, fixed seed);
     * 31-bit domain keeps a*h+b < 2^62, overflow-free under ANSI mode.
-    * The first 16 (a,b) pairs are hard-coded in the minhash oracle SQL —
-    * regenerate there if the seed or k ever changes. */
-  private def permConsts(k: Int): Seq[(Long, Long)] = {
+    * The first 16 (a,b) pairs are written out in [[minhashPermsSql]];
+    * DedupSpec fails if the two ever disagree. */
+  private[graft] def permConsts(k: Int): Seq[(Long, Long)] = {
     var x = 0x5DEECE66DL
     def next(): Long = { x = x * 6364136223846793005L + 1442695040888963407L; x >>> 33 }
     (0 until k).map(_ => (next() | 1L, next()))
@@ -1273,6 +1273,107 @@ object Dedup {
     "ext_novelty_rate" -> extNoveltyRate,
     "ext_neardup_eval" -> extNeardupEval)
 
+  // ---- shared oracle SQL fragments --------------------------------------
+  // Plain SQL text spelled from the recipe itself, never generated from
+  // the Spark-side code or constants above, so each oracle stays an
+  // independent replay of what it checks. Each fragment is a list of
+  // CTEs without the leading WITH or a trailing comma.
+
+  /** `sh(doc_id, s)`: one row per word-3-gram shingle of every document
+    * (the whole lower-cased text when it has < 3 tokens) — the
+    * [[shingles3]] recipe. Shared by ext_dedup_sweep, ext_lsh_plan,
+    * ext_minhash_dedup, ext_incremental_dedup, ext_dedup_clusters,
+    * ext_cluster_dilution and ext_keep_best. */
+  private[ops] val minhashShinglesSql: String =
+    """sh AS (
+      |  SELECT doc_id, unnest(CASE WHEN len(t) >= 3
+      |    THEN list_transform(range(1, len(t) - 1), i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])
+      |    ELSE [lower(text)] END) AS s
+      |  FROM (SELECT doc_id, text, string_split(lower(text), ' ') AS t FROM documents))""".stripMargin
+
+  /** The 16 affine MinHash permutations `perms(k, a, b)`, written out
+    * once for every MinHash oracle; DedupSpec checks the table against
+    * [[permConsts]]. */
+  private[graft] val minhashPermsSql: String =
+    """perms(k, a, b) AS (SELECT * FROM (VALUES
+      |  (0, 414281673, 1412461474), (1, 779796209, 608464424),
+      |  (2, 2057138611, 371426352), (3, 636929129, 1051709367),
+      |  (4, 148700537, 556582936), (5, 280017523, 1049994530),
+      |  (6, 1225570701, 1482240542), (7, 531732645, 453882425),
+      |  (8, 653258605, 199196378), (9, 2024089755, 1542891919),
+      |  (10, 219612255, 1948470694), (11, 2004763803, 1426709303),
+      |  (12, 347532637, 1392420289), (13, 1523061221, 1369392366),
+      |  (14, 430040917, 1109423241), (15, 1822934603, 410969165)) v(k, a, b))""".stripMargin
+
+  /** MinHash signature CTEs over a shingle CTE `from(doc_id, col)`:
+    * `hs` (hash60 of each shingle mod 2^31-1), [[minhashPermsSql]] and
+    * `sig(doc_id, k, v)`, the [[minhashSig]] recipe. Shared by all nine
+    * MinHash oracles: ext_minhash_dedup, ext_minhash_est,
+    * ext_dedup_sweep, ext_neardup_eval, ext_lsh_plan,
+    * ext_incremental_dedup, ext_dedup_clusters, ext_cluster_dilution and
+    * ext_keep_best. `wrapSig` keeps the two-line `sig` spelling that
+    * ext_minhash_est and ext_neardup_eval were published with. */
+  private[ops] def minhashSigSql(from: String = "sh", col: String = "s",
+                                 wrapSig: Boolean = false): String = {
+    val sig =
+      "sig AS (SELECT doc_id, k," + (if (wrapSig) "\n  " else " ") + "min("
+    s"""hs AS (SELECT doc_id,
+       |  list_reduce(list_transform(range(1, 16), i ->
+       |    CAST(strpos('0123456789abcdef', substr(md5($col), i, 1)) - 1 AS BIGINT)),
+       |    (a, b) -> a * 16 + b) % 2147483647 AS h
+       |  FROM $from),
+       |$minhashPermsSql,
+       |$sig(CAST(a AS BIGINT) * h + b) % 2147483647) AS v
+       |  FROM hs CROSS JOIN perms GROUP BY 1, 2)""".stripMargin
+  }
+
+  /** `bk(doc_id, band, band_key)`: 4 bands of 4 signature slots,
+    * ':'-joined — the [[bandKeys]] recipe. Shared by every MinHash
+    * oracle but ext_lsh_plan, which bands at several widths. */
+  private[ops] val minhashBandsSql: String =
+    """bk AS (SELECT doc_id, k // 4 AS band,
+      |  string_agg(CAST(v AS VARCHAR), ':' ORDER BY k) AS band_key
+      |  FROM sig GROUP BY 1, 2)""".stripMargin
+
+  /** The whole MinHash candidate chain: [[minhashShinglesSql]],
+    * [[minhashSigSql]], [[minhashBandsSql]] and `pairs(da, db)`, the
+    * distinct band-sharing pairs of [[minhashBandPairs]]. Shared by
+    * ext_minhash_dedup, ext_dedup_sweep, ext_dedup_clusters,
+    * ext_cluster_dilution and ext_keep_best. */
+  private[ops] val minhashPairsSql: String =
+    s"""$minhashShinglesSql,
+       |${minhashSigSql()},
+       |$minhashBandsSql,
+       |pairs AS (SELECT DISTINCT x.doc_id AS da, y.doc_id AS db FROM bk x JOIN bk y
+       |  ON x.band = y.band AND x.band_key = y.band_key AND x.doc_id < y.doc_id)""".stripMargin
+
+  /** The SimHash candidate chain: `tok` (distinct lower-cased tokens),
+    * `hv` (hash60 per token), `bits` (per-bit ±1 votes), `sim(doc_id,
+    * simhash)`, `bands` (4 × 15-bit bands) and `partners(da, db)`, the
+    * [[simhash60]] + [[simhashBandPairs]] recipe. Shared by
+    * ext_simhash_dedup and ext_hamming_hist. */
+  private val simhashPartnersSql: String =
+    """tok AS (
+      |  SELECT doc_id, unnest(list_distinct(string_split(lower(text), ' '))) AS t
+      |  FROM documents),
+      |hv AS (SELECT doc_id,
+      |  list_reduce(list_transform(range(1, 16), i ->
+      |    CAST(strpos('0123456789abcdef', substr(md5(t), i, 1)) - 1 AS BIGINT)),
+      |    (a, b) -> a * 16 + b) AS h
+      |  FROM tok),
+      |bits AS (
+      |  SELECT doc_id, b, sum(CASE WHEN (h >> b) & 1 = 1 THEN 1 ELSE -1 END) AS s
+      |  FROM hv CROSS JOIN range(0, 60) r(b) GROUP BY 1, 2),
+      |sim AS (
+      |  SELECT doc_id, CAST(sum(CASE WHEN s > 0 THEN (CAST(1 AS BIGINT) << b) ELSE 0 END) AS BIGINT) AS simhash
+      |  FROM bits GROUP BY 1),
+      |bands AS (
+      |  SELECT doc_id, b AS band, (simhash >> CAST(15 * b AS INTEGER)) & 32767 AS band_val
+      |  FROM sim CROSS JOIN range(0, 4) r(b)),
+      |partners AS (SELECT DISTINCT x.doc_id AS da, y.doc_id AS db
+      |  FROM bands x JOIN bands y ON x.band = y.band AND x.band_val = y.band_val
+      |    AND x.doc_id < y.doc_id)""".stripMargin
+
   val oracles: Map[String, String] = Map(
     // chunk digests replayed from the same boundary formula as
     // ext_cdc_chunks; df-cap, pair grain, and containment all integer
@@ -1341,7 +1442,7 @@ object Dedup {
     // same signature + banding replay as ext_minhash_dedup (distinct
     // shingles — min is multiset-invariant), then integer-ppm calibration
     "ext_minhash_est" ->
-      """WITH sets AS (
+      s"""WITH sets AS (
         |  SELECT doc_id, CASE WHEN len(t) >= 3
         |    THEN list_distinct(list_transform(range(1, len(t) - 1),
         |      i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))
@@ -1350,26 +1451,8 @@ object Dedup {
         |        FROM documents)),
         |posts AS (SELECT doc_id, unnest(shs) AS sh FROM sets),
         |nsh AS (SELECT doc_id, CAST(len(shs) AS BIGINT) AS n FROM sets),
-        |hs AS (SELECT doc_id,
-        |  list_reduce(list_transform(range(1, 16), i ->
-        |    CAST(strpos('0123456789abcdef', substr(md5(sh), i, 1)) - 1 AS BIGINT)),
-        |    (a, b) -> a * 16 + b) % 2147483647 AS h
-        |  FROM posts),
-        |perms(k, a, b) AS (SELECT * FROM (VALUES
-        |  (0, 414281673, 1412461474), (1, 779796209, 608464424),
-        |  (2, 2057138611, 371426352), (3, 636929129, 1051709367),
-        |  (4, 148700537, 556582936), (5, 280017523, 1049994530),
-        |  (6, 1225570701, 1482240542), (7, 531732645, 453882425),
-        |  (8, 653258605, 199196378), (9, 2024089755, 1542891919),
-        |  (10, 219612255, 1948470694), (11, 2004763803, 1426709303),
-        |  (12, 347532637, 1392420289), (13, 1523061221, 1369392366),
-        |  (14, 430040917, 1109423241), (15, 1822934603, 410969165)) v(k, a, b)),
-        |sig AS (SELECT doc_id, k,
-        |  min((CAST(a AS BIGINT) * h + b) % 2147483647) AS v
-        |  FROM hs CROSS JOIN perms GROUP BY 1, 2),
-        |bk AS (SELECT doc_id, k // 4 AS band,
-        |  string_agg(CAST(v AS VARCHAR), ':' ORDER BY k) AS band_key
-        |  FROM sig GROUP BY 1, 2),
+        |${minhashSigSql("posts", "sh", wrapSig = true)},
+        |$minhashBandsSql,
         |pairs AS (SELECT DISTINCT x.doc_id AS da, y.doc_id AS db
         |  FROM bk x JOIN bk y
         |  ON x.band = y.band AND x.band_key = y.band_key
@@ -1494,32 +1577,7 @@ object Dedup {
     // same banding replay as the minhash/cluster oracles, then exact
     // shingle-set Jaccard per candidate and integer threshold tests
     "ext_dedup_sweep" ->
-      """WITH sh AS (
-        |  SELECT doc_id, unnest(CASE WHEN len(t) >= 3
-        |    THEN list_transform(range(1, len(t) - 1), i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])
-        |    ELSE [lower(text)] END) AS s
-        |  FROM (SELECT doc_id, text, string_split(lower(text), ' ') AS t FROM documents)),
-        |hs AS (SELECT doc_id,
-        |  list_reduce(list_transform(range(1, 16), i ->
-        |    CAST(strpos('0123456789abcdef', substr(md5(s), i, 1)) - 1 AS BIGINT)),
-        |    (a, b) -> a * 16 + b) % 2147483647 AS h
-        |  FROM sh),
-        |perms(k, a, b) AS (SELECT * FROM (VALUES
-        |  (0, 414281673, 1412461474), (1, 779796209, 608464424),
-        |  (2, 2057138611, 371426352), (3, 636929129, 1051709367),
-        |  (4, 148700537, 556582936), (5, 280017523, 1049994530),
-        |  (6, 1225570701, 1482240542), (7, 531732645, 453882425),
-        |  (8, 653258605, 199196378), (9, 2024089755, 1542891919),
-        |  (10, 219612255, 1948470694), (11, 2004763803, 1426709303),
-        |  (12, 347532637, 1392420289), (13, 1523061221, 1369392366),
-        |  (14, 430040917, 1109423241), (15, 1822934603, 410969165)) v(k, a, b)),
-        |sig AS (SELECT doc_id, k, min((CAST(a AS BIGINT) * h + b) % 2147483647) AS v
-        |  FROM hs CROSS JOIN perms GROUP BY 1, 2),
-        |bk AS (SELECT doc_id, k // 4 AS band,
-        |  string_agg(CAST(v AS VARCHAR), ':' ORDER BY k) AS band_key
-        |  FROM sig GROUP BY 1, 2),
-        |pairs AS (SELECT DISTINCT x.doc_id AS da, y.doc_id AS db FROM bk x JOIN bk y
-        |  ON x.band = y.band AND x.band_key = y.band_key AND x.doc_id < y.doc_id),
+      s"""WITH $minhashPairsSql,
         |dsh AS (
         |  SELECT doc_id, list_distinct(CASE WHEN len(t) >= 3
         |    THEN list_transform(range(1, len(t) - 1), i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])
@@ -1570,7 +1628,7 @@ object Dedup {
         |    AS mean_novelty
         |FROM pd GROUP BY 1 ORDER BY 1""".stripMargin,
     "ext_neardup_eval" ->
-      """WITH base AS (
+      s"""WITH base AS (
         |  SELECT doc_id, text FROM documents
         |  WHERE list_reduce(list_transform(range(1, 16), i ->
         |      CAST(strpos('0123456789abcdef',
@@ -1595,26 +1653,8 @@ object Dedup {
         |  JOIN sizes sa ON sa.doc_id = com.a
         |  JOIN sizes sb ON sb.doc_id = com.b
         |  WHERE CAST(c AS DOUBLE) / (sa.nw + sb.nw - c) >= 0.5),
-        |hs AS (SELECT doc_id,
-        |  list_reduce(list_transform(range(1, 16), i ->
-        |    CAST(strpos('0123456789abcdef', substr(md5(s), i, 1)) - 1 AS BIGINT)),
-        |    (a, b) -> a * 16 + b) % 2147483647 AS h
-        |  FROM sh),
-        |perms(k, a, b) AS (SELECT * FROM (VALUES
-        |  (0, 414281673, 1412461474), (1, 779796209, 608464424),
-        |  (2, 2057138611, 371426352), (3, 636929129, 1051709367),
-        |  (4, 148700537, 556582936), (5, 280017523, 1049994530),
-        |  (6, 1225570701, 1482240542), (7, 531732645, 453882425),
-        |  (8, 653258605, 199196378), (9, 2024089755, 1542891919),
-        |  (10, 219612255, 1948470694), (11, 2004763803, 1426709303),
-        |  (12, 347532637, 1392420289), (13, 1523061221, 1369392366),
-        |  (14, 430040917, 1109423241), (15, 1822934603, 410969165)) v(k, a, b)),
-        |sig AS (SELECT doc_id, k,
-        |  min((CAST(a AS BIGINT) * h + b) % 2147483647) AS v
-        |  FROM hs CROSS JOIN perms GROUP BY 1, 2),
-        |bk AS (SELECT doc_id, k // 4 AS band,
-        |  string_agg(CAST(v AS VARCHAR), ':' ORDER BY k) AS band_key
-        |  FROM sig GROUP BY 1, 2),
+        |${minhashSigSql(wrapSig = true)},
+        |$minhashBandsSql,
         |cand AS (SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
         |  FROM bk x JOIN bk y ON x.band = y.band
         |    AND x.band_key = y.band_key AND x.doc_id < y.doc_id),
@@ -1699,27 +1739,8 @@ object Dedup {
     // (bands, rows-per-band) config via a cross join; s* ppm literals
     // mirror the Scala side verbatim
     "ext_lsh_plan" ->
-      """WITH sh AS (
-        |  SELECT doc_id, unnest(CASE WHEN len(t) >= 3
-        |    THEN list_transform(range(1, len(t) - 1), i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])
-        |    ELSE [lower(text)] END) AS s
-        |  FROM (SELECT doc_id, text, string_split(lower(text), ' ') AS t FROM documents)),
-        |hs AS (SELECT doc_id,
-        |  list_reduce(list_transform(range(1, 16), i ->
-        |    CAST(strpos('0123456789abcdef', substr(md5(s), i, 1)) - 1 AS BIGINT)),
-        |    (a, b) -> a * 16 + b) % 2147483647 AS h
-        |  FROM sh),
-        |perms(k, a, b) AS (SELECT * FROM (VALUES
-        |  (0, 414281673, 1412461474), (1, 779796209, 608464424),
-        |  (2, 2057138611, 371426352), (3, 636929129, 1051709367),
-        |  (4, 148700537, 556582936), (5, 280017523, 1049994530),
-        |  (6, 1225570701, 1482240542), (7, 531732645, 453882425),
-        |  (8, 653258605, 199196378), (9, 2024089755, 1542891919),
-        |  (10, 219612255, 1948470694), (11, 2004763803, 1426709303),
-        |  (12, 347532637, 1392420289), (13, 1523061221, 1369392366),
-        |  (14, 430040917, 1109423241), (15, 1822934603, 410969165)) v(k, a, b)),
-        |sig AS (SELECT doc_id, k, min((CAST(a AS BIGINT) * h + b) % 2147483647) AS v
-        |  FROM hs CROSS JOIN perms GROUP BY 1, 2),
+      s"""WITH $minhashShinglesSql,
+        |${minhashSigSql()},
         |cfg(rpb) AS (SELECT * FROM (VALUES (1), (2), (4), (8)) v(rpb)),
         |bk AS (SELECT doc_id, rpb, k // rpb AS band,
         |  string_agg(CAST(v AS VARCHAR), ':' ORDER BY k) AS bkey
@@ -1746,34 +1767,9 @@ object Dedup {
         |LEFT JOIN fl ON fl.rpb = base.rows_per_band
         |ORDER BY rows_per_band""".stripMargin,
     // full signature/banding/candidate replay — possible because hash60 is
-    // md5-based (the perm constants are permConsts(16), hard-coded here)
+    // md5-based (minhashPermsSql = permConsts(16), pinned by DedupSpec)
     "ext_minhash_dedup" ->
-      """WITH sh AS (
-        |  SELECT doc_id, unnest(CASE WHEN len(t) >= 3
-        |    THEN list_transform(range(1, len(t) - 1), i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])
-        |    ELSE [lower(text)] END) AS s
-        |  FROM (SELECT doc_id, text, string_split(lower(text), ' ') AS t FROM documents)),
-        |hs AS (SELECT doc_id,
-        |  list_reduce(list_transform(range(1, 16), i ->
-        |    CAST(strpos('0123456789abcdef', substr(md5(s), i, 1)) - 1 AS BIGINT)),
-        |    (a, b) -> a * 16 + b) % 2147483647 AS h
-        |  FROM sh),
-        |perms(k, a, b) AS (SELECT * FROM (VALUES
-        |  (0, 414281673, 1412461474), (1, 779796209, 608464424),
-        |  (2, 2057138611, 371426352), (3, 636929129, 1051709367),
-        |  (4, 148700537, 556582936), (5, 280017523, 1049994530),
-        |  (6, 1225570701, 1482240542), (7, 531732645, 453882425),
-        |  (8, 653258605, 199196378), (9, 2024089755, 1542891919),
-        |  (10, 219612255, 1948470694), (11, 2004763803, 1426709303),
-        |  (12, 347532637, 1392420289), (13, 1523061221, 1369392366),
-        |  (14, 430040917, 1109423241), (15, 1822934603, 410969165)) v(k, a, b)),
-        |sig AS (SELECT doc_id, k, min((CAST(a AS BIGINT) * h + b) % 2147483647) AS v
-        |  FROM hs CROSS JOIN perms GROUP BY 1, 2),
-        |bk AS (SELECT doc_id, k // 4 AS band,
-        |  string_agg(CAST(v AS VARCHAR), ':' ORDER BY k) AS band_key
-        |  FROM sig GROUP BY 1, 2),
-        |pairs AS (SELECT DISTINCT x.doc_id AS da, y.doc_id AS db FROM bk x JOIN bk y
-        |  ON x.band = y.band AND x.band_key = y.band_key AND x.doc_id < y.doc_id),
+      s"""WITH $minhashPairsSql,
         |cand AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_candidates
         |  FROM (SELECT da AS doc_id FROM pairs UNION ALL SELECT db AS doc_id FROM pairs)
         |  GROUP BY 1),
@@ -1785,30 +1781,9 @@ object Dedup {
     // same banding replay as ext_minhash_dedup, joined new-side (doc_id
     // % 5 = 0) against old-side only
     "ext_incremental_dedup" ->
-      """WITH sh AS (
-        |  SELECT doc_id, unnest(CASE WHEN len(t) >= 3
-        |    THEN list_transform(range(1, len(t) - 1), i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])
-        |    ELSE [lower(text)] END) AS s
-        |  FROM (SELECT doc_id, text, string_split(lower(text), ' ') AS t FROM documents)),
-        |hs AS (SELECT doc_id,
-        |  list_reduce(list_transform(range(1, 16), i ->
-        |    CAST(strpos('0123456789abcdef', substr(md5(s), i, 1)) - 1 AS BIGINT)),
-        |    (a, b) -> a * 16 + b) % 2147483647 AS h
-        |  FROM sh),
-        |perms(k, a, b) AS (SELECT * FROM (VALUES
-        |  (0, 414281673, 1412461474), (1, 779796209, 608464424),
-        |  (2, 2057138611, 371426352), (3, 636929129, 1051709367),
-        |  (4, 148700537, 556582936), (5, 280017523, 1049994530),
-        |  (6, 1225570701, 1482240542), (7, 531732645, 453882425),
-        |  (8, 653258605, 199196378), (9, 2024089755, 1542891919),
-        |  (10, 219612255, 1948470694), (11, 2004763803, 1426709303),
-        |  (12, 347532637, 1392420289), (13, 1523061221, 1369392366),
-        |  (14, 430040917, 1109423241), (15, 1822934603, 410969165)) v(k, a, b)),
-        |sig AS (SELECT doc_id, k, min((CAST(a AS BIGINT) * h + b) % 2147483647) AS v
-        |  FROM hs CROSS JOIN perms GROUP BY 1, 2),
-        |bk AS (SELECT doc_id, k // 4 AS band,
-        |  string_agg(CAST(v AS VARCHAR), ':' ORDER BY k) AS band_key
-        |  FROM sig GROUP BY 1, 2),
+      s"""WITH $minhashShinglesSql,
+        |${minhashSigSql()},
+        |$minhashBandsSql,
         |m AS (SELECT x.doc_id, CAST(count(DISTINCT y.doc_id) AS BIGINT) AS n_old_matches
         |  FROM bk x JOIN bk y
         |    ON x.band = y.band AND x.band_key = y.band_key
@@ -1821,26 +1796,7 @@ object Dedup {
     // simhash_dedup's signature+banding replay, candidates scored with
     // exact bit_count(xor) and bucketed; cumulative over bucket order
     "ext_hamming_hist" ->
-      """WITH tok AS (
-        |  SELECT doc_id, unnest(list_distinct(string_split(lower(text), ' '))) AS t
-        |  FROM documents),
-        |hv AS (SELECT doc_id,
-        |  list_reduce(list_transform(range(1, 16), i ->
-        |    CAST(strpos('0123456789abcdef', substr(md5(t), i, 1)) - 1 AS BIGINT)),
-        |    (a, b) -> a * 16 + b) AS h
-        |  FROM tok),
-        |bits AS (
-        |  SELECT doc_id, b, sum(CASE WHEN (h >> b) & 1 = 1 THEN 1 ELSE -1 END) AS s
-        |  FROM hv CROSS JOIN range(0, 60) r(b) GROUP BY 1, 2),
-        |sim AS (
-        |  SELECT doc_id, CAST(sum(CASE WHEN s > 0 THEN (CAST(1 AS BIGINT) << b) ELSE 0 END) AS BIGINT) AS simhash
-        |  FROM bits GROUP BY 1),
-        |bands AS (
-        |  SELECT doc_id, b AS band, (simhash >> CAST(15 * b AS INTEGER)) & 32767 AS band_val
-        |  FROM sim CROSS JOIN range(0, 4) r(b)),
-        |partners AS (SELECT DISTINCT x.doc_id AS da, y.doc_id AS db
-        |  FROM bands x JOIN bands y ON x.band = y.band AND x.band_val = y.band_val
-        |    AND x.doc_id < y.doc_id),
+      s"""WITH $simhashPartnersSql,
         |dist AS (
         |  SELECT bit_count(xor(sa.simhash, sb.simhash)) AS dist
         |  FROM partners
@@ -1858,26 +1814,7 @@ object Dedup {
         |    AS cum_pairs
         |FROM g ORDER BY hamming_bucket""".stripMargin,
     "ext_simhash_dedup" ->
-      """WITH tok AS (
-        |  SELECT doc_id, unnest(list_distinct(string_split(lower(text), ' '))) AS t
-        |  FROM documents),
-        |hv AS (SELECT doc_id,
-        |  list_reduce(list_transform(range(1, 16), i ->
-        |    CAST(strpos('0123456789abcdef', substr(md5(t), i, 1)) - 1 AS BIGINT)),
-        |    (a, b) -> a * 16 + b) AS h
-        |  FROM tok),
-        |bits AS (
-        |  SELECT doc_id, b, sum(CASE WHEN (h >> b) & 1 = 1 THEN 1 ELSE -1 END) AS s
-        |  FROM hv CROSS JOIN range(0, 60) r(b) GROUP BY 1, 2),
-        |sim AS (
-        |  SELECT doc_id, CAST(sum(CASE WHEN s > 0 THEN (CAST(1 AS BIGINT) << b) ELSE 0 END) AS BIGINT) AS simhash
-        |  FROM bits GROUP BY 1),
-        |bands AS (
-        |  SELECT doc_id, b AS band, (simhash >> CAST(15 * b AS INTEGER)) & 32767 AS band_val
-        |  FROM sim CROSS JOIN range(0, 4) r(b)),
-        |partners AS (SELECT DISTINCT x.doc_id AS da, y.doc_id AS db
-        |  FROM bands x JOIN bands y ON x.band = y.band AND x.band_val = y.band_val
-        |    AND x.doc_id < y.doc_id),
+      s"""WITH $simhashPartnersSql,
         |cnt AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_band_partners
         |  FROM (SELECT da AS doc_id FROM partners UNION ALL SELECT db AS doc_id FROM partners)
         |  GROUP BY 1)

@@ -486,41 +486,8 @@ object Quality {
     // joined with the shared quality expression; election replayed with
     // the same (quality DESC, doc_id) tie-break
     "ext_keep_best" ->
-      s"""WITH RECURSIVE sh AS (
-         |  SELECT doc_id, unnest(CASE WHEN len(t) >= 3
-         |    THEN list_transform(range(1, len(t) - 1), i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])
-         |    ELSE [lower(text)] END) AS s
-         |  FROM (SELECT doc_id, text, string_split(lower(text), ' ') AS t FROM documents)),
-         |hs AS (SELECT doc_id,
-         |  list_reduce(list_transform(range(1, 16), i ->
-         |    CAST(strpos('0123456789abcdef', substr(md5(s), i, 1)) - 1 AS BIGINT)),
-         |    (a, b) -> a * 16 + b) % 2147483647 AS h
-         |  FROM sh),
-         |perms(k, a, b) AS (SELECT * FROM (VALUES
-         |  (0, 414281673, 1412461474), (1, 779796209, 608464424),
-         |  (2, 2057138611, 371426352), (3, 636929129, 1051709367),
-         |  (4, 148700537, 556582936), (5, 280017523, 1049994530),
-         |  (6, 1225570701, 1482240542), (7, 531732645, 453882425),
-         |  (8, 653258605, 199196378), (9, 2024089755, 1542891919),
-         |  (10, 219612255, 1948470694), (11, 2004763803, 1426709303),
-         |  (12, 347532637, 1392420289), (13, 1523061221, 1369392366),
-         |  (14, 430040917, 1109423241), (15, 1822934603, 410969165)) v(k, a, b)),
-         |sig AS (SELECT doc_id, k, min((CAST(a AS BIGINT) * h + b) % 2147483647) AS v
-         |  FROM hs CROSS JOIN perms GROUP BY 1, 2),
-         |bk AS (SELECT doc_id, k // 4 AS band,
-         |  string_agg(CAST(v AS VARCHAR), ':' ORDER BY k) AS band_key
-         |  FROM sig GROUP BY 1, 2),
-         |pairs AS (SELECT DISTINCT x.doc_id AS da, y.doc_id AS db FROM bk x JOIN bk y
-         |  ON x.band = y.band AND x.band_key = y.band_key AND x.doc_id < y.doc_id),
-         |e AS (SELECT da AS u, db AS v FROM pairs
-         |      UNION ALL SELECT db, da FROM pairs),
-         |reach(node, r) AS (
-         |  SELECT doc_id, doc_id FROM documents
-         |  UNION
-         |  SELECT reach.node, e.v FROM reach JOIN e ON reach.r = e.u),
-         |cl AS (SELECT node, min(r) AS cluster_id FROM reach GROUP BY node),
-         |sz AS (SELECT cluster_id, CAST(count(*) AS BIGINT) AS cluster_size
-         |       FROM cl GROUP BY 1),
+      s"""WITH RECURSIVE ${Dedup.minhashPairsSql},
+         |${Clustering.closureSql(docs = true, share = false)},
          |q AS (SELECT doc_id, ${TextAnalysis.qualityExprSql("text")} AS quality
          |      FROM documents),
          |r AS (SELECT cl.node AS doc_id, cl.cluster_id, q.quality,

@@ -500,6 +500,54 @@ object Similarity {
       .limit(10)
   }
 
+  /** Per-query top-5 of scored pairs `(qid, cid, <score>)`: the five
+    * highest `score` of each qid, exact ties to the smaller cid, as
+    * (qid, cid). */
+  private def perQueryTop5(pairs: DataFrame, score: String): DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("qid")).orderBy(col(score).desc, col("cid"))
+    pairs.withColumn("rn", row_number().over(w))
+      .filter(col("rn") <= 5).select(col("qid"), col("cid"))
+  }
+
+  /** Brute-force truth of every recall audit: the exact-cosine top-5 of
+    * each query `(qid, qe)` over `corpus` `(cid, ce)`, self excluded.
+    * The query batch is broadcast, so the exact side stays bounded by
+    * the batch at any corpus size. */
+  private def bruteTop5(queries: DataFrame, corpus: DataFrame): DataFrame =
+    perQueryTop5(broadcast(queries).join(corpus, col("qid") =!= col("cid"))
+      .select(col("qid"), col("cid"), cosine(col("qe"), col("ce")).as("cos")),
+      "cos")
+
+  /** Per-query recall@5 audit shared by [[extAnnRecall]],
+    * [[extAnnMultiprobe]], [[extIvfRecall]] and [[extPqRecall]]: the
+    * top-5 of the ANN side's scored candidate pairs `(qid, cid, <score>)`
+    * by `score` against [[bruteTop5]] of `queries` over `corpus` →
+    * (qid, n_bf, n_ann, n_overlap, recall_at_5). A query with truth but
+    * no candidates keeps its row with n_ann = 0. */
+  private[graft] def recallAt5(queries: DataFrame, corpus: DataFrame,
+                               candidates: DataFrame,
+                               score: String = "cos"): DataFrame = {
+    graft.expressions.FloatVecDot.register(queries.sparkSession)
+    bruteTop5(queries, corpus).withColumn("b", lit(1))
+      .join(perQueryTop5(candidates, score).withColumn("a", lit(1)),
+            Seq("qid", "cid"), "full_outer")
+      .groupBy(col("qid"))
+      .agg(sum(coalesce(col("b"), lit(0))).as("n_bf"),
+           sum(coalesce(col("a"), lit(0))).as("n_ann"),
+           sum(coalesce(col("b"), lit(0)) * coalesce(col("a"), lit(0)))
+             .as("n_overlap"))
+      .select(col("qid"), col("n_bf"), col("n_ann"), col("n_overlap"),
+              // recall = overlap / |ground truth|: dividing by the
+              // literal k understates recall whenever the corpus (or a
+              // candidate set) yields fewer than k true neighbors —
+              // n_bf is the real denominator, zero-guarded
+              when(col("n_bf") > 0,
+                   col("n_overlap").cast("double") /
+                     col("n_bf").cast("double")).as("recall_at_5"))
+      .orderBy(col("qid"))
+  }
+
   /** E20c — PQ rank-preservation audit: recall@5 of the top-5 BY
     * COMPRESSED-DOMAIN ADC SCORE against the exact-cosine top-5 — the
     * number that says how much ranking quality the 4-byte codes give up
@@ -510,33 +558,12 @@ object Similarity {
     * [[extAnnRecall]]; the ADC side never touches a raw candidate
     * vector. */
   val extPqRecall: Q = (s, d) => {
-    graft.expressions.FloatVecDot.register(s)
-    def top5(pairs: DataFrame, score: String): DataFrame = {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("qid")).orderBy(col(score).desc, col("cid"))
-      pairs.withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 5).select(col("qid"), col("cid"))
-    }
     val e = Tables.embeddings(s, d)
-    val q = e.select(col("vec_id").as("qid"), col("embedding").as("qe"))
-      .filter(col("qid") < 10)
-    val c = e.select(col("vec_id").as("cid"), col("embedding").as("ce"))
-    val bf = top5(broadcast(q).join(c, col("qid") =!= col("cid"))
-      .select(col("qid"), col("cid"), cosine(col("qe"), col("ce")).as("cos")),
-      "cos")
-    val ann = top5(adcScores(s, d), "adc_score")
-    bf.withColumn("b", lit(1))
-      .join(ann.withColumn("a", lit(1)), Seq("qid", "cid"), "full_outer")
-      .groupBy(col("qid"))
-      .agg(sum(coalesce(col("b"), lit(0))).as("n_bf"),
-           sum(coalesce(col("a"), lit(0))).as("n_ann"),
-           sum(coalesce(col("b"), lit(0)) * coalesce(col("a"), lit(0)))
-             .as("n_overlap"))
-      .select(col("qid"), col("n_bf"), col("n_ann"), col("n_overlap"),
-              when(col("n_bf") > 0,
-                   col("n_overlap").cast("double") /
-                     col("n_bf").cast("double")).as("recall_at_5"))
-      .orderBy(col("qid"))
+    recallAt5(
+      e.select(col("vec_id").as("qid"), col("embedding").as("qe"))
+        .filter(col("qid") < 10),
+      e.select(col("vec_id").as("cid"), col("embedding").as("ce")),
+      adcScores(s, d), "adc_score")
   }
 
   /** E3e — ANN recall audit: recall@5 of the LSH-bucketed search
@@ -557,33 +584,9 @@ object Similarity {
                      col("sig").as("qsig")).filter(col("qid") < 10)
     val c = e.select(col("vec_id").as("cid"), col("embedding").as("ce"),
                      col("sig").as("csig"))
-    def top5(pairs: DataFrame): DataFrame = {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("qid")).orderBy(col("cos").desc, col("cid"))
-      pairs.withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 5).select(col("qid"), col("cid"))
-    }
-    val bf = top5(broadcast(q).join(c, col("qid") =!= col("cid"))
-      .select(col("qid"), col("cid"), cosine(col("qe"), col("ce")).as("cos")))
-    val ann = top5(broadcast(q)
+    recallAt5(q, c, broadcast(q)
       .join(c, col("qsig") === col("csig") && col("qid") =!= col("cid"))
       .select(col("qid"), col("cid"), cosine(col("qe"), col("ce")).as("cos")))
-    bf.withColumn("b", lit(1))
-      .join(ann.withColumn("a", lit(1)), Seq("qid", "cid"), "full_outer")
-      .groupBy(col("qid"))
-      .agg(sum(coalesce(col("b"), lit(0))).as("n_bf"),
-           sum(coalesce(col("a"), lit(0))).as("n_ann"),
-           sum(coalesce(col("b"), lit(0)) * coalesce(col("a"), lit(0)))
-             .as("n_overlap"))
-      .select(col("qid"), col("n_bf"), col("n_ann"), col("n_overlap"),
-              // recall = overlap / |ground truth|: dividing by the
-              // literal k understates recall whenever the corpus (or a
-              // candidate set) yields fewer than k true neighbors —
-              // n_bf is the real denominator, zero-guarded
-              when(col("n_bf") > 0,
-                   col("n_overlap").cast("double") /
-                     col("n_bf").cast("double")).as("recall_at_5"))
-      .orderBy(col("qid"))
   }
 
   /** E3f — Hamming-1 multiprobe LSH, measured the same way: each query
@@ -605,33 +608,9 @@ object Similarity {
     val probes = q.select(col("qid"), col("qe"),
       explode(array((Seq(0) ++ (0 until 6).map(1 << _)).map(m =>
         col("qsig").bitwiseXOR(lit(m))): _*)).as("probe"))
-    def top5(pairs: DataFrame): DataFrame = {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("qid")).orderBy(col("cos").desc, col("cid"))
-      pairs.withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 5).select(col("qid"), col("cid"))
-    }
-    val bf = top5(broadcast(q).join(c, col("qid") =!= col("cid"))
-      .select(col("qid"), col("cid"), cosine(col("qe"), col("ce")).as("cos")))
-    val ann = top5(broadcast(probes)
+    recallAt5(q, c, broadcast(probes)
       .join(c, col("probe") === col("csig") && col("qid") =!= col("cid"))
       .select(col("qid"), col("cid"), cosine(col("qe"), col("ce")).as("cos")))
-    bf.withColumn("b", lit(1))
-      .join(ann.withColumn("a", lit(1)), Seq("qid", "cid"), "full_outer")
-      .groupBy(col("qid"))
-      .agg(sum(coalesce(col("b"), lit(0))).as("n_bf"),
-           sum(coalesce(col("a"), lit(0))).as("n_ann"),
-           sum(coalesce(col("b"), lit(0)) * coalesce(col("a"), lit(0)))
-             .as("n_overlap"))
-      .select(col("qid"), col("n_bf"), col("n_ann"), col("n_overlap"),
-              // recall = overlap / |ground truth|: dividing by the
-              // literal k understates recall whenever the corpus (or a
-              // candidate set) yields fewer than k true neighbors —
-              // n_bf is the real denominator, zero-guarded
-              when(col("n_bf") > 0,
-                   col("n_overlap").cast("double") /
-                     col("n_bf").cast("double")).as("recall_at_5"))
-      .orderBy(col("qid"))
   }
 
   /** E3g — IVF nprobe=2 recall, measured identically: queries probe
@@ -653,35 +632,10 @@ object Similarity {
     val qprobe = ranked.filter(col("vec_id") < 10 && col("rn") <= 2)
       .select(col("vec_id").as("qid"), col("embedding").as("qe"),
               col("seed_id").as("plist"))
-    def top5(pairs: DataFrame): DataFrame = {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("qid")).orderBy(col("cos").desc, col("cid"))
-      pairs.withColumn("trn", row_number().over(w))
-        .filter(col("trn") <= 5).select(col("qid"), col("cid"))
-    }
-    val bf = top5(broadcast(q).join(
-        e.select(col("vec_id").as("cid"), col("embedding").as("ce")),
-        col("qid") =!= col("cid"))
-      .select(col("qid"), col("cid"), cosine(col("qe"), col("ce")).as("cos")))
-    val ann = top5(broadcast(qprobe)
-      .join(c, col("plist") === col("list_id") && col("qid") =!= col("cid"))
-      .select(col("qid"), col("cid"), cosine(col("qe"), col("ce")).as("cos")))
-    bf.withColumn("b", lit(1))
-      .join(ann.withColumn("a", lit(1)), Seq("qid", "cid"), "full_outer")
-      .groupBy(col("qid"))
-      .agg(sum(coalesce(col("b"), lit(0))).as("n_bf"),
-           sum(coalesce(col("a"), lit(0))).as("n_ann"),
-           sum(coalesce(col("b"), lit(0)) * coalesce(col("a"), lit(0)))
-             .as("n_overlap"))
-      .select(col("qid"), col("n_bf"), col("n_ann"), col("n_overlap"),
-              // recall = overlap / |ground truth|: dividing by the
-              // literal k understates recall whenever the corpus (or a
-              // candidate set) yields fewer than k true neighbors —
-              // n_bf is the real denominator, zero-guarded
-              when(col("n_bf") > 0,
-                   col("n_overlap").cast("double") /
-                     col("n_bf").cast("double")).as("recall_at_5"))
-      .orderBy(col("qid"))
+    recallAt5(q, e.select(col("vec_id").as("cid"), col("embedding").as("ce")),
+      broadcast(qprobe)
+        .join(c, col("plist") === col("list_id") && col("qid") =!= col("cid"))
+        .select(col("qid"), col("cid"), cosine(col("qe"), col("ce")).as("cos")))
   }
 
   /** E63 — IVF probe-count TUNING CURVE: recall@5 and candidate cost
@@ -726,14 +680,8 @@ object Similarity {
       .orderBy(col("cos").desc, col("cid"))
     val ann = perConfig.withColumn("trn", row_number().over(wTop))
       .filter(col("trn") <= 5).select(col("probes"), col("qid"), col("cid"))
-    val wBf = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("qid")).orderBy(col("cos").desc, col("cid"))
-    val bf = broadcast(q).join(
-        e.select(col("vec_id").as("cid"), col("embedding").as("ce")),
-        col("qid") =!= col("cid"))
-      .select(col("qid"), col("cid"), cosine(col("qe"), col("ce")).as("cos"))
-      .withColumn("trn", row_number().over(wBf))
-      .filter(col("trn") <= 5).select(col("qid"), col("cid"))
+    val bf = bruteTop5(q,
+        e.select(col("vec_id").as("cid"), col("embedding").as("ce")))
       .crossJoin(broadcast((1 to 4).toDF("probes").select(col("probes")
         .cast("long").as("probes"))))
     val overlap = bf.withColumn("b", lit(1))
@@ -1122,6 +1070,99 @@ object Similarity {
       s"(CASE WHEN ${dotSql("embedding", planeSqlLit(p))} >= 0.0 THEN ${1 << i} ELSE 0 END)"
     }.mkString(" + ")
 
+  /** PQ encode CTEs: `sub(vec_id, m, sv)` (M=4 sub-slices of 16 dims),
+    * `<seeds>(sm, seed_id, se)` (the vec_id < 16 sub-codebooks),
+    * `<scored>(vec_id, m, seed_id, c)` (sub-cosine to every seed of the
+    * subspace), `best` (argmax rank, ties to the smaller seed) and, with
+    * `codes`, `codes(vec_id, m, seed_id)` — the [[pqCodes]] recipe.
+    * Shared by ext_pq_encode, ext_pq_adc, ext_pq_recall and
+    * ext_ivfpq_adc; the CTE names are parameters because those entries
+    * were published with different ones. */
+  private def pqCodesSql(seeds: String = "seeds", scored: String = "scored0",
+                         codes: Boolean = true): String = {
+    val codesCte =
+      if (codes) ",\ncodes AS (SELECT vec_id, m, seed_id FROM best WHERE rn = 1)"
+      else ""
+    s"""sub AS (
+       |  SELECT vec_id, CAST(r.m AS INTEGER) AS m,
+       |    embedding[CAST(r.m * 16 + 1 AS INTEGER):CAST((r.m + 1) * 16 AS INTEGER)] AS sv
+       |  FROM embeddings CROSS JOIN range(0, 4) r(m)),
+       |$seeds AS (
+       |  SELECT m AS sm, vec_id AS seed_id, sv AS se FROM sub WHERE vec_id < 16),
+       |$scored AS (
+       |  SELECT vec_id, m, seed_id, ${cosSql("sv", "se")} AS c
+       |  FROM sub JOIN $seeds ON m = sm),
+       |best AS (
+       |  SELECT vec_id, m, seed_id,
+       |    row_number() OVER (PARTITION BY vec_id, m ORDER BY c DESC, seed_id) AS rn
+       |  FROM $scored)$codesCte""".stripMargin
+  }
+
+  /** [[pqCodesSql]] plus the ADC scoring CTEs `q` (query sub-slices),
+    * `sc` (per-subspace inner products with each candidate's code
+    * centroid) and `g(qid, cid, adc_score)` — the [[adcScores]] recipe,
+    * sums in fixed m-order. Shared by ext_pq_adc and ext_pq_recall. */
+  private val pqAdcSql: String =
+    s"""${pqCodesSql()},
+       |q AS (SELECT vec_id AS qid, m AS qm, sv AS qv FROM sub WHERE vec_id < 10),
+       |sc AS (
+       |  SELECT q.qid, c.vec_id AS cid, c.m, ${dotSql("qv", "se")} AS p,
+       |    ${dotSql("se", "se")} AS nn
+       |  FROM codes c
+       |  JOIN seeds s ON c.m = s.sm AND c.seed_id = s.seed_id
+       |  JOIN q ON c.m = q.qm
+       |  WHERE q.qid <> c.vec_id),
+       |g AS (
+       |  SELECT qid, cid,
+       |    round((max(CASE WHEN m = 0 THEN p END) + max(CASE WHEN m = 1 THEN p END)
+       |         + max(CASE WHEN m = 2 THEN p END) + max(CASE WHEN m = 3 THEN p END))
+       |      / sqrt(max(CASE WHEN m = 0 THEN nn END) + max(CASE WHEN m = 1 THEN nn END)
+       |           + max(CASE WHEN m = 2 THEN nn END) + max(CASE WHEN m = 3 THEN nn END)),
+       |      6) AS adc_score
+       |  FROM sc GROUP BY 1, 2)""".stripMargin
+
+  /** Body of a per-query exact-cosine top-5 CTE over `from`, a join
+    * yielding (qid, qe, cid, ce): the [[bruteTop5]] ranking, ties to
+    * the smaller cid. `rn` names the rank column. */
+  private def cosTop5Sql(from: String, rn: String = "rn"): String =
+    s"""  SELECT qid, cid FROM (
+       |    SELECT qid, cid, row_number() OVER (PARTITION BY qid
+       |      ORDER BY ${cosSql("qe", "ce")} DESC, cid) AS $rn
+       |    FROM $from)
+       |  WHERE $rn <= 5)""".stripMargin
+
+  /** The recall@5 comparison of a `bf(qid, cid)` truth CTE with an
+    * `ann(qid, cid)` CTE: CTE `j` and the final per-query SELECT of
+    * (qid, n_bf, n_ann, n_overlap, recall_at_5), recall = overlap /
+    * n_bf, NULL when n_bf = 0 — the [[recallAt5]] recipe. Shared by
+    * ext_ann_recall, ext_ann_multiprobe, ext_ivf_recall and
+    * ext_pq_recall. */
+  private val recallJoinSql: String =
+    """j AS (
+      |  SELECT qid, coalesce(bf2.f, 0) AS b, coalesce(an2.f, 0) AS a
+      |  FROM (SELECT qid, cid, 1 AS f FROM bf) bf2
+      |  FULL OUTER JOIN (SELECT qid, cid, 1 AS f FROM ann) an2
+      |    USING (qid, cid))
+      |SELECT qid, CAST(sum(b) AS BIGINT) AS n_bf,
+      |  CAST(sum(a) AS BIGINT) AS n_ann,
+      |  CAST(sum(b * a) AS BIGINT) AS n_overlap,
+      |  CASE WHEN sum(b) > 0 THEN
+      |    CAST(sum(b * a) AS DOUBLE) / CAST(sum(b) AS DOUBLE)
+      |  END AS recall_at_5
+      |FROM j GROUP BY 1 ORDER BY 1""".stripMargin
+
+  /** The whole recall@5 tail when both sides rank by exact cosine:
+    * `bf` = [[cosTop5Sql]] over `bfFrom`, `ann` = [[cosTop5Sql]] over
+    * the candidate join `annFrom`, then [[recallJoinSql]]. Shared by
+    * ext_ann_recall, ext_ann_multiprobe and ext_ivf_recall. */
+  private def recallAt5Sql(bfFrom: String, annFrom: String,
+                           rn: String = "rn"): String =
+    s"""bf AS (
+       |${cosTop5Sql(bfFrom, rn)},
+       |ann AS (
+       |${cosTop5Sql(annFrom, rn)},
+       |$recallJoinSql""".stripMargin
+
   val oracles: Map[String, String] = Map(
     // same two-window ranking over the same exact cosines; each DCG term
     // rounded to 12 decimals and decimal-summed so the reduction is
@@ -1183,37 +1224,10 @@ object Similarity {
          |  CAST(max(sqn) AS DOUBLE) AS max_sq_norm,
          |  CAST(SUM(sqn) AS DOUBLE) / count(*) AS avg_sq_norm
          |FROM b""".stripMargin,
-    "ext_pq_recall" ->
-      s"""WITH sub AS (
-         |  SELECT vec_id, CAST(r.m AS INTEGER) AS m,
-         |    embedding[CAST(r.m * 16 + 1 AS INTEGER):CAST((r.m + 1) * 16 AS INTEGER)] AS sv
-         |  FROM embeddings CROSS JOIN range(0, 4) r(m)),
-         |seeds AS (
-         |  SELECT m AS sm, vec_id AS seed_id, sv AS se FROM sub WHERE vec_id < 16),
-         |scored0 AS (
-         |  SELECT vec_id, m, seed_id, ${cosSql("sv", "se")} AS c
-         |  FROM sub JOIN seeds ON m = sm),
-         |best AS (
-         |  SELECT vec_id, m, seed_id,
-         |    row_number() OVER (PARTITION BY vec_id, m ORDER BY c DESC, seed_id) AS rn
-         |  FROM scored0),
-         |codes AS (SELECT vec_id, m, seed_id FROM best WHERE rn = 1),
-         |q AS (SELECT vec_id AS qid, m AS qm, sv AS qv FROM sub WHERE vec_id < 10),
-         |sc AS (
-         |  SELECT q.qid, c.vec_id AS cid, c.m, ${dotSql("qv", "se")} AS p,
-         |    ${dotSql("se", "se")} AS nn
-         |  FROM codes c
-         |  JOIN seeds s ON c.m = s.sm AND c.seed_id = s.seed_id
-         |  JOIN q ON c.m = q.qm
-         |  WHERE q.qid <> c.vec_id),
-         |g AS (
-         |  SELECT qid, cid,
-         |    round((max(CASE WHEN m = 0 THEN p END) + max(CASE WHEN m = 1 THEN p END)
-         |         + max(CASE WHEN m = 2 THEN p END) + max(CASE WHEN m = 3 THEN p END))
-         |      / sqrt(max(CASE WHEN m = 0 THEN nn END) + max(CASE WHEN m = 1 THEN nn END)
-         |           + max(CASE WHEN m = 2 THEN nn END) + max(CASE WHEN m = 3 THEN nn END)),
-         |      6) AS adc_score
-         |  FROM sc GROUP BY 1, 2),
+    "ext_pq_recall" -> {
+      val bfFrom = """bq JOIN (SELECT vec_id AS cid, embedding AS ce
+                     |                  FROM embeddings) c ON qid <> cid""".stripMargin
+      s"""WITH $pqAdcSql,
          |ann AS (
          |  SELECT qid, cid FROM (
          |    SELECT qid, cid, row_number() OVER (PARTITION BY qid
@@ -1222,24 +1236,9 @@ object Similarity {
          |bq AS (SELECT vec_id AS qid, embedding AS qe FROM embeddings
          |       WHERE vec_id < 10),
          |bf AS (
-         |  SELECT qid, cid FROM (
-         |    SELECT qid, cid, row_number() OVER (PARTITION BY qid
-         |      ORDER BY ${cosSql("qe", "ce")} DESC, cid) AS rn
-         |    FROM bq JOIN (SELECT vec_id AS cid, embedding AS ce
-         |                  FROM embeddings) c ON qid <> cid)
-         |  WHERE rn <= 5),
-         |j AS (
-         |  SELECT qid, coalesce(bf2.f, 0) AS b, coalesce(an2.f, 0) AS a
-         |  FROM (SELECT qid, cid, 1 AS f FROM bf) bf2
-         |  FULL OUTER JOIN (SELECT qid, cid, 1 AS f FROM ann) an2
-         |    USING (qid, cid))
-         |SELECT qid, CAST(sum(b) AS BIGINT) AS n_bf,
-         |  CAST(sum(a) AS BIGINT) AS n_ann,
-         |  CAST(sum(b * a) AS BIGINT) AS n_overlap,
-         |  CASE WHEN sum(b) > 0 THEN
-         |    CAST(sum(b * a) AS DOUBLE) / CAST(sum(b) AS DOUBLE)
-         |  END AS recall_at_5
-         |FROM j GROUP BY 1 ORDER BY 1""".stripMargin,
+         |${cosTop5Sql(bfFrom)},
+         |$recallJoinSql""".stripMargin
+    },
     // integer micropoints (1e6 div (60+rank)) keep the fused score exact
     "ext_hybrid_rank" ->
       s"""WITH s10 AS (
@@ -1266,30 +1265,7 @@ object Similarity {
          |q AS (SELECT vec_id AS qid, embedding AS qe, sig AS qsig
          |      FROM base WHERE vec_id < 10),
          |c AS (SELECT vec_id AS cid, embedding AS ce, sig AS csig FROM base),
-         |bf AS (
-         |  SELECT qid, cid FROM (
-         |    SELECT qid, cid, row_number() OVER (PARTITION BY qid
-         |      ORDER BY ${cosSql("qe", "ce")} DESC, cid) AS rn
-         |    FROM q JOIN c ON qid <> cid)
-         |  WHERE rn <= 5),
-         |ann AS (
-         |  SELECT qid, cid FROM (
-         |    SELECT qid, cid, row_number() OVER (PARTITION BY qid
-         |      ORDER BY ${cosSql("qe", "ce")} DESC, cid) AS rn
-         |    FROM q JOIN c ON qsig = csig AND qid <> cid)
-         |  WHERE rn <= 5),
-         |j AS (
-         |  SELECT qid, coalesce(bf2.f, 0) AS b, coalesce(an2.f, 0) AS a
-         |  FROM (SELECT qid, cid, 1 AS f FROM bf) bf2
-         |  FULL OUTER JOIN (SELECT qid, cid, 1 AS f FROM ann) an2
-         |    USING (qid, cid))
-         |SELECT qid, CAST(sum(b) AS BIGINT) AS n_bf,
-         |  CAST(sum(a) AS BIGINT) AS n_ann,
-         |  CAST(sum(b * a) AS BIGINT) AS n_overlap,
-         |  CASE WHEN sum(b) > 0 THEN
-         |    CAST(sum(b * a) AS DOUBLE) / CAST(sum(b) AS DOUBLE)
-         |  END AS recall_at_5
-         |FROM j GROUP BY 1 ORDER BY 1""".stripMargin,
+         |${recallAt5Sql("q JOIN c ON qid <> cid", "q JOIN c ON qsig = csig AND qid <> cid")}""".stripMargin,
     "ext_ann_multiprobe" ->
       s"""WITH base AS (
          |  SELECT vec_id, embedding, $sigSql AS sig FROM embeddings),
@@ -1301,44 +1277,9 @@ object Similarity {
          |    xor(qsig, 4), xor(qsig, 8), xor(qsig, 16), xor(qsig, 32)])
          |    AS probe
          |  FROM q),
-         |bf AS (
-         |  SELECT qid, cid FROM (
-         |    SELECT qid, cid, row_number() OVER (PARTITION BY qid
-         |      ORDER BY ${cosSql("qe", "ce")} DESC, cid) AS rn
-         |    FROM q JOIN c ON qid <> cid)
-         |  WHERE rn <= 5),
-         |ann AS (
-         |  SELECT qid, cid FROM (
-         |    SELECT qid, cid, row_number() OVER (PARTITION BY qid
-         |      ORDER BY ${cosSql("qe", "ce")} DESC, cid) AS rn
-         |    FROM pr JOIN c ON probe = csig AND qid <> cid)
-         |  WHERE rn <= 5),
-         |j AS (
-         |  SELECT qid, coalesce(bf2.f, 0) AS b, coalesce(an2.f, 0) AS a
-         |  FROM (SELECT qid, cid, 1 AS f FROM bf) bf2
-         |  FULL OUTER JOIN (SELECT qid, cid, 1 AS f FROM ann) an2
-         |    USING (qid, cid))
-         |SELECT qid, CAST(sum(b) AS BIGINT) AS n_bf,
-         |  CAST(sum(a) AS BIGINT) AS n_ann,
-         |  CAST(sum(b * a) AS BIGINT) AS n_overlap,
-         |  CASE WHEN sum(b) > 0 THEN
-         |    CAST(sum(b * a) AS DOUBLE) / CAST(sum(b) AS DOUBLE)
-         |  END AS recall_at_5
-         |FROM j GROUP BY 1 ORDER BY 1""".stripMargin,
+         |${recallAt5Sql("q JOIN c ON qid <> cid", "pr JOIN c ON probe = csig AND qid <> cid")}""".stripMargin,
     "ext_pq_encode" ->
-      s"""WITH sub AS (
-         |  SELECT vec_id, CAST(r.m AS INTEGER) AS m,
-         |    embedding[CAST(r.m * 16 + 1 AS INTEGER):CAST((r.m + 1) * 16 AS INTEGER)] AS sv
-         |  FROM embeddings CROSS JOIN range(0, 4) r(m)),
-         |seeds AS (
-         |  SELECT m AS sm, vec_id AS seed_id, sv AS se FROM sub WHERE vec_id < 16),
-         |scored AS (
-         |  SELECT vec_id, m, seed_id, ${cosSql("sv", "se")} AS c
-         |  FROM sub JOIN seeds ON m = sm),
-         |best AS (
-         |  SELECT vec_id, m, seed_id,
-         |    row_number() OVER (PARTITION BY vec_id, m ORDER BY c DESC, seed_id) AS rn
-         |  FROM scored)
+      s"""WITH ${pqCodesSql(scored = "scored", codes = false)}
          |SELECT vec_id,
          |  max(CASE WHEN m = 0 THEN seed_id END) AS c0,
          |  max(CASE WHEN m = 1 THEN seed_id END) AS c1,
@@ -1346,36 +1287,7 @@ object Similarity {
          |  max(CASE WHEN m = 3 THEN seed_id END) AS c3
          |FROM best WHERE rn = 1 GROUP BY 1 ORDER BY 1""".stripMargin,
     "ext_pq_adc" ->
-      s"""WITH sub AS (
-         |  SELECT vec_id, CAST(r.m AS INTEGER) AS m,
-         |    embedding[CAST(r.m * 16 + 1 AS INTEGER):CAST((r.m + 1) * 16 AS INTEGER)] AS sv
-         |  FROM embeddings CROSS JOIN range(0, 4) r(m)),
-         |seeds AS (
-         |  SELECT m AS sm, vec_id AS seed_id, sv AS se FROM sub WHERE vec_id < 16),
-         |scored0 AS (
-         |  SELECT vec_id, m, seed_id, ${cosSql("sv", "se")} AS c
-         |  FROM sub JOIN seeds ON m = sm),
-         |best AS (
-         |  SELECT vec_id, m, seed_id,
-         |    row_number() OVER (PARTITION BY vec_id, m ORDER BY c DESC, seed_id) AS rn
-         |  FROM scored0),
-         |codes AS (SELECT vec_id, m, seed_id FROM best WHERE rn = 1),
-         |q AS (SELECT vec_id AS qid, m AS qm, sv AS qv FROM sub WHERE vec_id < 10),
-         |sc AS (
-         |  SELECT q.qid, c.vec_id AS cid, c.m, ${dotSql("qv", "se")} AS p,
-         |    ${dotSql("se", "se")} AS nn
-         |  FROM codes c
-         |  JOIN seeds s ON c.m = s.sm AND c.seed_id = s.seed_id
-         |  JOIN q ON c.m = q.qm
-         |  WHERE q.qid <> c.vec_id),
-         |g AS (
-         |  SELECT qid, cid,
-         |    round((max(CASE WHEN m = 0 THEN p END) + max(CASE WHEN m = 1 THEN p END)
-         |         + max(CASE WHEN m = 2 THEN p END) + max(CASE WHEN m = 3 THEN p END))
-         |      / sqrt(max(CASE WHEN m = 0 THEN nn END) + max(CASE WHEN m = 1 THEN nn END)
-         |           + max(CASE WHEN m = 2 THEN nn END) + max(CASE WHEN m = 3 THEN nn END)),
-         |      6) AS adc_score
-         |  FROM sc GROUP BY 1, 2),
+      s"""WITH $pqAdcSql,
          |r AS (
          |  SELECT qid, cid, adc_score,
          |    CAST(row_number() OVER (PARTITION BY qid
@@ -1399,20 +1311,7 @@ object Similarity {
          |  SELECT vec_id AS qid, seed_id AS plist,
          |    CAST(rn AS INTEGER) AS probe_rank
          |  FROM ranked WHERE vec_id < 10 AND rn <= 2),
-         |sub AS (
-         |  SELECT vec_id, CAST(r.m AS INTEGER) AS m,
-         |    embedding[CAST(r.m * 16 + 1 AS INTEGER):CAST((r.m + 1) * 16 AS INTEGER)] AS sv
-         |  FROM embeddings CROSS JOIN range(0, 4) r(m)),
-         |pseeds AS (
-         |  SELECT m AS sm, vec_id AS seed_id, sv AS se FROM sub WHERE vec_id < 16),
-         |scored0 AS (
-         |  SELECT vec_id, m, seed_id, ${cosSql("sv", "se")} AS c
-         |  FROM sub JOIN pseeds ON m = sm),
-         |best AS (
-         |  SELECT vec_id, m, seed_id,
-         |    row_number() OVER (PARTITION BY vec_id, m ORDER BY c DESC, seed_id) AS rn
-         |  FROM scored0),
-         |codes AS (SELECT vec_id, m, seed_id FROM best WHERE rn = 1),
+         |${pqCodesSql(seeds = "pseeds")},
          |qsub AS (SELECT vec_id AS sqid, m AS qm, sv AS qv FROM sub WHERE vec_id < 10),
          |sc AS (
          |  SELECT p.qid, c.vec_id AS cid, h.list_id, p.probe_rank, c.m,
@@ -1548,7 +1447,9 @@ object Similarity {
          |FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
          |WHERE ${cosSql("a.embedding", "b.embedding")} >= 0.35
          |ORDER BY a, b""".stripMargin,
-    "ext_ivf_recall" ->
+    "ext_ivf_recall" -> {
+      val bfFrom = """q JOIN (SELECT vec_id AS cid, embedding AS ce
+                     |                 FROM embeddings) ca ON qid <> cid""".stripMargin
       s"""WITH ranked AS (
          |  SELECT e.vec_id, e.embedding, s.vec_id AS seed_id,
          |    row_number() OVER (PARTITION BY e.vec_id ORDER BY
@@ -1561,31 +1462,8 @@ object Similarity {
          |      WHERE vec_id < 10),
          |qp AS (SELECT vec_id AS qid, embedding AS qe, seed_id AS plist
          |       FROM ranked WHERE vec_id < 10 AND rn <= 2),
-         |bf AS (
-         |  SELECT qid, cid FROM (
-         |    SELECT qid, cid, row_number() OVER (PARTITION BY qid
-         |      ORDER BY ${cosSql("qe", "ce")} DESC, cid) AS trn
-         |    FROM q JOIN (SELECT vec_id AS cid, embedding AS ce
-         |                 FROM embeddings) ca ON qid <> cid)
-         |  WHERE trn <= 5),
-         |ann AS (
-         |  SELECT qid, cid FROM (
-         |    SELECT qid, cid, row_number() OVER (PARTITION BY qid
-         |      ORDER BY ${cosSql("qe", "ce")} DESC, cid) AS trn
-         |    FROM qp JOIN c ON plist = list_id AND qid <> cid)
-         |  WHERE trn <= 5),
-         |j AS (
-         |  SELECT qid, coalesce(bf2.f, 0) AS b, coalesce(an2.f, 0) AS a
-         |  FROM (SELECT qid, cid, 1 AS f FROM bf) bf2
-         |  FULL OUTER JOIN (SELECT qid, cid, 1 AS f FROM ann) an2
-         |    USING (qid, cid))
-         |SELECT qid, CAST(sum(b) AS BIGINT) AS n_bf,
-         |  CAST(sum(a) AS BIGINT) AS n_ann,
-         |  CAST(sum(b * a) AS BIGINT) AS n_overlap,
-         |  CASE WHEN sum(b) > 0 THEN
-         |    CAST(sum(b * a) AS DOUBLE) / CAST(sum(b) AS DOUBLE)
-         |  END AS recall_at_5
-         |FROM j GROUP BY 1 ORDER BY 1""".stripMargin,
+         |${recallAt5Sql(bfFrom, "qp JOIN c ON plist = list_id AND qid <> cid", rn = "trn")}""".stripMargin
+    },
     // ann_ivf's assignment replay, probed at rn<=4, one candidate join
     // fanned to the four configs by the probe_rank <= probes filter
     "ext_probe_curve" ->

@@ -51,7 +51,7 @@ class ClusteringSpec extends SparkSpec {
       (11L, "yet another unrelated string of tokens for isolation"))
       .map { case (id, t) => (id, t, "en", "s", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val dir = "/root/repo/target/scratch/ccspec"
+    val dir = SparkSpec.scratch("ccspec")
     df.coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val rows = Clustering.extDedupClusters(spark, dir).collect()
     // percolation canary column: largest cluster 3 of 5 nodes, on every row
@@ -80,7 +80,7 @@ class ClusteringSpec extends SparkSpec {
       (7L, Array(1.1f, -0.02f, 0.12f)),
       (9L, Array(0.0f, 1.0f, 0.0f)))
       .toDF("vec_id", "embedding")
-    val dir = "/root/repo/target/scratch/embccspec"
+    val dir = SparkSpec.scratch("embccspec")
     df.coalesce(1).write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     val rows = graft.ops.Clustering.extEmbedClusters(spark, dir).collect()
     // canary: 3-vector family of 4 nodes => share 0.75
@@ -112,7 +112,7 @@ class ClusteringSpec extends SparkSpec {
       (5L, ang(0.90)), (6L, ang(0.95)), (7L, ang(1.00))) ++ // family B
       Seq((10L, Array(0f, 0f, 1f)), (11L, Array(0f, 0f, 1f)),
           (12L, Array(0f, 0f, 1f)))).toDF("vec_id", "embedding")
-    val dir = "/root/repo/target/scratch/knnmspec"
+    val dir = SparkSpec.scratch("knnmspec")
     df.coalesce(1).write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     val rows = Clustering.extKnnMutualClusters(spark, dir).collect()
     val cl = rows.map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -155,7 +155,7 @@ class ClusteringSpec extends SparkSpec {
       (2L, ang(1.00)), (7L, ang(0.90)), (8L, ang(0.95)),   // family B
       (3L, dup), (10L, dup), (11L, dup))                   // duplicate triple
       .toDF("vec_id", "embedding")
-    val dir = "/root/repo/target/scratch/knnannspec"
+    val dir = SparkSpec.scratch("knnannspec")
     df.coalesce(1).write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     val rows = Clustering.extKnnAnnClusters(spark, dir).collect()
     val cl = rows.map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -222,7 +222,7 @@ class ClusteringSpec extends SparkSpec {
     // closure puts all three in one cluster, so (0,2) is CHAINED
     val words = (0 until 44).map(i => s"tok$i")
     val texts = (0 until 3).map(i => words.slice(7 * i, 7 * i + 30).mkString(" "))
-    val dir = "/root/repo/target/scratch/clust_dilution"
+    val dir = SparkSpec.scratch("clust_dilution")
     (texts.zipWithIndex.map { case (t, i) => (i.toLong, t) } :+
       (3L, "entirely unrelated singleton document about nothing shared"))
       .map { case (id, t) => (id, t, "en", "s", t.length.toLong) }

@@ -12,7 +12,7 @@ class CurationSpec extends SparkSpec {
   private def writeDocs(name: String,
                         rows: Seq[(Long, String, String, String)]): String = {
     import spark.implicits._
-    val dir = s"/root/repo/target/scratch/curation_$name"
+    val dir = SparkSpec.scratch(s"curation_$name")
     rows.map { case (id, text, lang, source) =>
       (id, text, lang, source, text.length.toLong)
     }.toDF("doc_id", "text", "lang", "source", "n_chars")

@@ -142,7 +142,7 @@ class DedupSpec extends SparkSpec {
   test("cdc dedup: re-crawled doc with an inserted banner is caught with high containment") {
     import spark.implicits._
     graft.expressions.CdcBoundaries.register(spark)
-    val dir = "/root/repo/target/scratch/dedup_cdcdedup"
+    val dir = SparkSpec.scratch("dedup_cdcdedup")
     val article = (1 to 8).map(i => s"paragraph$i " + base).mkString(" ")
     val recrawl = "new cookie banner text appended by the site template " + article
     Seq((0L, article), (1L, recrawl), (2L, unrelated))
@@ -158,7 +158,7 @@ class DedupSpec extends SparkSpec {
 
   test("minhash estimator calibration: identical pair scores exact 1e6 ppm with zero error") {
     import spark.implicits._
-    val dir = "/root/repo/target/scratch/dedup_mhest"
+    val dir = SparkSpec.scratch("dedup_mhest")
     Seq((0L, base), (1L, base), (2L, unrelated))
       .map { case (id, t) => (id, t, "en", "s", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
@@ -177,7 +177,7 @@ class DedupSpec extends SparkSpec {
   test("lsh plan: candidate volume is monotone non-increasing in rows-per-band; " +
        "exact dups flagged in every config") {
     import spark.implicits._
-    val dir = "/root/repo/target/scratch/dedup_lshplan"
+    val dir = SparkSpec.scratch("dedup_lshplan")
     Seq((0L, base), (1L, base), (2L, nearDup), (3L, unrelated))
       .map { case (id, t) => (id, t, "en", "s", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
@@ -203,7 +203,7 @@ class DedupSpec extends SparkSpec {
   test("hamming histogram: exact dups land in bucket 0, near-dups within the " +
        "guaranteed radius, cumulative is monotone") {
     import spark.implicits._
-    val dir = "/root/repo/target/scratch/dedup_hamming"
+    val dir = SparkSpec.scratch("dedup_hamming")
     Seq((0L, base), (1L, base), (2L, nearDup), (3L, unrelated))
       .map { case (id, t) => (id, t, "en", "s", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
@@ -238,7 +238,7 @@ class DedupSpec extends SparkSpec {
   test("suffix dedup: catches the mod-8-misaligned span the fixed stride grid " +
        "provably misses; spans carry true variable token lengths; islands split") {
     import spark.implicits._
-    val dir = "/root/repo/target/scratch/dedup_suffix"
+    val dir = SparkSpec.scratch("dedup_suffix")
     // varied token lengths => the shared region has no period-8
     // self-repeat, so the misalignment argument below is airtight
     def mk(pfx: String, n: Int, from: Int = 1): String =
@@ -278,5 +278,14 @@ class DedupSpec extends SparkSpec {
     rows("s") shouldBe ((2L, 2L, 50L, 25L)) // one 25-token span per doc
     rows("t") shouldBe ((2L, 2L, 42L, 21L)) // true variable length 21
     rows("u") shouldBe ((2L, 4L, 80L, 20L)) // two islands per doc
+  }
+
+  test("the MinHash oracle permutation table equals permConsts(16)") {
+    val rows = """\((\d+), (\d+), (\d+)\)""".r
+      .findAllMatchIn(minhashPermsSql)
+      .map(m => (m.group(1).toInt, m.group(2).toLong, m.group(3).toLong))
+      .toSeq
+    rows.map(_._1) shouldBe (0 until 16)
+    rows.map(r => (r._2, r._3)) shouldBe permConsts(16)
   }
 }

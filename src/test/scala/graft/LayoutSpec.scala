@@ -11,7 +11,7 @@ class LayoutSpec extends SparkSpec {
 
   test("materialized views: materialize, query via temp view, refresh picks up new build") {
     import graft.etl.MaterializedViews
-    val base = "/root/repo/target/scratch/mv"
+    val base = SparkSpec.scratch("mv")
     var threshold = 100000.0
     def build() = Tables.orders(spark, sf("sf0.001"))
       .filter(col("o_totalprice") > threshold)

@@ -17,7 +17,7 @@ object ProbeEnv {
     val roots = Seq("classes", "test-classes")
       .map(d => java.nio.file.Paths.get(s"/root/repo/target/scala-2.13/$d"))
       .filter(java.nio.file.Files.isDirectory(_))
-    val scratch = java.nio.file.Paths.get("/root/repo/target/scratch")
+    val scratch = java.nio.file.Paths.get(SparkSpec.scratch())
     java.nio.file.Files.createDirectories(scratch)
     val out = java.nio.file.Files.createTempFile(
       scratch, "graft_probe_", ".jar")

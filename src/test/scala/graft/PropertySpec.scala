@@ -222,7 +222,7 @@ class PropertySpec extends SparkSpec {
       }
       val text = rng.shuffle(words.flatMap(w =>
         Seq.fill(1 + rng.nextInt(4))(w))).mkString(" ")
-      val dir = s"/root/repo/target/scratch/prop_bpe_$trial"
+      val dir = SparkSpec.scratch(s"prop_bpe_$trial")
       Seq((0L, text, "en", "s", text.length.toLong))
         .toDF("doc_id", "text", "lang", "source", "n_chars")
         .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -247,7 +247,7 @@ class PropertySpec extends SparkSpec {
     }
     def roots(rows: Seq[(Long, String, String, String, Long)],
               parts: Int, tag: String): Seq[(Long, String, String)] = {
-      val dir = s"/root/repo/target/scratch/prop_merkle_$tag"
+      val dir = SparkSpec.scratch(s"prop_merkle_$tag")
       rows.toDF("doc_id", "text", "lang", "source", "n_chars")
         .repartition(parts)
         .write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -272,7 +272,7 @@ class PropertySpec extends SparkSpec {
         (i.toLong, toks.mkString(" "))
       } ++ Seq((12L, "planted dup " + words.mkString(" ")),
                (13L, "planted dup " + words.mkString(" ")))
-      val dir = s"/root/repo/target/scratch/prop_lsh_$trial"
+      val dir = SparkSpec.scratch(s"prop_lsh_$trial")
       docs.map { case (id, t) => (id, t, "en", "s", t.length.toLong) }
         .toDF("doc_id", "text", "lang", "source", "n_chars")
         .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")

@@ -237,7 +237,7 @@ class SamplingSpec extends SparkSpec {
        "match a driver-side replay, and all pairs are symmetric-bounded") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    val dir = "/root/repo/target/scratch/sampspec_jsd"
+    val dir = SparkSpec.scratch("sampspec_jsd")
     // X and Y share the identical token multiset (JSD must be exactly 0:
     // every bucket ratio is exactly 1, floor(1e6*ln 1) = 0); Z is
     // vocabulary-disjoint from both

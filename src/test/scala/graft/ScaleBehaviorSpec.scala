@@ -85,7 +85,7 @@ class ScaleBehaviorSpec extends SparkSpec {
     // and applies might_contain on the fact scan side, skipping fact rows
     // whose keys cannot join — demonstrated here with the application-side
     // size threshold lowered to test scale
-    val dir = "/root/repo/target/scratch/bloomspec"
+    val dir = SparkSpec.scratch("bloomspec")
     spark.range(0, 200000)
       .select((col("id") % 1000).as("dim_k"), col("id").as("payload"))
       .write.mode("overwrite").parquet(s"$dir/fact")

@@ -263,7 +263,7 @@ class SimilaritySpec extends SparkSpec {
     import spark.implicits._
     // planted fixture: every (even, odd) id pair shares one embedding ->
     // the two parity snapshots are identical multisets -> zero drift
-    val dir = "/root/repo/target/scratch/sim_drift"
+    val dir = SparkSpec.scratch("sim_drift")
     (0L until 48L).map { id =>
       val k = id / 2
       (id, Array.tabulate(8)(j => (((k * 7 + j * 3) % 11) - 5 + (if (j == 0) 7 else 0)).toFloat))
@@ -473,5 +473,33 @@ class SimilaritySpec extends SparkSpec {
     out.last._4 shouldBe 1000000L
     // and truncation can only have cost something relative to it
     out.foreach { case (_, _, _, ppm) => ppm should be <= 1000000L }
+  }
+
+  test("recall@5 audit: n_bf denominator below k, NULL recall without truth, " +
+       "row kept for a query with no ANN candidates") {
+    import spark.implicits._
+    val vecs = Seq(0L -> Array(1.0f, 0.0f), 1L -> Array(0.0f, 1.0f),
+                   2L -> Array(1.0f, 1.0f), 3L -> Array(1.0f, 2.0f))
+    val queries = vecs.filter(_._1 < 2).toDF("qid", "qe")
+    val corpus = vecs.toDF("cid", "ce")
+    // query 0 ranks two of its three true neighbors; query 1 has none
+    val cands = Seq((0L, 1L, 0.9), (0L, 2L, 0.8)).toDF("qid", "cid", "cos")
+    val rows = recallAt5(queries, corpus, cands).collect().map(r =>
+      r.getAs[Long]("qid") -> ((r.getAs[Long]("n_bf"), r.getAs[Long]("n_ann"),
+        r.getAs[Long]("n_overlap"), r.get(r.fieldIndex("recall_at_5"))))).toMap
+    rows.keySet shouldBe Set(0L, 1L)
+    // 3 true neighbors (corpus of 4 minus the query): recall 2/3, not 2/5
+    rows(0L) shouldBe ((3L, 2L, 2L, 2.0 / 3.0))
+    rows(1L) shouldBe ((3L, 0L, 0L, 0.0))
+    // a lone vector has no true neighbors: n_bf = 0 and recall is NULL
+    val lone = recallAt5(Seq(5L -> Array(1.0f, 0.0f)).toDF("qid", "qe"),
+      Seq(5L -> Array(1.0f, 0.0f)).toDF("cid", "ce"),
+      Seq((5L, 7L, 0.5)).toDF("qid", "cid", "adc_score"), "adc_score")
+      .collect()
+    lone.length shouldBe 1
+    lone(0).getAs[Long]("n_bf") shouldBe 0L
+    lone(0).getAs[Long]("n_ann") shouldBe 1L
+    lone(0).getAs[Long]("n_overlap") shouldBe 0L
+    lone(0).isNullAt(lone(0).fieldIndex("recall_at_5")) shouldBe true
   }
 }

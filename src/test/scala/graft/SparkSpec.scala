@@ -1,5 +1,6 @@
 package graft
 
+import graft.streaming.EventsStream
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -12,6 +13,12 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
+  /** Spec scratch path `name` under [[EventsStream.scratchRoot]]
+    * (`target/scratch` of the working directory); no name gives the root
+    * itself. */
+  def scratch(name: String = ""): String =
+    EventsStream.scratchRoot.resolve(name).toString
+
   lazy val session: SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")
@@ -19,7 +26,7 @@ object SparkSpec {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.warehouse.dir", "/root/repo/target/scratch/warehouse")
+      .config("spark.sql.warehouse.dir", scratch("warehouse"))
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")

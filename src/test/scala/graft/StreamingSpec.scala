@@ -12,7 +12,7 @@ import org.scalatest.matchers.should.Matchers._
 class StreamingSpec extends SparkSpec {
 
   private def tmp(name: String): String = {
-    val base = java.nio.file.Paths.get("/root/repo/target/scratch/spec")
+    val base = java.nio.file.Paths.get(SparkSpec.scratch("spec"))
     java.nio.file.Files.createDirectories(base)
     java.nio.file.Files.createTempDirectory(base, s"graft_$name").toString
   }

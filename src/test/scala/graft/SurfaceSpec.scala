@@ -89,7 +89,7 @@ class SurfaceSpec extends SparkSpec {
     }
     // remainder case n=7 (q=1, r=3: tile sizes 2,2,2,1) on a micro frame
     import spark.implicits._
-    val dir = "/root/repo/target/scratch/ntile7"
+    val dir = SparkSpec.scratch("ntile7")
     Seq.tabulate(7)(i => (i.toLong, 0L, "O", (700 - i * 93).toDouble,
         new java.sql.Timestamp(0L), "5-LOW"))
       .toDF("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
@@ -127,7 +127,7 @@ class SurfaceSpec extends SparkSpec {
 
   test("malformed CSV rows: PERMISSIVE preserves count with nulls, DROPMALFORMED drops") {
     import org.apache.spark.sql.types._
-    val dir = "/root/repo/target/scratch/malformed_csv"
+    val dir = SparkSpec.scratch("malformed_csv")
     new java.io.File(dir).mkdirs()
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$dir/part.csv"),
@@ -1152,7 +1152,7 @@ class SurfaceSpec extends SparkSpec {
     // fuzz seed 42: a corpus whose words are all < 5 chars left
     // regexp_extract_all empty and ANSI element_at threw — try_element_at
     // must fall through to '' (the oracle's NULL-coalesce semantics)
-    val dir = "/root/repo/target/scratch/fuzzreg"
+    val dir = SparkSpec.scratch("fuzzreg")
     Seq((0L, "the fast key", "en", "s", 12L),
         (1L, "substantial vocabulary here", "en", "s", 27L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
@@ -1250,7 +1250,7 @@ class SurfaceSpec extends SparkSpec {
        "-eps variance under the double cast — stddev/zscore must clamp, " +
        "not throw or NaN") {
     import spark.implicits._
-    val dir = "/root/repo/target/scratch/fuzzreg_eps"
+    val dir = SparkSpec.scratch("fuzzreg_eps")
     // 999.99^2 = 999980.0001 is not double-exact: with TWO equal prices,
     // sxx_double - sx_double^2/n = -2.3e-10 — mathematically zero.
     // Pre-fix: DuckDB's sqrt(-eps) THREW (Out of Range) and Spark's was
@@ -1294,7 +1294,7 @@ class SurfaceSpec extends SparkSpec {
        "table yields empty/zero results, not schema-inference throws " +
        "or NULL-vs-0 divergence") {
     import spark.implicits._
-    val dir = "/root/repo/target/scratch/fuzzreg_empty"
+    val dir = SparkSpec.scratch("fuzzreg_empty")
     Seq.empty[(Long, java.sql.Timestamp, Long, String, Double, String)]
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/events.parquet")
@@ -1311,7 +1311,7 @@ class SurfaceSpec extends SparkSpec {
     // streaming incremental daily: an empty source drains zero batches
     // and writes nothing — same inference hazard on the sink read-back
     val base = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target/scratch"), "inc_empty")
+      java.nio.file.Paths.get(SparkSpec.scratch()), "inc_empty")
     graft.streaming.EventsStream.incrementalDaily(
       spark, dir, s"$base/ckpt", s"$base/out").count() shouldBe 0L
   }
@@ -1319,7 +1319,7 @@ class SurfaceSpec extends SparkSpec {
   test("fuzz regressions: negative event values and credit-line prices " +
        "(seed 400) — log/sqrt domains go NULL, modulo stays non-negative") {
     import spark.implicits._
-    val dir = "/root/repo/target/scratch/fuzzreg_neg"
+    val dir = SparkSpec.scratch("fuzzreg_neg")
     def ev(id: Long, v: Double) =
       (id, java.sql.Timestamp.valueOf("2024-01-01 01:00:00"), 0L, "click",
        v, """{"k": 1}""")
@@ -1637,7 +1637,7 @@ class SurfaceSpec extends SparkSpec {
     val junk = (1 to 40).map(_ => "0000").mkString(" ")
     val texts = Seq(good, good, good, junk, junk,
       "one short unique line", good + " with a unique tail marker")
-    val dir = "/root/repo/target/scratch/quality_dup"
+    val dir = SparkSpec.scratch("quality_dup")
     texts.zipWithIndex
       .map { case (t, i) => (i.toLong, t, "en", "s", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
@@ -1682,7 +1682,7 @@ class SurfaceSpec extends SparkSpec {
       (id, t, "en", "s", t.length.toLong)
     }.toDF("doc_id", "text", "lang", "source", "n_chars")
     def tree(edit: Boolean): Map[Long, (Long, String, String)] = {
-      val dir = s"/root/repo/target/scratch/merkle_${if (edit) "b" else "a"}"
+      val dir = SparkSpec.scratch(s"merkle_${if (edit) "b" else "a"}")
       corpus(edit).coalesce(1).write.mode("overwrite")
         .parquet(s"$dir/documents.parquet")
       graft.ops.Quality.extMerkleShards(spark, dir).collect()
@@ -1726,7 +1726,7 @@ class SurfaceSpec extends SparkSpec {
     // (DuckDB's // 0). Net-refund type (tc < 0): the strict-before keep
     // rule admits nobody, so the share is exactly 0, through the
     // fully-signed divide.
-    val dir = "/root/repo/target/scratch/nucleus525"
+    val dir = SparkSpec.scratch("nucleus525")
     Seq((0L, new java.sql.Timestamp(0L), 1L, "click", 0.0, "{}"),
         (1L, new java.sql.Timestamp(1000L), 1L, "purchase", 1.0, "{}"),
         (2L, new java.sql.Timestamp(2000L), 2L, "purchase", -3.0, "{}"))
@@ -1748,7 +1748,7 @@ class SurfaceSpec extends SparkSpec {
     // by one micro-unit whenever |a4|*1e4 mod |b| != 0. This corpus pins
     // it: a4 = -533333 cent², b = -433 cents, 5333330000 mod 433 = 153,
     // true wavg = 5333330000/433/1e6-ish -> floor 12317159 -> 12.317159.
-    val dir = "/root/repo/target/scratch/wavgneg"
+    val dir = SparkSpec.scratch("wavgneg")
     Seq((0L, 0L, 0L, 1, -3.33, 10.01, 0.0, 0.0, "N", "O",
          new java.sql.Timestamp(0L)),
         (0L, 0L, 0L, 2, -1.00, 20.00, 0.0, 0.0, "N", "O",

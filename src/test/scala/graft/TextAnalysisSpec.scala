@@ -107,7 +107,7 @@ class TextAnalysisSpec extends SparkSpec {
     val df = Seq((0L, "hello", "en", "s", 5L), (1L, "éxé", "fr", "s", 3L),
                  (2L, "", "en", "s", 0L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val dir = "/root/repo/target/scratch/mmspec"
+    val dir = SparkSpec.scratch("mmspec")
     df.coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val out = Multimodal.extMultimodal(spark, dir).collect()
       .map(r => r.getLong(0) ->
@@ -189,7 +189,7 @@ class TextAnalysisSpec extends SparkSpec {
     val df = Seq((0L, "hello", "en", "s", 5L), (1L, "éxé", "fr", "s", 3L),
                  (2L, "", "en", "s", 0L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val dir = "/root/repo/target/scratch/wavspec"
+    val dir = SparkSpec.scratch("wavspec")
     df.coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val out = Multimodal.extAudioFeatures(spark, dir).collect()
       .map(r => r.getLong(0) ->
@@ -214,7 +214,7 @@ class TextAnalysisSpec extends SparkSpec {
     // doc 3: f=1+3%4=4 frames, h=1+3%7=4, widths (5+i)%12+1 = 6,7,8,9
     val df = Seq((3L, "hello", "en", "s", 5L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val dir = "/root/repo/target/scratch/framespec"
+    val dir = SparkSpec.scratch("framespec")
     df.coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val r = Multimodal.extFrameSample(spark, dir).collect().head
     r.getAs[Int]("n_frames") shouldBe 4
@@ -239,7 +239,7 @@ class TextAnalysisSpec extends SparkSpec {
       .toDF("doc_id", "text", "lang", "source", "n_chars")
     // run the real operator against a scratch dir exposing these rows as
     // the documents table
-    val dir = "/root/repo/target/scratch/textspec"
+    val dir = SparkSpec.scratch("textspec")
     df.coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val out = TextAnalysis.extQualityScore(spark, dir)
     val q = out.collect().map(r => r.getLong(0) -> r.getAs[Double]("quality")).toMap
@@ -249,7 +249,7 @@ class TextAnalysisSpec extends SparkSpec {
   test("bpe train: hand-computed merge table, greedy non-overlapping runs, " +
        "loop drains when no pairs remain") {
     import spark.implicits._
-    val dir = "/root/repo/target/scratch/textspec_bpe"
+    val dir = SparkSpec.scratch("textspec_bpe")
     // 10x "aaaa" + 5x "bc" + 3x "aaa":
     //  r1 (a,a)  n = 10*3 + 3*2 = 36 -> aaaa=[aa,aa], aaa=[aa,a] (greedy
     //     takes odd ranks of the candidate run: 3 a's give ONE merge)
@@ -290,7 +290,7 @@ class TextAnalysisSpec extends SparkSpec {
   test("fuzz regression (seed 429): a language of all-empty documents has " +
        "NULL fertility, not a divide-by-zero") {
     import spark.implicits._
-    val dir = "/root/repo/target/scratch/textspec_fert"
+    val dir = SparkSpec.scratch("textspec_fert")
     Seq((0L, "", "xx", "s", 0L), (1L, "", "xx", "s", 0L),
         (2L, "ab cd", "en", "s", 5L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
@@ -304,7 +304,7 @@ class TextAnalysisSpec extends SparkSpec {
   test("Good-Turing table on a crafted corpus: hand-computed N_r, an absent " +
        "frequency class still reports its row, r* and P0 floor-divides") {
     import spark.implicits._
-    val dir = "/root/repo/target/scratch/textspec_gt"
+    val dir = SparkSpec.scratch("textspec_gt")
     // frequencies: w1:1 w2:1 w3:2 w4:3 w5:3 w6:5 w7:6
     //  -> N_1=2 N_2=1 N_3=2 N_4=0 (absent) N_5=1 N_6=1
     //     n_vocab=7 n_tokens=21 n1=2 p0=floor(2e6/21)=95238

@@ -59,7 +59,7 @@ class WinsorizedExactSpec extends SparkSpec {
     }
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target/scratch"),
+      java.nio.file.Paths.get(SparkSpec.scratch()),
       "wins_exact").toString
     rows.toDF("o_orderkey", "o_custkey", "o_orderstatus",
               "o_totalprice", "o_orderdate", "o_orderpriority")
