@@ -87,7 +87,7 @@ object AB {
     // judge can separate plan changes from box weather in one read
     // (interleaved min-of-N is the only trustworthy per-query number)
     val out = sys.env.getOrElse("SPARK_GRAFT_AB_OUT",
-      "/root/repo/target/bench_ab.json")
+      "target/bench_ab.json")
     // sfDir/master are env-sourced — escape them (DumpContract.q) so a
     // quote or backslash in the env can never yield an unparseable
     // artifact for bench_drift/lc_bench (round-13 ADVICE)

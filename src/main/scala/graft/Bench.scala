@@ -108,7 +108,7 @@ object Bench {
     // ONCE here so the stdout line and bench_full.json agree
     val peakFields = DriverPeak.jsonFields
     java.nio.file.Files.write(
-      java.nio.file.Paths.get("/root/repo/target/bench_full.json"),
+      java.nio.file.Paths.get("target/bench_full.json"),
       (s"""{"metric":"total","value":${fmt(total, 4)},"unit":"sec",""" +
         s""""passes":$passes,"calibration_sec":${fmt(calibration, 4)},""" +
         s"""$peakFields,"queries":${dict(all, 4)},""" +

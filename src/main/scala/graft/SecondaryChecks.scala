@@ -203,7 +203,7 @@ object SecondaryChecks {
     val json = (s"{$headFrag" +: extra)
       .mkString("", ",", s""","pass":$allPass}""")
     java.nio.file.Files.write(
-      java.nio.file.Paths.get("/root/repo/SECONDARY_CHECKS.json"),
+      java.nio.file.Paths.get("SECONDARY_CHECKS.json"),
       json.getBytes("UTF-8"))
     println(json)
     spark.stop()

@@ -21,7 +21,7 @@ object Smoke {
     // fixtures (the reference's five-layer flow, SURVEY §3.1-3.2)
     import org.apache.spark.sql.functions._
     val fixtures = sys.env.getOrElse("GRAFT_GTFS_DIR",
-      "/root/repo/src/test/resources/gtfs")
+      "src/test/resources/gtfs")
     val op = etl.GtfsEtl.operational(etl.GtfsEtl.staging(spark, fixtures))
     import spark.implicits._
     val delays = Seq(

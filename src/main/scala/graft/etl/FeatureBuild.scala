@@ -1,7 +1,7 @@
 package graft.etl
 
 import graft.functions.GtfsFunctions._
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -59,40 +59,32 @@ object FeatureBuild {
            min_by(col("precipitation"), col("recorded_at")).as("w_precip"),
            min_by(col("wind_speed"), col("recorded_at")).as("w_wind"))
 
-    // historical aggregates, decorrelated (ml_feature_engineering.sql:253-345)
-    def windowed(days: Int) =
-      de.filter(col("actual_arrival") >= date_sub(lit(asOf), days))
-    def agg7(keys: Column*)(aggs: Column*)(df: DataFrame) =
-      df.groupBy(keys: _*).agg(aggs.head, aggs.tail: _*)
-
-    val histRS7 = agg7(col("trip_id"), col("stop_id"))(
-      avg(col("delay_minutes")).as("avg_rs7"),
-      count(lit(1)).as("cnt_rs7"),
-      max(col("delay_minutes")).as("max_rs7"))(windowed(7))
-    val histRS30 = agg7(col("trip_id"), col("stop_id"))(
-      avg(col("delay_minutes")).as("avg_rs30"))(windowed(30))
-    val deRoute = de.join(op.trips.select("trip_id", "route_id"), Seq("trip_id"))
-    val histRoute7 = deRoute
-      .filter(col("actual_arrival") >= date_sub(lit(asOf), 7))
+    // historical aggregates, decorrelated (ml_feature_engineering.sql:253-345):
+    // one pass per key grain over the 30-day cut, its 7-day figures
+    // conditional aggregates of the same pass (both cut-offs are lower
+    // bounds, so the 7-day rows are a subset of the 30-day rows)
+    val in7 = col("actual_arrival") >= date_sub(lit(asOf), 7)
+    val delay = col("delay_minutes")
+    val d7 = when(in7, delay)
+    val de30 = de.filter(col("actual_arrival") >= date_sub(lit(asOf), 30))
+    val histRS = de30.groupBy(col("trip_id"), col("stop_id"))
+      .agg(avg(d7).as("avg_rs7"),
+           count(when(in7, 1)).as("cnt_rs7"), // rows, null delays included
+           max(d7).as("max_rs7"),
+           avg(delay).as("avg_rs30"))
+    val histRoute = de30.join(op.trips.select("trip_id", "route_id"), Seq("trip_id"))
       .groupBy(col("route_id"))
-      .agg(avg(col("delay_minutes")).as("avg_route7"),
-           stddev_samp(col("delay_minutes")).as("sd_route7"))
-    val histRoute30 = deRoute
-      .filter(col("actual_arrival") >= date_sub(lit(asOf), 30))
-      .groupBy(col("route_id"))
-      .agg(avg(col("delay_minutes")).as("avg_route30"))
-    val histStop7 = agg7(col("stop_id"))(
-      avg(col("delay_minutes")).as("avg_stop7"))(windowed(7))
-    val histStop30 = agg7(col("stop_id"))(
-      avg(col("delay_minutes")).as("avg_stop30"))(windowed(30))
-    val histHour7 = agg7(hour(col("actual_arrival")).as("h"))(
-      avg(col("delay_minutes")).as("avg_hour7"))(windowed(7))
-    val histHour30 = agg7(hour(col("actual_arrival")).as("h"))(
-      avg(col("delay_minutes")).as("avg_hour30"))(windowed(30))
-    val histDow7 = agg7(dowPg(col("actual_arrival")).as("dw"))(
-      avg(col("delay_minutes")).as("avg_dow7"))(windowed(7))
-    val histWeather7 = agg7(col("weather_condition"))(
-      avg(col("delay_minutes")).as("avg_weather7"))(windowed(7))
+      .agg(avg(d7).as("avg_route7"), stddev_samp(d7).as("sd_route7"),
+           avg(delay).as("avg_route30"))
+    val histStop = de30.groupBy(col("stop_id"))
+      .agg(avg(d7).as("avg_stop7"), avg(delay).as("avg_stop30"))
+    val histHour = de30.groupBy(hour(col("actual_arrival")).as("h"))
+      .agg(avg(d7).as("avg_hour7"), avg(delay).as("avg_hour30"))
+    val de7 = de.filter(in7)
+    val histDow7 = de7.groupBy(dowPg(col("actual_arrival")).as("dw"))
+      .agg(avg(delay).as("avg_dow7"))
+    val histWeather7 = de7.groupBy(col("weather_condition"))
+      .agg(avg(delay).as("avg_weather7"))
 
     // per-trip stop counts (reference's correlated COUNT/MAX subqueries)
     val tripStops = op.stopTimes.groupBy(col("trip_id"))
@@ -143,15 +135,11 @@ object FeatureBuild {
       .join(broadcast(tripStops), Seq("trip_id"), "left")
       .withColumn("wh", hourKey)
       .join(broadcast(weatherHourly), Seq("wh"), "left")
-      .join(broadcast(histRS7), Seq("trip_id", "stop_id"), "left")
-      .join(broadcast(histRS30), Seq("trip_id", "stop_id"), "left")
-      .join(broadcast(histRoute7), Seq("route_id"), "left")
-      .join(broadcast(histRoute30), Seq("route_id"), "left")
-      .join(broadcast(histStop7), Seq("stop_id"), "left")
-      .join(broadcast(histStop30), Seq("stop_id"), "left")
+      .join(broadcast(histRS), Seq("trip_id", "stop_id"), "left")
+      .join(broadcast(histRoute), Seq("route_id"), "left")
+      .join(broadcast(histStop), Seq("stop_id"), "left")
       .withColumn("h", hr)
-      .join(broadcast(histHour7), Seq("h"), "left")
-      .join(broadcast(histHour30), Seq("h"), "left")
+      .join(broadcast(histHour), Seq("h"), "left")
       .withColumn("dw", dowPg(col("actual_arrival")))
       .join(broadcast(histDow7), Seq("dw"), "left")
       .join(broadcast(histWeather7), Seq("weather_condition"), "left")

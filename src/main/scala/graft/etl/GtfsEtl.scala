@@ -164,7 +164,10 @@ object GtfsEtl {
       max(to_date(col("actual_arrival"))).as("d1")).first()
     require(!range.isNullAt(0),
       "GtfsEtl.warehouse: delayEvents is empty — no date range to build dim_date from")
-    require(!op.stops.isEmpty,
+    // stop_area splits at the global avg lat; stops carry non-null lats, so
+    // the avg is null exactly when there are no stops
+    val lat = op.stops.agg(avg(col("stop_lat")).cast("double")).first()
+    require(!lat.isNullAt(0),
       "GtfsEtl.warehouse: operational.stops is empty — cannot derive stop_area")
     val (d0, d1) = (range.getDate(0), range.getDate(1))
     val nDays = java.time.temporal.ChronoUnit.DAYS.between(
@@ -202,7 +205,7 @@ object GtfsEtl {
 
     // dim_stop (:220-244): stop_area via global avg lat; hub = >=5 distinct
     // routes through the stop (decorrelated: aggregate once, broadcast)
-    val avgLat = op.stops.agg(avg(col("stop_lat")).cast("double")).first().getDouble(0)
+    val avgLat = lat.getDouble(0)
     val routesPerStop = op.stopTimes.select("stop_id", "trip_id")
       .join(broadcast(op.trips.select("trip_id", "route_id")), Seq("trip_id"))
       .groupBy(col("stop_id"))
@@ -302,19 +305,19 @@ object GtfsEtl {
 
   /** Data-quality checks the reference runs inline after load
     * (`load_gtfs_data.sql:86-114`): returns (check_name, n_bad) rows;
-    * all-zero = clean. */
+    * all-zero = clean. One query: a union of one-row counts. */
   def dataQuality(st: StagingTables): DataFrame = {
-    val s = st.stops.sparkSession
-    import s.implicits._
+    def check(name: String, bad: DataFrame) =
+      bad.agg(lit(name).as("check_name"), count(lit(1)).as("n_bad"))
     Seq(
-      ("null_coord_stops",
-        st.stops.filter(col("stop_lat").isNull || col("stop_lon").isNull).count()),
-      ("orphan_trips",
-        st.trips.join(st.routes.select("route_id"), Seq("route_id"), "left_anti").count()),
-      ("invalid_stop_times",
-        st.stopTimes.filter(col("arrival_time").isNull).count()),
-      ("orphan_stop_times",
-        st.stopTimes.join(st.trips.select("trip_id"), Seq("trip_id"), "left_anti").count())
-    ).toDF("check_name", "n_bad")
+      check("null_coord_stops",
+        st.stops.filter(col("stop_lat").isNull || col("stop_lon").isNull)),
+      check("orphan_trips",
+        st.trips.join(st.routes.select("route_id"), Seq("route_id"), "left_anti")),
+      check("invalid_stop_times",
+        st.stopTimes.filter(col("arrival_time").isNull)),
+      check("orphan_stop_times",
+        st.stopTimes.join(st.trips.select("trip_id"), Seq("trip_id"), "left_anti"))
+    ).reduce(_ union _)
   }
 }

@@ -65,89 +65,87 @@ object Pipeline {
     * warehouse → features → (stub scores) → evaluation → monitoring.
     * Returns the per-stage report; stage outputs land in `out`.
     *
-    * Stage outputs that downstream stages consume are cache()d and
-    * materialized INSIDE their stage — otherwise Spark's laziness would
-    * attribute every runtime failure and all wall-time to whichever later
-    * stage runs the first action, inverting the report's semantics (and
-    * each `out(...)` consumer would recompute the whole CSV→features
-    * lineage). */
+    * A frame is cached only where it is read again: the operational
+    * stops/routes/trips/stop_times (read by warehouse and features) and the
+    * handed-back `fact` and `features`. Each cache is materialized INSIDE
+    * its stage, so a runtime failure and its wall-time land on the owning
+    * stage, not on whichever later stage runs the first action. Staging
+    * needs none: the CSV readers fail eagerly on a missing path. The
+    * operational caches are released on return, also after a failed
+    * stage; `fact` and `features` stay cached for the caller to unpersist. */
   def runDaily(spark: SparkSession, gtfsDir: String, delayEvents: DataFrame,
                weather: DataFrame, asOf: java.sql.Date,
                out: collection.mutable.Map[String, DataFrame] =
                  collection.mutable.Map.empty): DataFrame = {
     val r = new Runner(spark)
+    val owned = collection.mutable.ListBuffer.empty[DataFrame]
+    try {
+      val staging = r.stage("staging_load")(GtfsEtl.staging(spark, gtfsDir))
 
-    val staging = r.stage("staging_load") {
-      val st = GtfsEtl.staging(spark, gtfsDir)
-      Seq(st.stops, st.routes, st.trips, st.stopTimes, st.calendar)
-        .foreach(df => df.cache().count())
-      st
-    }
+      r.stageWithDetail("check_data_quality") {
+        val dq = GtfsEtl.dataQuality(staging.get)
+        out("dq") = dq // captured BEFORE the gate so a failure is diagnosable
+        // Gate asymmetry vs the reference (which raises on ANY failed check,
+        // ml_pipeline_dag.py:45-92), deliberate and documented: null-coord /
+        // orphan-trip / null-arrival rows self-heal downstream (operational()
+        // filters and FK-joins them away), so they are surfaced as warnings
+        // in the stage detail; orphan stop_times indicate referential
+        // corruption the load cannot repair and remain fatal.
+        val counts = dq.collect().map(x => x.getString(0) -> x.getLong(1)).toMap
+        require(counts("orphan_stop_times") == 0, "orphan stop_times present")
+        val warnings = counts.filter { case (_, v) => v > 0 }
+          .map { case (k, v) => s"$k=$v" }.mkString(",")
+        ((), if (warnings.isEmpty) "" else s"warnings: $warnings")
+      }
 
-    r.stageWithDetail("check_data_quality") {
-      val dq = GtfsEtl.dataQuality(staging.get)
-      out("dq") = dq // captured BEFORE the gate so a failure is diagnosable
-      // Gate asymmetry vs the reference (which raises on ANY failed check,
-      // ml_pipeline_dag.py:45-92), deliberate and documented: null-coord /
-      // orphan-trip / null-arrival rows self-heal downstream (operational()
-      // filters and FK-joins them away), so they are surfaced as warnings
-      // in the stage detail; orphan stop_times indicate referential
-      // corruption the load cannot repair and remain fatal.
-      val counts = dq.collect().map(x => x.getString(0) -> x.getLong(1)).toMap
-      require(counts("orphan_stop_times") == 0, "orphan stop_times present")
-      val warnings = counts.filter { case (_, v) => v > 0 }
-        .map { case (k, v) => s"$k=$v" }.mkString(",")
-      ((), if (warnings.isEmpty) "" else s"warnings: $warnings")
-    }
+      val op = r.stage("operational_load") {
+        val o = GtfsEtl.operational(staging.get)
+        Seq(o.stops, o.routes, o.trips, o.stopTimes)
+          .foreach { df => owned += df.cache(); df.count() }
+        o
+      }
 
-    val op = r.stage("operational_load") {
-      val o = GtfsEtl.operational(staging.get)
-      Seq(o.stops, o.routes, o.trips, o.stopTimes, o.calendar)
-        .foreach(df => df.cache().count())
-      o
-    }
+      val wh = r.stage("warehouse_build") {
+        val w = GtfsEtl.warehouse(spark, op.get, delayEvents)
+        out("fact") = w.factDelayEvents.cache()
+        out("fact").count()
+        w
+      }
 
-    val wh = r.stage("warehouse_build") {
-      val w = GtfsEtl.warehouse(spark, op.get, delayEvents)
-      out("fact") = w.factDelayEvents.cache()
-      out("fact").count()
-      w
-    }
+      val feats = r.stage("feature_build") {
+        val f = FeatureBuild.features(op.get, wh.get.dimStop, delayEvents,
+          weather, asOf).cache()
+        out("features") = f
+        f.count()
+        f
+      }
 
-    val feats = r.stage("feature_build") {
-      val f = FeatureBuild.features(op.get, wh.get.dimStop, delayEvents,
-        weather, asOf).cache()
-      f.count()
-      out("features") = f
-      f
-    }
+      val preds = r.stage("predict") {
+        // model scoring is out-of-engine (SURVEY §3.2); the stand-in score
+        // is the 7-day route-stop average — exactly the baseline a model
+        // must beat — which exercises the full relational path around it
+        val p = feats.get.select(
+          col("trip_id"), col("stop_id"),
+          col("delay_minutes").cast("double").as("actual"),
+          col("avg_delay_same_route_stop_7d").as("predicted"))
+        out("predictions") = p
+        p
+      }
 
-    val preds = r.stage("predict") {
-      // model scoring is out-of-engine (SURVEY §3.2); the stand-in score
-      // is the 7-day route-stop average — exactly the baseline a model
-      // must beat — which exercises the full relational path around it
-      val p = feats.get.select(
-        col("trip_id"), col("stop_id"),
-        col("delay_minutes").cast("double").as("actual"),
-        col("avg_delay_same_route_stop_7d").as("predicted")).cache()
-      p.count()
-      out("predictions") = p
-      p
-    }
+      r.stage("evaluate") {
+        out("metrics") = Evaluation.metrics(preds.get)
+        out("risk") = Evaluation.riskReport(preds.get)
+      }
 
-    r.stage("evaluate") {
-      out("metrics") = Evaluation.metrics(preds.get)
-      out("risk") = Evaluation.riskReport(preds.get)
-    }
+      r.stage("monitoring_gate") {
+        // reference floor is 75% over the trailing window; baseline scores
+        // won't clear it on fresh data — record, don't fail the DAG
+        val ok = Evaluation.monitoringGate(preds.get)
+        out("gate_passed") = spark.range(1)
+          .select(lit(ok).as("accuracy_gate_passed"))
+      }
 
-    r.stage("monitoring_gate") {
-      // reference floor is 75% over the trailing window; baseline scores
-      // won't clear it on fresh data — record, don't fail the DAG
-      val ok = Evaluation.monitoringGate(preds.get)
-      out("gate_passed") = spark.range(1)
-        .select(lit(ok).as("accuracy_gate_passed"))
-    }
-
-    r.report
+      r.report
+    } finally owned.foreach(_.unpersist())
   }
 }

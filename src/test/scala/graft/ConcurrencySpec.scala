@@ -13,27 +13,11 @@ class ConcurrencySpec extends AnyFunSuite {
 
   test("261 batch entries, 8 threads, one session: rows identical to " +
        "sequential baselines") {
-    val java = s"${sys.props("java.home")}/bin/java"
-    val opens = Seq(
-      "java.lang", "java.lang.invoke", "java.lang.reflect", "java.io",
-      "java.net", "java.nio", "java.util", "java.util.concurrent",
-      "java.util.concurrent.atomic", "sun.nio.ch", "sun.nio.cs",
-      "sun.security.action", "sun.util.calendar")
-      .flatMap(p => Seq("--add-opens", s"java.base/$p=ALL-UNNAMED"))
-    val cmd = Seq(java) ++ opens ++ Seq(
-      "-Dspark.ui.enabled=false",
-      "-Dspark.sql.session.timeZone=UTC", "-Xmx6g",
-      "-cp", sys.props("java.class.path"),
-      "graft.ConcurrencyProbe", "/root/testdata/sf0.001", "8")
-    val p = new ProcessBuilder(cmd: _*).redirectErrorStream(true).start()
-    val out = new StringBuilder
-    scala.io.Source.fromInputStream(p.getInputStream).getLines()
-      .foreach { l => out.append(l).append('\n') }
-    val exit = p.waitFor()
-    val json = out.toString.linesIterator
+    val (exit, out) = ProbeEnv.fork("graft.ConcurrencyProbe",
+      Seq("/root/testdata/sf0.001", "8"), heap = "6g")
+    val json = out.linesIterator
       .find(_.startsWith("{\"concurrency_probe\""))
-      .getOrElse(fail(
-        s"no probe output; tail:\n${out.toString.takeRight(2000)}"))
+      .getOrElse(fail(s"no probe output; tail:\n${out.takeRight(2000)}"))
     withClue(json) {
       exit shouldBe 0
       json should include("\"baseline_errors\":[]")

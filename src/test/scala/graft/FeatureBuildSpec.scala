@@ -61,6 +61,50 @@ class FeatureBuildSpec extends SparkSpec {
     jan9.getAs[Double]("avg_delay_same_route_stop_7d") shouldBe 34.0
   }
 
+  test("7d figures are conditional aggregates of the 30d pass: old-only " +
+       "keys get 7d zeros, null delays count as rows but not in averages") {
+    import spark.implicits._
+    // asOf 2024-01-14: 7d cut 2024-01-07, 30d cut 2023-12-15
+    val ev = Seq[(String, String, String, Option[Int])](
+      ("T1", "S1", "2024-01-01 08:00:00", Some(10)),  // 13 days back
+      ("T1", "S1", "2023-12-20 08:00:00", Some(20)),  // 25 days back
+      ("T1", "S2", "2024-01-10 08:15:00", Some(4)),
+      ("T1", "S2", "2024-01-11 08:15:00", None),      // null delay, in 7d
+      ("T2", "S3", "2024-01-12 17:05:00", Some(8)),
+      ("T2", "S1", "2023-12-01 17:20:00", Some(100))  // outside both
+    ).toDF("trip_id", "stop_id", "arrival_str", "delay_minutes")
+      .withColumn("actual_arrival", col("arrival_str").cast("timestamp"))
+      .withColumn("weather_condition", lit("clear"))
+      .withColumn("is_holiday", lit(false))
+      .drop("arrival_str")
+    val f = FeatureBuild.features(op, wh.dimStop, ev, emptyWeather,
+      java.sql.Date.valueOf("2024-01-14"))
+    f.count() shouldBe 6
+    def at(trip: String, stop: String) =
+      f.filter(col("trip_id") === trip && col("stop_id") === stop).first()
+    // (T1, S1) only 8-30 days back: zero 7d features, 30d avg of 10 and 20
+    val old = at("T1", "S1")
+    old.getAs[Double]("avg_delay_same_route_stop_7d") shouldBe 0.0
+    old.getAs[Long]("delay_count_same_route_stop_7d") shouldBe 0L
+    old.getAs[Int]("max_delay_same_route_stop_7d") shouldBe 0
+    old.getAs[Double]("avg_delay_same_route_stop_30d") shouldBe 15.0
+    old.getAs[Double]("avg_delay_stop_7d") shouldBe 0.0
+    old.getAs[Double]("avg_delay_stop_30d") shouldBe 15.0
+    old.getAs[Double]("delay_trend_7d") shouldBe -15.0
+    // (T1, S2): the null-delay event is a row in the count, not in an avg
+    val nul = f.filter(col("trip_id") === "T1" && col("stop_id") === "S2" &&
+      col("delay_minutes").isNull).first()
+    nul.getAs[Long]("delay_count_same_route_stop_7d") shouldBe 2L
+    nul.getAs[Double]("avg_delay_same_route_stop_7d") shouldBe 4.0
+    nul.getAs[Int]("max_delay_same_route_stop_7d") shouldBe 4
+    nul.getAs[Double]("avg_delay_same_route_stop_30d") shouldBe 4.0
+    // route R1 (T1, T2): 30d delays 10, 20, 4, 8; 7d delays 4, 8
+    val r1 = at("T2", "S3")
+    r1.getAs[Double]("avg_delay_route_30d") shouldBe 10.5
+    r1.getAs[Double]("avg_delay_route_7d") shouldBe 6.0
+    r1.getAs[Double]("stddev_delay_route_7d") shouldBe math.sqrt(8.0) +- 1e-12
+  }
+
   test("prev-stop cascade feature uses the 1-PRECEDING frame") {
     val t1s2 = feats.filter(col("trip_id") === "T1" && col("stop_id") === "S2").first()
     t1s2.getAs[Double]("prev_stop_delay") shouldBe 3.0 // T1 S1 (seq 1) delay

@@ -47,11 +47,36 @@ class PipelineSpec extends SparkSpec {
       noWeather, java.sql.Date.valueOf("2024-01-14"), out)
     val byStage = report.collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
-    // staging now materializes inside its own stage (cache+count), so the
-    // missing path fails exactly where it belongs and the rest skip
+    // the CSV readers resolve their paths eagerly, so the missing path
+    // fails in the staging stage itself and the rest skip
     byStage("staging_load") shouldBe "failed"
     val statuses = report.collect().map(_.getString(1))
     statuses.count(_ == "skipped") shouldBe 7
     byStage("monitoring_gate") shouldBe "skipped"
+  }
+
+  test("runDaily leaves only the handed-back fact and features cached, " +
+       "also when a stage fails") {
+    val caches = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    val asOf = java.sql.Date.valueOf("2024-01-14")
+    val gtfs = getClass.getResource("/gtfs").getPath
+    spark.catalog.clearCache()
+    val out = collection.mutable.Map.empty[String, DataFrame]
+    Pipeline.runDaily(spark, gtfs, delays, noWeather, asOf, out)
+    out("fact").storageLevel.useMemory shouldBe true
+    out("features").storageLevel.useMemory shouldBe true
+    out("fact").unpersist()
+    out("features").unpersist()
+    caches.isEmpty shouldBe true
+    // fails in staging, before any cache
+    Pipeline.runDaily(spark, "/nonexistent/gtfs", delays, noWeather, asOf)
+    caches.isEmpty shouldBe true
+    // fails in the warehouse (no events), after the operational caches
+    val failed = Pipeline.runDaily(spark, gtfs, delays.limit(0), noWeather,
+      asOf).collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    failed("operational_load") shouldBe "success"
+    failed("warehouse_build") shouldBe "failed"
+    caches.isEmpty shouldBe true
   }
 }

@@ -17,26 +17,11 @@ class RetrySpec extends AnyFunSuite {
   test("injected transient task failure is retried and the entry's " +
        "rows are identical (local[4,2], fault in partition 0 of every " +
        "table scan)") {
-    val java = s"${sys.props("java.home")}/bin/java"
-    val opens = Seq(
-      "java.lang", "java.lang.invoke", "java.lang.reflect", "java.io",
-      "java.net", "java.nio", "java.util", "java.util.concurrent",
-      "java.util.concurrent.atomic", "sun.nio.ch", "sun.nio.cs",
-      "sun.security.action", "sun.util.calendar")
-      .flatMap(p => Seq("--add-opens", s"java.base/$p=ALL-UNNAMED"))
-    val cmd = Seq(java) ++ opens ++ Seq(
-      "-Dspark.ui.enabled=false", "-Xmx4g",
-      "-cp", sys.props("java.class.path"),
-      "graft.RetryProbe", "/root/testdata/sf0.001",
-      "agg_multikey", "win_lag", "ext_exact_dedup")
-    val out = new StringBuilder
-    val p = new ProcessBuilder(cmd: _*).redirectErrorStream(true).start()
-    val src = scala.io.Source.fromInputStream(p.getInputStream)
-    src.getLines().foreach { l => out.append(l).append('\n') }
-    val exit = p.waitFor()
-    val json = out.toString.linesIterator
+    val (exit, out) = ProbeEnv.fork("graft.RetryProbe", Seq(
+      "/root/testdata/sf0.001", "agg_multikey", "win_lag", "ext_exact_dedup"))
+    val json = out.linesIterator
       .find(_.startsWith("{\"retry_probe\""))
-      .getOrElse(fail(s"no probe output; tail:\n${out.toString.takeRight(2000)}"))
+      .getOrElse(fail(s"no probe output; tail:\n${out.takeRight(2000)}"))
     withClue(json) {
       exit shouldBe 0
       json should include("\"fired\":true")

@@ -38,28 +38,20 @@ import org.apache.spark.sql.SparkSession
   *   graft.StageRetryProbe [sfDir] [entry ...]
   */
 object StageRetryProbe {
-  private val addOpens = Seq(
-    "java.lang", "java.lang.invoke", "java.lang.reflect", "java.io",
-    "java.net", "java.nio", "java.util", "java.util.concurrent",
-    "java.util.concurrent.atomic", "sun.nio.ch", "sun.nio.cs",
-    "sun.security.action", "sun.util.calendar")
-    .map(p => s"--add-opens=java.base/$p=ALL-UNNAMED").mkString(" ")
-
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names =
       if (args.length > 1) args.drop(1).toSeq
       else Seq("agg_multikey", "win_lag", "ext_exact_dedup")
-    val repo = "/root/repo"
-    val jar = sys.env.getOrElse("GRAFT_JAR",
-      s"$repo/target/scala-2.13/transitdatapipelinespark_2.13-0.1.0.jar")
+    val jar = sys.env.getOrElse("GRAFT_JAR", ProbeEnv.target(
+      "scala-2.13/transitdatapipelinespark_2.13-0.1.0.jar").toString)
     require(new java.io.File(jar).isFile, s"package the jar first: $jar")
     val spark = SparkSession.builder()
       .master("local-cluster[2,1,2048]")
       .config("spark.jars", jar)
       .config("spark.executor.extraClassPath", jar)
       .config("spark.executor.memory", "1500m")
-      .config("spark.executor.extraJavaOptions", addOpens)
+      .config("spark.executor.extraJavaOptions", ProbeEnv.addOpens.mkString(" "))
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
@@ -84,7 +76,7 @@ object StageRetryProbe {
         if (e.stageInfo.attemptNumber() > 0) stageReplay.incrementAndGet()
     })
 
-    val markerDir = new java.io.File(s"$repo/target/stage_retry_markers")
+    val markerDir = ProbeEnv.target("stage_retry_markers").toFile
     markerDir.mkdirs()
     markerDir.listFiles().foreach(_.delete())
 

@@ -25,24 +25,16 @@ import org.apache.spark.sql.functions._
   * Usage: graft.StreamLossProbe [srcSfDir]
   */
 object StreamLossProbe {
-  private val addOpens = Seq(
-    "java.lang", "java.lang.invoke", "java.lang.reflect", "java.io",
-    "java.net", "java.nio", "java.util", "java.util.concurrent",
-    "java.util.concurrent.atomic", "sun.nio.ch", "sun.nio.cs",
-    "sun.security.action", "sun.util.calendar")
-    .map(p => s"--add-opens=java.base/$p=ALL-UNNAMED").mkString(" ")
-
   def main(args: Array[String]): Unit = {
-    val repo = "/root/repo"
-    val jar = sys.env.getOrElse("GRAFT_JAR",
-      s"$repo/target/scala-2.13/transitdatapipelinespark_2.13-0.1.0.jar")
+    val jar = sys.env.getOrElse("GRAFT_JAR", ProbeEnv.target(
+      "scala-2.13/transitdatapipelinespark_2.13-0.1.0.jar").toString)
     require(new java.io.File(jar).isFile, s"package the jar first: $jar")
     val spark = SparkSession.builder()
       .master("local-cluster[2,1,2048]")
       .config("spark.jars", jar)
       .config("spark.executor.extraClassPath", jar)
       .config("spark.executor.memory", "1500m")
-      .config("spark.executor.extraJavaOptions", addOpens)
+      .config("spark.executor.extraJavaOptions", ProbeEnv.addOpens.mkString(" "))
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
@@ -71,7 +63,7 @@ object StreamLossProbe {
     // 8-part time-ordered multi-file source (strictly increasing
     // mtimes) so maxFilesPerTrigger=1 yields 8 genuine micro-batches
     val srcBase = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val work = s"$repo/target/stream_loss_probe"
+    val work = ProbeEnv.target("stream_loss_probe").toString
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(work))
     val typed = Tables.events(spark, srcBase)
       .select(col("event_id"), col("ts").cast("timestamp").as("ts"),

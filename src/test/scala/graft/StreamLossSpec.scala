@@ -15,30 +15,11 @@ class StreamLossSpec extends AnyFunSuite {
 
   test("executor killed mid-drain: streaming query continues on the " +
        "replacement executor and completes to the clean-run rows") {
-    val java = s"${sys.props("java.home")}/bin/java"
-    val opens = Seq(
-      "java.lang", "java.lang.invoke", "java.lang.reflect", "java.io",
-      "java.net", "java.nio", "java.util", "java.util.concurrent",
-      "java.util.concurrent.atomic", "sun.nio.ch", "sun.nio.cs",
-      "sun.security.action", "sun.util.calendar")
-      .flatMap(p => Seq("--add-opens", s"java.base/$p=ALL-UNNAMED"))
-    val cmd = Seq(java) ++ opens ++ Seq(
-      "-Dspark.ui.enabled=false", "-Xmx4g",
-      "-cp", sys.props("java.class.path"),
-      "graft.StreamLossProbe", "/root/testdata/sf0.001")
-    val pb = new ProcessBuilder(cmd: _*).redirectErrorStream(true)
-    pb.environment().put("GRAFT_JAR", ProbeEnv.jarFromClasses())
-    pb.environment().put("SPARK_HOME", ProbeEnv.sparkHomeShim())
-    pb.environment().put("SPARK_SCALA_VERSION", "2.13")
-    val p = pb.start()
-    val out = new StringBuilder
-    scala.io.Source.fromInputStream(p.getInputStream).getLines()
-      .foreach { l => out.append(l).append('\n') }
-    val exit = p.waitFor()
-    val json = out.toString.linesIterator
+    val (exit, out) = ProbeEnv.fork("graft.StreamLossProbe",
+      Seq("/root/testdata/sf0.001"), ProbeEnv.clusterEnv())
+    val json = out.linesIterator
       .find(_.startsWith("{\"stream_loss_probe\""))
-      .getOrElse(fail(
-        s"no probe output; tail:\n${out.toString.takeRight(2000)}"))
+      .getOrElse(fail(s"no probe output; tail:\n${out.takeRight(2000)}"))
     withClue(json) {
       exit shouldBe 0
       json should include("\"removed_mid_run\":true")

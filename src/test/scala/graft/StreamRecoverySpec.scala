@@ -176,24 +176,8 @@ class StreamRecoverySpec extends SparkSpec {
   test("hard JVM halt mid-drain (subprocess), restart from the torn " +
        "checkpoint completes exactly: incremental_daily and " +
        "upsert_merge") {
-    val javaBin = s"${sys.props("java.home")}/bin/java"
-    val opens = Seq(
-      "java.lang", "java.lang.invoke", "java.lang.reflect", "java.io",
-      "java.net", "java.nio", "java.util", "java.util.concurrent",
-      "java.util.concurrent.atomic", "sun.nio.ch", "sun.nio.cs",
-      "sun.security.action", "sun.util.calendar")
-      .flatMap(p => Seq("--add-opens", s"java.base/$p=ALL-UNNAMED"))
-    def kill(mode: String, srcSf: String, base: String): Int = {
-      val cmd = Seq(javaBin) ++ opens ++ Seq(
-        "-Dspark.ui.enabled=false",
-        "-Dspark.sql.session.timeZone=UTC", "-Xmx4g",
-        "-cp", sys.props("java.class.path"),
-        "graft.StreamKillProbe", mode, srcSf, base)
-      val p = new ProcessBuilder(cmd: _*).redirectErrorStream(true).start()
-      scala.io.Source.fromInputStream(p.getInputStream).getLines()
-        .foreach(_ => ())
-      p.waitFor()
-    }
+    def kill(mode: String, srcSf: String, base: String): Int =
+      ProbeEnv.fork("graft.StreamKillProbe", Seq(mode, srcSf, base))._1
     // incremental_daily
     val srcInc = multiFileSf(6)
     val baseInc = tmp("hk_inc")
