@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Interleaved A/B timing harness: runs the named queries round-robin for
   * `iters` rounds in ONE JVM, so per-query numbers share identical JVM
   * warm-up, code-cache, and box-load conditions — the measurement
@@ -20,66 +18,30 @@ object AB {
     require(names.nonEmpty, "usage: AB <iters> <name> [name...]")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // Multi-JVM pricing (round-12 verdict ask #5): SPARK_GRAFT_MASTER +
-    // SPARK_GRAFT_EXTRA_CONF mirror graft.Verify's hooks so the AB tail
-    // can be timed under local-cluster[n,cores,mem] — real broadcast
-    // serialization, remote shuffle fetch, executor classloading — and
+    // Multi-JVM pricing: under a local-cluster master (Mains.session),
     // per-entry ratios vs local[32] expose driver-adjacent work or
     // oversized broadcasts that single-JVM timing hides.
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach { s =>
-      s.split(';').iterator.map(_.trim).filter(_.nonEmpty).foreach { kv =>
-        kv.split("=", 2) match {
-          case Array(k, v) => builder.config(k.trim, v.trim)
-          case _ => throw new IllegalArgumentException(
-            s"SPARK_GRAFT_EXTRA_CONF entry must be key=value, got '$kv'")
-        }
-      }
-    }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Mains.session(cpus)
+    val master = spark.sparkContext.master
     spark.range(0, 1000000).selectExpr("sum(id)").collect()
     spark.read.parquet(s"$sfDir/region.parquet").count()
-    // same box-speed calibration probe as Bench (pure CPU, data- and
-    // repo-independent) so cross-round AB comparisons can separate box
-    // drift from code drift mechanically
-    // sampled INTERLEAVED through the run (before each round), median
-    // reported: session-level clock/JIT state spreads a start-of-session
-    // min-of-k probe ±13-15% across sessions (measured); the median over
-    // the run's own window is the right drift-normalization anchor
-    val calSamples = collection.mutable.ArrayBuffer.empty[Double]
-    def calibrate(): Unit = {
-      val t0 = System.nanoTime()
-      spark.range(0, 1200000000L, 1, 32)
-        .selectExpr("sum(id * 3 + (id % 7))").collect()
-      calSamples += (System.nanoTime() - t0) / 1e9: Unit
-    }
+    // calibration sampled before each round and once at the end
+    val cal = new Mains.Calibration(spark)
     val times = collection.mutable.Map.empty[String, List[Double]]
     for (i <- 1 to iters; name <- names) {
-      if (name == names.head) calibrate()
+      if (name == names.head) cal.sample()
       val t0 = System.nanoTime()
       val n = SparkEntry.queries(name)(spark, sfDir).count()
       val t = (System.nanoTime() - t0) / 1e9
       times(name) = t :: times.getOrElse(name, Nil)
       println(f"AB $name round$i rows=$n t=$t%.3f")
     }
-    calibrate()
-    val csAB = calSamples.sorted
-    val calibration =
-      if (csAB.size % 2 == 1) csAB(csAB.size / 2)
-      else (csAB(csAB.size / 2 - 1) + csAB(csAB.size / 2)) / 2.0
-    println(f"AB calibration_sec=$calibration%.3f (${csAB.size} samples)")
+    cal.sample()
+    val calibration = cal.median
+    println(f"AB calibration_sec=$calibration%.3f (${cal.count} samples)")
     val summary = names.map { name =>
       val ts = times(name).sorted
-      val med = // conventional midpoint average for even sample counts
-        if (ts.size % 2 == 1) ts(ts.size / 2)
-        else (ts(ts.size / 2 - 1) + ts(ts.size / 2)) / 2.0
+      val med = Mains.median(ts)
       println(f"AB-SUMMARY $name min=${ts.head}%.3f med=$med%.3f sf=$sfDir")
       (name, ts.head, med)
     }

@@ -16,31 +16,12 @@ object Bench {
     // instead of inflating whichever query runs first
     spark.range(0, 1000000).selectExpr("sum(id)").collect()
     spark.read.parquet(s"$sfDir/region.parquet").count()
-    // Calibration probe (round-11 verdict ask #5): two consecutive
-    // rounds attributed ±3-5% closing-number drift to box conditions
-    // with no in-artifact way to separate box drift from code drift.
-    // This is a FIXED pure-CPU, data-independent job (range → arith →
-    // sum, all codegen'd, no I/O, no shuffle of real data); its value
-    // depends only on the box, never
-    // on this repo's code, so cross-round bench comparisons can be
-    // normalized mechanically: engine drift ≈ total_r(N)/total_r(N-1)
-    // ÷ calibration_r(N)/calibration_r(N-1).
-    // Sampling design (measured): min-of-k at session START spreads
-    // ±13-15% across back-to-back idle sessions — the variance is
-    // session-level (CPU clock state, JIT), not per-sample noise. So
-    // the probe is sampled INTERLEAVED through the whole run (once
-    // now, once before each suite pass) and the MEDIAN is reported —
-    // the session's average speed over the same wall-clock window the
-    // query numbers were measured in, which is exactly what drift
-    // normalization needs.
-    val calSamples = collection.mutable.ArrayBuffer.empty[Double]
-    def calibrate(): Unit = {
-      val t0 = System.nanoTime()
-      spark.range(0, 1200000000L, 1, 32)
-        .selectExpr("sum(id * 3 + (id % 7))").collect()
-      calSamples += (System.nanoTime() - t0) / 1e9: Unit
-    }
-    calibrate()
+    // Calibration probe (Mains.Calibration): two consecutive rounds
+    // attributed ±3-5% closing-number drift to box conditions with no
+    // in-artifact way to separate box drift from code drift. Sampled
+    // now, before each later suite pass and once at the end.
+    val cal = new Mains.Calibration(spark)
+    cal.sample()
     // N FULL PASSES over the suite (default 3, SPARK_GRAFT_BENCH_PASSES
     // overrides; floor 2), per-query min across passes. The samples of a
     // query are separated by a whole suite pass, so a transient stall
@@ -63,13 +44,13 @@ object Bench {
     var errors = Set.empty[String]
     val names = SparkEntry.queries.keys.toSeq.sorted
     val best = collection.mutable.Map.empty[String, Double]
-    // calibrate() keys on the PASS BOUNDARY itself, not on re-seeing
+    // cal.sample() keys on the PASS BOUNDARY itself, not on re-seeing
     // names.head — keying on the head entry would silently collapse the
     // interleaved probe to its start+end samples whenever that entry
     // errored in pass 1 and dropped out of later passes (round-12
     // ADVICE).
     for (pass <- 1 to passes) {
-      if (pass > 1) calibrate()
+      if (pass > 1) cal.sample()
       for (name <- names if !errors(name)) {
         val t0 = System.nanoTime()
         // a failed query must NOT report its (fast) exception time — it
@@ -82,11 +63,8 @@ object Bench {
       }
     }
     errors.foreach(best(_) = -1.0)
-    calibrate()
-    val cs = calSamples.sorted
-    val calibration =
-      if (cs.size % 2 == 1) cs(cs.size / 2)
-      else (cs(cs.size / 2 - 1) + cs(cs.size / 2)) / 2.0
+    cal.sample()
+    val calibration = cal.median
     def fmt(v: Double, scale: Int): String =
       if (v < 0) "-1"
       else BigDecimal(v).setScale(scale, BigDecimal.RoundingMode.HALF_UP).toString

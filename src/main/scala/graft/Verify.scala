@@ -9,42 +9,10 @@ object Verify {
     // optional trailing args: restrict the dump to these query names
     // (driver passes none; dev runs use it to re-check changed entries)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Multi-JVM cell (round-11 verdict ask #1): SPARK_GRAFT_MASTER lets
-    // tools/config_matrix.py run the whole contract under
-    // local-cluster[n,cores,mem] — true separate executor JVMs, so
-    // broadcast serialization, remote shuffle-block fetch, and
-    // executor-side classloading of the custom expressions actually
-    // cross a process boundary (local[*] never exercises any of them).
-    // The jar + executor JVM flags ride in via SPARK_GRAFT_EXTRA_CONF.
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // micros (not INT96) so the dumped parquet timestamps compare cleanly
-      // against DuckDB's timestamp[us] results
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-    // Config-robustness hook (round-10 verdict ask #3): the contract must
-    // hold under OTHER Spark configurations than the one blessed default —
-    // codegen off (the interpreted evaluator is a genuinely different
-    // execution engine for the custom Catalyst expressions), AQE off,
-    // shuffle-partition extremes. `k=v;k=v` pairs, applied LAST so they
-    // override the defaults above. Correctness must be config-invariant;
-    // the tools/config_matrix.py sweep asserts exactly that.
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach { s =>
-      s.split(';').iterator.map(_.trim).filter(_.nonEmpty).foreach { kv =>
-        kv.split("=", 2) match {
-          case Array(k, v) => builder.config(k.trim, v.trim)
-          case _ => throw new IllegalArgumentException(
-            s"SPARK_GRAFT_EXTRA_CONF entry must be key=value, got '$kv'")
-        }
-      }
-    }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // micros (not INT96) so the dumped parquet timestamps compare cleanly
+    // against DuckDB's timestamp[us] results
+    val spark = Mains.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"),
+      "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS")
     // Spill-path witness (round-10 verdict ask #2): local[32]/128 GiB
     // never spills, so the ExternalSorter / ExternalAppendOnlyMap /
     // UnsafeExternalSorter paths that dominate a real cluster's behavior
@@ -129,10 +97,13 @@ object DumpContract {
     case c => c.toString
   } + "\""
 
+  /** `oracle_sql.json`'s text: every entry's oracle SQL, one JSON
+    * object. ContractPinSpec pins its md5. */
+  def json: String = SparkEntry.oracleSql
+    .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+
   def write(outDir: String): Unit = {
     Files.createDirectories(Paths.get(outDir))
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json): Unit
   }
 
@@ -140,4 +111,67 @@ object DumpContract {
     * directory, so a dump from any checkout stays inside it. */
   def main(args: Array[String]): Unit =
     write(args.headOption.getOrElse("target/verify_out"))
+}
+
+/** Session and timing helpers shared by the mains. */
+private[graft] object Mains {
+  /** The session of [[Verify]] and [[AB]]: master `SPARK_GRAFT_MASTER`
+    * (default `local[cpus]`; a `local-cluster[n,cores,mem]` master runs
+    * real executor JVMs, so broadcast serialization, remote shuffle
+    * fetch and executor-side classloading of the custom expressions
+    * cross a process boundary), `cpus` shuffle partitions, UTC, AQE on,
+    * UI off, then `conf`, then the `SPARK_GRAFT_EXTRA_CONF` `k=v;k=v`
+    * pairs LAST so they override everything above — the
+    * config-robustness hook (codegen off, AQE off, shuffle-partition
+    * extremes) under which the contract must still hold; the jar and
+    * executor JVM flags of a multi-JVM master ride in there too. */
+  def session(cpus: String, conf: (String, String)*): SparkSession = {
+    val builder = SparkSession.builder()
+      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.ui.enabled", "false")
+    conf.foreach { case (k, v) => builder.config(k, v) }
+    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach { s =>
+      s.split(';').iterator.map(_.trim).filter(_.nonEmpty).foreach { kv =>
+        kv.split("=", 2) match {
+          case Array(k, v) => builder.config(k.trim, v.trim)
+          case _ => throw new IllegalArgumentException(
+            s"SPARK_GRAFT_EXTRA_CONF entry must be key=value, got '$kv'")
+        }
+      }
+    }
+    val spark = builder.getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** Midpoint median (mean of the middle two for even counts). */
+  def median(xs: Seq[Double]): Double = {
+    val s = xs.sorted
+    if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
+  }
+
+  /** Box-speed calibration probe of [[Bench]] and [[AB]]: a FIXED
+    * pure-CPU, data- and repo-independent job (range → arith → sum, all
+    * codegen'd, no I/O, no real shuffle), so cross-round comparisons can
+    * separate box drift from code drift: engine drift ≈
+    * total_rN/total_rN-1 ÷ calibration_rN/calibration_rN-1. Sampled
+    * INTERLEAVED through a run and reported as the [[median]]: a
+    * min-of-k at session start spreads ±13-15% across back-to-back idle
+    * sessions (session-level clock and JIT state, measured), while the
+    * median over the run's own window is the session's speed over the
+    * same wall-clock window the query numbers were measured in. */
+  final class Calibration(spark: SparkSession) {
+    private val samples = collection.mutable.ArrayBuffer.empty[Double]
+    def sample(): Unit = {
+      val t0 = System.nanoTime()
+      spark.range(0, 1200000000L, 1, 32)
+        .selectExpr("sum(id * 3 + (id % 7))").collect()
+      samples += (System.nanoTime() - t0) / 1e9: Unit
+    }
+    def count: Int = samples.size
+    def median: Double = Mains.median(samples.toSeq)
+  }
 }

@@ -648,12 +648,6 @@ object Curation {
       |  i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]))
       |ELSE [lt] END""".stripMargin
 
-  // hash60 replay (15 hex digits of md5 → bigint), as in Sampling's oracles
-  private def h60c(x: String): String =
-    s"""list_reduce(list_transform(range(1, 16), i ->
-       |      CAST(strpos('0123456789abcdef', substr(md5($x), i, 1)) - 1 AS BIGINT)),
-       |      (a, b) -> a * 16 + b)""".stripMargin
-
   val oracles: Map[String, String] = Map(
     // funnel gates replay the proven quality/lang-id/normalize oracle
     // fragments; thresholds compare IEEE-identical doubles, rollup is
@@ -733,7 +727,7 @@ object Curation {
          |g AS (
          |  SELECT doc_id, n_tok,
          |    list_filter(range(0, (n_tok + 2) // 3),
-         |      g -> ${h60c("'m|' || doc_id || '|' || g")} % 20 < 3) AS mg
+         |      g -> ${Dedup.hash60Sql("'m|' || doc_id || '|' || g")} % 20 < 3) AS mg
          |  FROM b),
          |m AS (
          |  SELECT doc_id, n_tok,
@@ -749,13 +743,13 @@ object Curation {
       s"""WITH v1 AS (
          |  SELECT doc_id AS id1, source AS src1, sha256(text) AS fp1
          |  FROM documents
-         |  WHERE ${h60c("'rel1|' || doc_id")} % 20 <> 0),
+         |  WHERE ${Dedup.hash60Sql("'rel1|' || doc_id")} % 20 <> 0),
          |v2 AS (
          |  SELECT doc_id AS id2, source AS src2,
-         |    sha256(CASE WHEN ${h60c("'edit|' || doc_id")} % 10 = 0
+         |    sha256(CASE WHEN ${Dedup.hash60Sql("'edit|' || doc_id")} % 10 = 0
          |           THEN text || ' [v2]' ELSE text END) AS fp2
          |  FROM documents
-         |  WHERE ${h60c("'rel2|' || doc_id")} % 20 <> 0),
+         |  WHERE ${Dedup.hash60Sql("'rel2|' || doc_id")} % 20 <> 0),
          |j AS (
          |  SELECT coalesce(src1, src2) AS source,
          |    CASE WHEN id1 IS NULL THEN 'added'

@@ -61,6 +61,13 @@ object Dedup {
   def hash60(c: Column): Column =
     conv(substring(md5(c.cast("string")), 1, 15), 16, 10).cast("long")
 
+  /** DuckDB replay of [[hash60]] over the SQL expression `x`: the same 15
+    * md5 hex digits folded base-16 into a BIGINT. */
+  private[ops] def hash60Sql(x: String): String =
+    s"""list_reduce(list_transform(range(1, 16), i ->
+       |      CAST(strpos('0123456789abcdef', substr(md5($x), i, 1)) - 1 AS BIGINT)),
+       |      (a, b) -> a * 16 + b)""".stripMargin
+
   /** [[hash60]] of every element of a string array through the native
     * [[graft.expressions.Hash60All]] loop (r14): `transform(arr, hash60)`
     * pays one INTERPRETED md5+conv lambda per element — the dominant CPU

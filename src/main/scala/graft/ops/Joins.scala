@@ -1,6 +1,8 @@
 package graft.ops
 
 import graft.Tables
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Join operators (SURVEY.md §2.3, J1–J9).
@@ -125,6 +127,35 @@ object Joins {
       .orderBy(col("event_id"))
   }
 
+  /** The union-and-carry frame shared by the as-of joins J7b–J7e:
+    * purchase observations pre-aggregated to unique (user_id, ts), their
+    * payload packed in `obspack`, tagged `obsSide`; every event tagged
+    * the other side with a NULL pack; side-0 rows unioned first. The
+    * carries run over [[asofOrder]], where side 0 sorts first at equal
+    * ts: `obsSide` 0 gives <= matches (backward, nearest), 1 gives >=
+    * matches (forward). */
+  private def asofUnion(ev: DataFrame, obsSide: Int): DataFrame = {
+    val obs = ev
+      .filter(col("event_type") === "purchase" && col("user_id").isNotNull)
+      .groupBy(col("user_id"), col("ts"))
+      .agg(max(col("value")).as("obs_value"))
+    val build = obs.select(col("user_id"), col("ts"), lit(obsSide).as("side"),
+      lit(null).cast("bigint").as("event_id"),
+      struct(col("ts").as("obs_ts"), col("obs_value")).as("obspack"))
+    val probe = ev.select(col("user_id"), col("ts"), lit(1 - obsSide).as("side"),
+      col("event_id"),
+      lit(null).cast("struct<obs_ts:timestamp_ntz,obs_value:double>")
+        .as("obspack"))
+    if (obsSide == 0) build.unionByName(probe) else probe.unionByName(build)
+  }
+
+  /** One per-user (ts, side) sort; the backward and forward carries are
+    * two frames over it. */
+  private val asofOrder =
+    Window.partitionBy(col("user_id")).orderBy(col("ts"), col("side"))
+  private val carryBack = asofOrder.rowsBetween(Window.unboundedPreceding, 0)
+  private val carryNext = asofOrder.rowsBetween(0, Window.unboundedFollowing)
+
   /** J7b — TRUE as-of join (last preceding observation), the principled
     * variant of the reference's LIMIT-1-per-match weather join
     * (`sql/ml_feature_engineering.sql:192-213`) that [[joinAsofHour]]
@@ -146,30 +177,14 @@ object Joins {
     * deterministic; NULL-user observations are dropped to mirror the
     * equi-join's NULL-never-matches rule while NULL-user probe rows
     * survive with a NULL match. Oracle: DuckDB's native ASOF LEFT JOIN. */
-  val joinAsofTrue: Q = (s, d) => {
-    val ev = Tables.events(s, d)
-    val obs = ev
-      .filter(col("event_type") === "purchase" && col("user_id").isNotNull)
-      .groupBy(col("user_id"), col("ts"))
-      .agg(max(col("value")).as("obs_value"))
-    val build = obs.select(col("user_id"), col("ts"), lit(0).as("side"),
-      lit(null).cast("bigint").as("event_id"),
-      struct(col("ts").as("obs_ts"), col("obs_value")).as("obspack"))
-    val probe = ev.select(col("user_id"), col("ts"), lit(1).as("side"),
-      col("event_id"),
-      lit(null).cast("struct<obs_ts:timestamp_ntz,obs_value:double>")
-        .as("obspack"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("user_id")).orderBy(col("ts"), col("side"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
-    build.unionByName(probe)
-      .withColumn("m", last(col("obspack"), ignoreNulls = true).over(w))
+  val joinAsofTrue: Q = (s, d) =>
+    asofUnion(Tables.events(s, d), obsSide = 0)
+      .withColumn("m", last(col("obspack"), ignoreNulls = true).over(carryBack))
       .filter(col("side") === 1)
       .select(col("event_id"), col("user_id"), col("ts"),
               col("m.obs_ts").as("obs_ts"), col("m.obs_value").as("obs_value"))
       .orderBy(col("event_id"), col("user_id"), col("ts"), col("obs_ts"),
                col("obs_value"))
-  }
 
   /** J7c — as-of join WITH a staleness tolerance (pandas
     * `merge_asof(tolerance=...)` semantics): the last preceding
@@ -185,23 +200,8 @@ object Joins {
     * CASE. */
   val joinAsofTolerance: Q = (s, d) => {
     val tolSec = 3600L
-    val ev = Tables.events(s, d)
-    val obs = ev
-      .filter(col("event_type") === "purchase" && col("user_id").isNotNull)
-      .groupBy(col("user_id"), col("ts"))
-      .agg(max(col("value")).as("obs_value"))
-    val build = obs.select(col("user_id"), col("ts"), lit(0).as("side"),
-      lit(null).cast("bigint").as("event_id"),
-      struct(col("ts").as("obs_ts"), col("obs_value")).as("obspack"))
-    val probe = ev.select(col("user_id"), col("ts"), lit(1).as("side"),
-      col("event_id"),
-      lit(null).cast("struct<obs_ts:timestamp_ntz,obs_value:double>")
-        .as("obspack"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("user_id")).orderBy(col("ts"), col("side"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
-    build.unionByName(probe)
-      .withColumn("m", last(col("obspack"), ignoreNulls = true).over(w))
+    asofUnion(Tables.events(s, d), obsSide = 0)
+      .withColumn("m", last(col("obspack"), ignoreNulls = true).over(carryBack))
       .filter(col("side") === 1)
       .withColumn("fresh", col("m").isNotNull &&
         unix_timestamp(col("ts")) - unix_timestamp(col("m.obs_ts")) <= tolSec)
@@ -481,30 +481,14 @@ object Joins {
     * (>= semantics), preserving one user-partitioned sort and no join
     * explosion. DuckDB has no forward ASOF JOIN — the oracle replays
     * the identical window program with IGNORE NULLS first_value. */
-  val joinAsofForward: Q = (s, d) => {
-    val ev = Tables.events(s, d)
-    val obs = ev
-      .filter(col("event_type") === "purchase" && col("user_id").isNotNull)
-      .groupBy(col("user_id"), col("ts"))
-      .agg(max(col("value")).as("obs_value"))
-    val probe = ev.select(col("user_id"), col("ts"), lit(0).as("side"),
-      col("event_id"),
-      lit(null).cast("struct<obs_ts:timestamp_ntz,obs_value:double>")
-        .as("obspack"))
-    val build = obs.select(col("user_id"), col("ts"), lit(1).as("side"),
-      lit(null).cast("bigint").as("event_id"),
-      struct(col("ts").as("obs_ts"), col("obs_value")).as("obspack"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("user_id")).orderBy(col("ts"), col("side"))
-      .rowsBetween(0, org.apache.spark.sql.expressions.Window.unboundedFollowing)
-    probe.unionByName(build)
-      .withColumn("m", first(col("obspack"), ignoreNulls = true).over(w))
+  val joinAsofForward: Q = (s, d) =>
+    asofUnion(Tables.events(s, d), obsSide = 1)
+      .withColumn("m", first(col("obspack"), ignoreNulls = true).over(carryNext))
       .filter(col("side") === 0)
       .select(col("event_id"), col("user_id"), col("ts"),
               col("m.obs_ts").as("next_ts"), col("m.obs_value").as("next_value"))
       .orderBy(col("event_id"), col("user_id"), col("ts"), col("next_ts"),
                col("next_value"))
-  }
 
   /** J7e — NEAREST as-of join (pandas `merge_asof(direction='nearest')`):
     * each event matched to the closest purchase observation of the same
@@ -527,30 +511,12 @@ object Joins {
     * therefore harmless. The |Δt| comparison is integer epoch seconds
     * on both engines — no float boundary. */
   val joinAsofNearest: Q = (s, d) => {
-    val ev = Tables.events(s, d)
-    val obs = ev
-      .filter(col("event_type") === "purchase" && col("user_id").isNotNull)
-      .groupBy(col("user_id"), col("ts"))
-      .agg(max(col("value")).as("obs_value"))
-    val build = obs.select(col("user_id"), col("ts"), lit(0).as("side"),
-      lit(null).cast("bigint").as("event_id"),
-      struct(col("ts").as("obs_ts"), col("obs_value")).as("obspack"))
-    val probe = ev.select(col("user_id"), col("ts"), lit(1).as("side"),
-      col("event_id"),
-      lit(null).cast("struct<obs_ts:timestamp_ntz,obs_value:double>")
-        .as("obspack"))
-    val base = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("user_id")).orderBy(col("ts"), col("side"))
-    val wPrev = base.rowsBetween(
-      org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
-    val wNext = base.rowsBetween(
-      0, org.apache.spark.sql.expressions.Window.unboundedFollowing)
     val db = unix_timestamp(col("ts")) - unix_timestamp(col("p.obs_ts"))
     val dfw = unix_timestamp(col("n.obs_ts")) - unix_timestamp(col("ts"))
     val takePrev = col("p").isNotNull && (col("n").isNull || db <= dfw)
-    build.unionByName(probe)
-      .withColumn("p", last(col("obspack"), ignoreNulls = true).over(wPrev))
-      .withColumn("n", first(col("obspack"), ignoreNulls = true).over(wNext))
+    asofUnion(Tables.events(s, d), obsSide = 0)
+      .withColumn("p", last(col("obspack"), ignoreNulls = true).over(carryBack))
+      .withColumn("n", first(col("obspack"), ignoreNulls = true).over(carryNext))
       .filter(col("side") === 1)
       .withColumn("m", when(takePrev, col("p")).otherwise(col("n")))
       .select(col("event_id"), col("user_id"), col("ts"),
@@ -584,82 +550,78 @@ object Joins {
     "join_cross_series" -> joinCrossSeries,
     "join_update_from" -> joinUpdateFrom)
 
-  // DuckDB replay of hash60 (15 hex digits of md5 → bigint)
-  private def h60(x: String): String =
-    s"""list_reduce(list_transform(range(1, 16), i ->
-       |      CAST(strpos('0123456789abcdef', substr(md5($x), i, 1)) - 1 AS BIGINT)),
-       |      (a, b) -> a * 16 + b)""".stripMargin
+  /** `obs(user_id, ts, obs_value)`: the [[asofUnion]] observations,
+    * shared by the four as-of oracles. */
+  private val asofObsSql: String =
+    """obs AS (
+      |  SELECT user_id, ts, max(value) AS obs_value
+      |  FROM events WHERE event_type = 'purchase' AND user_id IS NOT NULL
+      |  GROUP BY 1, 2)""".stripMargin
 
   val oracles: Map[String, String] = Map(
     // nearest = the winner of the backward and forward carries over the
     // SAME union-window program, |Δt| in integer epoch seconds
     "join_asof_nearest" ->
-      """WITH obs AS (
-        |  SELECT user_id, ts, max(value) AS obs_value
-        |  FROM events WHERE event_type = 'purchase' AND user_id IS NOT NULL
-        |  GROUP BY 1, 2),
-        |u AS (
-        |  SELECT user_id, ts, 0 AS side, CAST(NULL AS BIGINT) AS event_id,
-        |    ts AS o_ts, obs_value AS o_val
-        |  FROM obs
-        |  UNION ALL
-        |  SELECT user_id, ts, 1, event_id,
-        |    CAST(NULL AS TIMESTAMP), CAST(NULL AS DOUBLE)
-        |  FROM events),
-        |m AS (
-        |  SELECT user_id, ts, side, event_id,
-        |    last_value(o_ts IGNORE NULLS) OVER wp AS p_ts,
-        |    last_value(o_val IGNORE NULLS) OVER wp AS p_val,
-        |    first_value(o_ts IGNORE NULLS) OVER wn AS n_ts,
-        |    first_value(o_val IGNORE NULLS) OVER wn AS n_val
-        |  FROM u
-        |  WINDOW wp AS (PARTITION BY user_id ORDER BY ts, side
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
-        |  wn AS (PARTITION BY user_id ORDER BY ts, side
-        |    ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)),
-        |p AS (
-        |  SELECT event_id, user_id, ts,
-        |    CAST(floor(EXTRACT(EPOCH FROM ts))
-        |      - floor(EXTRACT(EPOCH FROM p_ts)) AS BIGINT) AS db,
-        |    CAST(floor(EXTRACT(EPOCH FROM n_ts))
-        |      - floor(EXTRACT(EPOCH FROM ts)) AS BIGINT) AS df,
-        |    p_ts, p_val, n_ts, n_val,
-        |    (p_ts IS NOT NULL AND (n_ts IS NULL OR
-        |       floor(EXTRACT(EPOCH FROM ts)) - floor(EXTRACT(EPOCH FROM p_ts))
-        |       <= floor(EXTRACT(EPOCH FROM n_ts)) - floor(EXTRACT(EPOCH FROM ts))))
-        |      AS take_prev
-        |  FROM m WHERE side = 1)
-        |SELECT event_id, user_id, ts,
-        |  CASE WHEN take_prev THEN p_ts ELSE n_ts END AS obs_ts,
-        |  CASE WHEN take_prev THEN p_val ELSE n_val END AS obs_value,
-        |  CASE WHEN p_ts IS NULL AND n_ts IS NULL THEN CAST(NULL AS VARCHAR)
-        |       WHEN take_prev THEN 'backward' ELSE 'forward' END AS direction,
-        |  CASE WHEN take_prev THEN db ELSE df END AS delta_sec
-        |FROM p ORDER BY 1, 2, 3, 4, 5""".stripMargin,
+      s"""WITH $asofObsSql,
+         |u AS (
+         |  SELECT user_id, ts, 0 AS side, CAST(NULL AS BIGINT) AS event_id,
+         |    ts AS o_ts, obs_value AS o_val
+         |  FROM obs
+         |  UNION ALL
+         |  SELECT user_id, ts, 1, event_id,
+         |    CAST(NULL AS TIMESTAMP), CAST(NULL AS DOUBLE)
+         |  FROM events),
+         |m AS (
+         |  SELECT user_id, ts, side, event_id,
+         |    last_value(o_ts IGNORE NULLS) OVER wp AS p_ts,
+         |    last_value(o_val IGNORE NULLS) OVER wp AS p_val,
+         |    first_value(o_ts IGNORE NULLS) OVER wn AS n_ts,
+         |    first_value(o_val IGNORE NULLS) OVER wn AS n_val
+         |  FROM u
+         |  WINDOW wp AS (PARTITION BY user_id ORDER BY ts, side
+         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
+         |  wn AS (PARTITION BY user_id ORDER BY ts, side
+         |    ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)),
+         |p AS (
+         |  SELECT event_id, user_id, ts,
+         |    CAST(floor(EXTRACT(EPOCH FROM ts))
+         |      - floor(EXTRACT(EPOCH FROM p_ts)) AS BIGINT) AS db,
+         |    CAST(floor(EXTRACT(EPOCH FROM n_ts))
+         |      - floor(EXTRACT(EPOCH FROM ts)) AS BIGINT) AS df,
+         |    p_ts, p_val, n_ts, n_val,
+         |    (p_ts IS NOT NULL AND (n_ts IS NULL OR
+         |       floor(EXTRACT(EPOCH FROM ts)) - floor(EXTRACT(EPOCH FROM p_ts))
+         |       <= floor(EXTRACT(EPOCH FROM n_ts)) - floor(EXTRACT(EPOCH FROM ts))))
+         |      AS take_prev
+         |  FROM m WHERE side = 1)
+         |SELECT event_id, user_id, ts,
+         |  CASE WHEN take_prev THEN p_ts ELSE n_ts END AS obs_ts,
+         |  CASE WHEN take_prev THEN p_val ELSE n_val END AS obs_value,
+         |  CASE WHEN p_ts IS NULL AND n_ts IS NULL THEN CAST(NULL AS VARCHAR)
+         |       WHEN take_prev THEN 'backward' ELSE 'forward' END AS direction,
+         |  CASE WHEN take_prev THEN db ELSE df END AS delta_sec
+         |FROM p ORDER BY 1, 2, 3, 4, 5""".stripMargin,
     // no forward ASOF in DuckDB — identical union-and-carry window
     // program, IGNORE NULLS first_value over the following frame
     "join_asof_forward" ->
-      """WITH obs AS (
-        |  SELECT user_id, ts, max(value) AS obs_value
-        |  FROM events WHERE event_type = 'purchase' AND user_id IS NOT NULL
-        |  GROUP BY 1, 2),
-        |u AS (
-        |  SELECT user_id, ts, 0 AS side, event_id,
-        |    CAST(NULL AS TIMESTAMP) AS o_ts, CAST(NULL AS DOUBLE) AS o_val
-        |  FROM events
-        |  UNION ALL
-        |  SELECT user_id, ts, 1, CAST(NULL AS BIGINT), ts, obs_value
-        |  FROM obs),
-        |m AS (
-        |  SELECT user_id, ts, side, event_id,
-        |    first_value(o_ts IGNORE NULLS) OVER w AS next_ts,
-        |    first_value(o_val IGNORE NULLS) OVER w AS next_value
-        |  FROM u
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, side
-        |    ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING))
-        |SELECT event_id, user_id, ts, next_ts, next_value
-        |FROM m WHERE side = 0
-        |ORDER BY 1, 2, 3, 4, 5""".stripMargin,
+      s"""WITH $asofObsSql,
+         |u AS (
+         |  SELECT user_id, ts, 0 AS side, event_id,
+         |    CAST(NULL AS TIMESTAMP) AS o_ts, CAST(NULL AS DOUBLE) AS o_val
+         |  FROM events
+         |  UNION ALL
+         |  SELECT user_id, ts, 1, CAST(NULL AS BIGINT), ts, obs_value
+         |  FROM obs),
+         |m AS (
+         |  SELECT user_id, ts, side, event_id,
+         |    first_value(o_ts IGNORE NULLS) OVER w AS next_ts,
+         |    first_value(o_val IGNORE NULLS) OVER w AS next_value
+         |  FROM u
+         |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, side
+         |    ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING))
+         |SELECT event_id, user_id, ts, next_ts, next_value
+         |FROM m WHERE side = 0
+         |ORDER BY 1, 2, 3, 4, 5""".stripMargin,
     // the DPP layout/join collapses to a flat filtered aggregate
     "join_partition_prune" ->
       s"""SELECT CAST(ts AS DATE) AS day,
@@ -682,7 +644,7 @@ object Joins {
          |    CAST(floor(EXTRACT(EPOCH FROM CAST(day AS TIMESTAMP)))
          |      AS BIGINT) + hour * 3600 + 600 AS w_st
          |  FROM hrs
-         |  WHERE ${h60("'mw|' || strftime(day, '%Y-%m-%d') || '|' || hour")}
+         |  WHERE ${Dedup.hash60Sql("'mw|' || strftime(day, '%Y-%m-%d') || '|' || hour")}
          |    % 6 = 0),
          |m AS (
          |  SELECT w.day, w.hour, CAST(count(*) AS BIGINT) AS n_overlap
@@ -708,8 +670,8 @@ object Joins {
     "join_geo_grid" ->
       s"""WITH pts AS (
          |  SELECT c_custkey AS key,
-         |    ${h60("'gx|' || CAST(c_custkey AS VARCHAR)")} % 1000000 AS x,
-         |    ${h60("'gy|' || CAST(c_custkey AS VARCHAR)")} % 1000000 AS y
+         |    ${Dedup.hash60Sql("'gx|' || CAST(c_custkey AS VARCHAR)")} % 1000000 AS x,
+         |    ${Dedup.hash60Sql("'gy|' || CAST(c_custkey AS VARCHAR)")} % 1000000 AS y
          |  FROM customer)
          |SELECT a.key AS key_a, b.key AS key_b,
          |  (a.x - b.x) * (a.x - b.x) + (a.y - b.y) * (a.y - b.y) AS dist2
@@ -790,35 +752,29 @@ object Joins {
         |  FROM events GROUP BY 1) w ON date_trunc('hour', e.ts) = w.h
         |ORDER BY e.event_id""".stripMargin,
     "join_asof_tolerance" ->
-      """WITH obs AS (
-        |  SELECT user_id, ts, max(value) AS obs_value
-        |  FROM events WHERE event_type = 'purchase' AND user_id IS NOT NULL
-        |  GROUP BY 1, 2),
-        |j AS (
-        |  SELECT e.event_id, e.user_id, e.ts, o.ts AS raw_ts,
-        |    o.obs_value AS raw_value
-        |  FROM events e ASOF LEFT JOIN obs o
-        |    ON e.user_id = o.user_id AND e.ts >= o.ts),
-        |f AS (
-        |  SELECT *, raw_ts IS NOT NULL AND
-        |    CAST(floor(EXTRACT(EPOCH FROM ts)) AS BIGINT) -
-        |    CAST(floor(EXTRACT(EPOCH FROM raw_ts)) AS BIGINT) <= 3600
-        |    AS fresh
-        |  FROM j)
-        |SELECT event_id, user_id, ts,
-        |  CASE WHEN fresh THEN raw_ts END AS obs_ts,
-        |  CASE WHEN fresh THEN raw_value END AS obs_value,
-        |  coalesce(fresh, false) AS within_tolerance
-        |FROM f ORDER BY 1, 2, 3, 4, 5""".stripMargin,
+      s"""WITH $asofObsSql,
+         |j AS (
+         |  SELECT e.event_id, e.user_id, e.ts, o.ts AS raw_ts,
+         |    o.obs_value AS raw_value
+         |  FROM events e ASOF LEFT JOIN obs o
+         |    ON e.user_id = o.user_id AND e.ts >= o.ts),
+         |f AS (
+         |  SELECT *, raw_ts IS NOT NULL AND
+         |    CAST(floor(EXTRACT(EPOCH FROM ts)) AS BIGINT) -
+         |    CAST(floor(EXTRACT(EPOCH FROM raw_ts)) AS BIGINT) <= 3600
+         |    AS fresh
+         |  FROM j)
+         |SELECT event_id, user_id, ts,
+         |  CASE WHEN fresh THEN raw_ts END AS obs_ts,
+         |  CASE WHEN fresh THEN raw_value END AS obs_value,
+         |  coalesce(fresh, false) AS within_tolerance
+         |FROM f ORDER BY 1, 2, 3, 4, 5""".stripMargin,
     "join_asof_true" ->
-      """WITH obs AS (
-        |  SELECT user_id, ts, max(value) AS obs_value
-        |  FROM events WHERE event_type = 'purchase' AND user_id IS NOT NULL
-        |  GROUP BY 1, 2)
-        |SELECT e.event_id, e.user_id, e.ts, o.ts AS obs_ts, o.obs_value
-        |FROM events e ASOF LEFT JOIN obs o
-        |  ON e.user_id = o.user_id AND e.ts >= o.ts
-        |ORDER BY 1, 2, 3, 4, 5""".stripMargin,
+      s"""WITH $asofObsSql
+         |SELECT e.event_id, e.user_id, e.ts, o.ts AS obs_ts, o.obs_value
+         |FROM events e ASOF LEFT JOIN obs o
+         |  ON e.user_id = o.user_id AND e.ts >= o.ts
+         |ORDER BY 1, 2, 3, 4, 5""".stripMargin,
     "join_cross_series" ->
       """SELECT CAST(h.i AS INTEGER) AS h, CAST(m.i * 15 AS INTEGER) AS m,
         |  CAST(h.i * 100 + m.i * 15 AS INTEGER) AS time_key

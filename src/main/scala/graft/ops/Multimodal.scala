@@ -271,6 +271,57 @@ object Multimodal {
   private def dims(docId: Long, nChars: Int): (Int, Int) =
     (1 + math.floorMod(nChars, 12), 1 + math.floorMod(docId, 7L).toInt)
 
+  /** Per-frame widths for the multi-frame (video-like) container: frame
+    * i is a (1 + (nChars+i) mod 12) × (1 + docId mod 7) BMP, so frame
+    * SIZES differ and the container walk must parse each header's file
+    * size to advance — a misparse desynchronizes and fails loudly. */
+  private def frameWidths(docId: Long, nChars: Int): Array[Int] = {
+    val f = 1 + math.floorMod(docId, 4L).toInt
+    Array.tabulate(f)(i => 1 + math.floorMod(nChars + i, 12))
+  }
+
+  /** A document's UTF-8 bytes (empty for NULL text): the byte cycle
+    * every synthetic payload below is generated from. */
+  private def textBytes(text: String): Array[Byte] =
+    if (text == null) Array.empty[Byte]
+    else text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+
+  /** Pixel stream of a document's image and video frames: byte i is the
+    * text's byte i cycled (0 for empty text), so every frame restarts
+    * the cycle. */
+  private def framePix(tb: Array[Byte]): Int => Int =
+    i => if (tb.isEmpty) 0 else tb(i % tb.length) & 0xFF
+
+  /** The document's image: a [[dims]] BMP of its [[framePix]] stream. */
+  private def imageBmp(docId: Long, nChars: Int, text: String): Array[Byte] = {
+    val (w, h) = dims(docId, nChars)
+    Bmp.encode(w, h, framePix(textBytes(text)))
+  }
+
+  /** The document's video frames: one BMP per [[frameWidths]] width, all
+    * of the image's height; frame 0 is the document's image. */
+  private def frameBmps(docId: Long, nChars: Int, text: String)
+      : Array[Array[Byte]] = {
+    val (_, h) = dims(docId, nChars)
+    val pix = framePix(textBytes(text))
+    frameWidths(docId, nChars).map(w => Bmp.encode(w, h, pix))
+  }
+
+  /** The document's audio clip: 16-bit samples cycling its UTF-8 bytes,
+    * centered at 128 and scaled to the int16 range; channel count,
+    * sample rate, sample count and junk-chunk length all derived from
+    * the doc id and text length. */
+  private def wavClip(docId: Long, text: String): Array[Byte] = {
+    val tb = textBytes(text)
+    val ch = 1 + math.floorMod(docId, 2L).toInt
+    val rate = 8000 * (1 + math.floorMod(docId, 3L).toInt)
+    val n0 = 8 + tb.length + math.floorMod(docId, 32L).toInt
+    val nTotal = n0 + n0 % ch
+    val junkLen = math.floorMod(docId, 5L).toInt
+    Wav.encode(ch, rate, nTotal, junkLen,
+      j => if (tb.isEmpty) 0 else ((tb(j % tb.length) & 0xFF) - 128) * 256)
+  }
+
   /** E-mm — binary-column pipeline: synthesize a real BMP payload per
     * document, decode it partition-wise, emit decoded features. */
   val extMultimodal: Q = (s, d) => {
@@ -282,12 +333,7 @@ object Multimodal {
     val withPayload = docs
       .select(col("doc_id"), col("text"), col("n_chars")).as[(Long, String, Int)]
       .mapPartitions(_.map { case (id, text, nChars) =>
-        val tb = if (text == null) Array.empty[Byte]
-                 else text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-        val (w, h) = dims(id, nChars)
-        val payload = Bmp.encode(w, h,
-          i => if (tb.isEmpty) 0 else tb(i % tb.length) & 0xFF)
-        (id, payload)
+        (id, imageBmp(id, nChars, text))
       }).toDF("doc_id", "payload")
     // stage 2: decode — header parse + padded pixel walk, per partition
     val features = withPayload.as[(Long, Array[Byte])]
@@ -316,17 +362,8 @@ object Multimodal {
       .select(col("doc_id"), col("text"))
     val features = docs.as[(Long, String)]
       .mapPartitions(_.map { case (id, text) =>
-        val tb = if (text == null) Array.empty[Byte]
-                 else text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-        val ch = 1 + math.floorMod(id, 2L).toInt
-        val rate = 8000 * (1 + math.floorMod(id, 3L).toInt)
-        val n0 = 8 + tb.length + math.floorMod(id, 32L).toInt
-        val nTotal = n0 + n0 % ch
-        val junkLen = math.floorMod(id, 5L).toInt
-        val payload = Wav.encode(ch, rate, nTotal, junkLen,
-          j => if (tb.isEmpty) 0 else ((tb(j % tb.length) & 0xFF) - 128) * 256)
         // decode back: the feature extraction under test
-        val dec = Wav.decode(payload).getOrElse(
+        val dec = Wav.decode(wavClip(id, text)).getOrElse(
           sys.error(s"undecodable WAV for doc $id"))
         val durationMs = dec.nFrames * 1000L / dec.rate
         (id, dec.channels, dec.rate, dec.nFrames, durationMs, dec.sumAbs,
@@ -334,15 +371,6 @@ object Multimodal {
       }).toDF("doc_id", "channels", "sample_rate", "n_samp_frames",
               "duration_ms", "sum_abs", "peak")
     features.orderBy(col("doc_id"))
-  }
-
-  /** Per-frame widths for the multi-frame (video-like) container: frame
-    * i is a (1 + (nChars+i) mod 12) × (1 + docId mod 7) BMP, so frame
-    * SIZES differ and the container walk must parse each header's file
-    * size to advance — a misparse desynchronizes and fails loudly. */
-  private def frameWidths(docId: Long, nChars: Int): Array[Int] = {
-    val f = 1 + math.floorMod(docId, 4L).toInt
-    Array.tabulate(f)(i => 1 + math.floorMod(nChars + i, 12))
   }
 
   /** E-mm video — frame-sampling pipeline: the payload is a concatenation
@@ -357,13 +385,7 @@ object Multimodal {
       .select(col("doc_id"), col("text"), col("n_chars").cast("int").as("n_chars"))
     val features = docs.as[(Long, String, Int)]
       .mapPartitions(_.map { case (id, text, nChars) =>
-        val tb = if (text == null) Array.empty[Byte]
-                 else text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-        val h = 1 + math.floorMod(id, 7L).toInt
-        val pix = (i: Int) => if (tb.isEmpty) 0 else tb(i % tb.length) & 0xFF
-        val container = frameWidths(id, nChars)
-          .map(w => Bmp.encode(w, h, pix))
-          .reduce(_ ++ _)
+        val container = frameBmps(id, nChars, text).reduce(_ ++ _)
         // decode: walk frame boundaries, decode every 2nd frame only
         var off = 0
         var idx = 0
@@ -409,12 +431,7 @@ object Multimodal {
       .select(col("doc_id"), col("text"), col("n_chars").cast("int").as("n_chars"))
     docs.as[(Long, String, Int)]
       .mapPartitions(_.map { case (id, text, nChars) =>
-        val tb = if (text == null) Array.empty[Byte]
-                 else text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-        val (w, h) = dims(id, nChars)
-        val payload = Bmp.encode(w, h,
-          i => if (tb.isEmpty) 0 else tb(i % tb.length) & 0xFF)
-        val (dw, dh, pix) = Bmp.decodePixels(payload).getOrElse(
+        val (dw, dh, pix) = Bmp.decodePixels(imageBmp(id, nChars, text)).getOrElse(
           sys.error(s"undecodable payload for doc $id"))
         val w2 = math.max(dw / 2, 1); val h2 = math.max(dh / 2, 1)
         val small = Bmp.resizeNN(dw, dh, pix, w2, h2)
@@ -466,12 +483,7 @@ object Multimodal {
       .select(col("doc_id"), col("text"), col("n_chars").cast("int").as("n_chars"))
       .as[(Long, String, Int)]
       .mapPartitions(_.map { case (id, text, nChars) =>
-        val tb = if (text == null) Array.empty[Byte]
-                 else text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-        val (w, h) = dims(id, nChars)
-        val payload = Bmp.encode(w, h,
-          i => if (tb.isEmpty) 0 else tb(i % tb.length) & 0xFF)
-        val (dw, dh, pix) = Bmp.decodePixels(payload).getOrElse(
+        val (dw, dh, pix) = Bmp.decodePixels(imageBmp(id, nChars, text)).getOrElse(
           sys.error(s"undecodable payload for doc $id"))
         (id, aHash(dw, dh, pix))
       }).toDF("doc_id", "phash")
@@ -499,16 +511,7 @@ object Multimodal {
       .select(col("doc_id"), col("text"))
       .as[(Long, String)]
       .mapPartitions(_.map { case (id, text) =>
-        val tb = if (text == null) Array.empty[Byte]
-                 else text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-        val ch = 1 + math.floorMod(id, 2L).toInt
-        val rate = 8000 * (1 + math.floorMod(id, 3L).toInt)
-        val n0 = 8 + tb.length + math.floorMod(id, 32L).toInt
-        val nTotal = n0 + n0 % ch
-        val junkLen = math.floorMod(id, 5L).toInt
-        val payload = Wav.encode(ch, rate, nTotal, junkLen,
-          j => if (tb.isEmpty) 0 else ((tb(j % tb.length) & 0xFF) - 128) * 256)
-        val (_, _, samples) = Wav.decodeSamples(payload).getOrElse(
+        val (_, _, samples) = Wav.decodeSamples(wavClip(id, text)).getOrElse(
           sys.error(s"undecodable WAV for doc $id"))
         val n = samples.length
         val buckets = new Array[Long](64)
@@ -552,12 +555,8 @@ object Multimodal {
       .select(col("doc_id"), col("text"), col("n_chars").cast("int").as("n_chars"))
       .as[(Long, String, Int)]
       .mapPartitions(_.map { case (id, text, nChars) =>
-        val tb = if (text == null) Array.empty[Byte]
-                 else text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-        val h = 1 + math.floorMod(id, 7L).toInt
-        val pix = (i: Int) => if (tb.isEmpty) 0 else tb(i % tb.length) & 0xFF
-        val hashes = frameWidths(id, nChars).map { w =>
-          val (dw, dh, p) = Bmp.decodePixels(Bmp.encode(w, h, pix))
+        val hashes = frameBmps(id, nChars, text).map { bmp =>
+          val (dw, dh, p) = Bmp.decodePixels(bmp)
             .getOrElse(sys.error(s"undecodable frame for doc $id"))
           aHash(dw, dh, p)
         }
@@ -608,6 +607,34 @@ object Multimodal {
     "ext_image_phash" -> extImagePhash,
     "ext_image_resize" -> extImageResize)
 
+  /** `bytes`: the text's UTF-8 byte values as a 1-based BIGINT list,
+    * decoded from its upper-case hex dump `hx` of `len` bytes. */
+  private val hexBytesSql: String =
+    """list_transform(range(1, len + 1),
+      |      i -> CAST(16 * (strpos('0123456789ABCDEF', substr(hx, 2*i-1, 1)) - 1)
+      |              + (strpos('0123456789ABCDEF', substr(hx, 2*i, 1)) - 1) AS BIGINT)) AS bytes""".stripMargin
+
+  /** Gray mass of aHash cell `qv` in video frame `kv` (frame width
+    * depends on the frame index; each frame restarts the byte cycle);
+    * frame 0 is the document's image. */
+  private def fg(qv: String, kv: String): String = {
+    val w = s"(1 + (n_chars + $kv) % 12)"
+    val base = s"((($qv // 8) * hh // 8) * $w + (($qv % 8) * $w // 8)) * 3"
+    (0 to 2).map(c =>
+      s"bytes[CAST(($base + $c) % len AS INTEGER) + 1]").mkString(" + ")
+  }
+
+  /** The 64-char aHash bitstring of video frame `kv`: each cell's
+    * [[fg]] mass against the frame total, all-zero for empty text. */
+  private def frameHashSql(kv: String): String =
+    s"""CASE WHEN len = 0 THEN repeat('0', 64)
+       |      ELSE list_aggregate(list_transform(range(0, 64), q ->
+       |        CASE WHEN (${fg("q", kv)}) * 64 >
+       |          list_aggregate(list_transform(range(0, 64),
+       |                                        q2 -> ${fg("q2", kv)}), 'sum')
+       |        THEN '1' ELSE '0' END), 'string_agg', '')
+       |      END""".stripMargin
+
   /** The oracle recomputes the decoder's outputs from the generator's
     * closed form: dimensions from (n_chars, doc_id); sum_rgb from the
     * UTF-8 byte cycle — npix·3 positions cycling a len-byte text sum to
@@ -616,22 +643,8 @@ object Multimodal {
     * non-ASCII text too. */
   val oracles: Map[String, String] = Map(
     // image phash = the frame-0 formula (same width derivation), so one
-    // fg() replay serves both sides of the cross-modal join
-    "ext_image_frame_match" -> {
-      def fg(qv: String, kv: String): String = {
-        val w = s"(1 + (n_chars + $kv) % 12)"
-        val base = s"((($qv // 8) * hh // 8) * $w + (($qv % 8) * $w // 8)) * 3"
-        (0 to 2).map(c =>
-          s"bytes[CAST(($base + $c) % len AS INTEGER) + 1]").mkString(" + ")
-      }
-      def hashAt(kv: String): String =
-        s"""CASE WHEN len = 0 THEN repeat('0', 64)
-           |      ELSE list_aggregate(list_transform(range(0, 64), q ->
-           |        CASE WHEN (${fg("q", kv)}) * 64 >
-           |          list_aggregate(list_transform(range(0, 64),
-           |                                        q2 -> ${fg("q2", kv)}), 'sum')
-           |        THEN '1' ELSE '0' END), 'string_agg', '')
-           |      END""".stripMargin
+    // frameHashSql replay serves both sides of the cross-modal join
+    "ext_image_frame_match" ->
       s"""WITH h AS (
          |  SELECT doc_id, n_chars,
          |    CAST(1 + doc_id % 7 AS INTEGER) AS hh,
@@ -641,12 +654,10 @@ object Multimodal {
          |  FROM documents),
          |b AS (
          |  SELECT doc_id, n_chars, hh, f, len,
-         |    list_transform(range(1, len + 1),
-         |      i -> CAST(16 * (strpos('0123456789ABCDEF', substr(hx, 2*i-1, 1)) - 1)
-         |              + (strpos('0123456789ABCDEF', substr(hx, 2*i, 1)) - 1) AS BIGINT)) AS bytes
+         |    $hexBytesSql
          |  FROM h),
          |ph AS (
-         |  SELECT doc_id, list_transform(range(0, f), k -> ${hashAt("k")})
+         |  SELECT doc_id, list_transform(range(0, f), k -> ${frameHashSql("k")})
          |    AS hashes
          |  FROM b),
          |fr AS (SELECT doc_id AS vid_doc, unnest(hashes) AS phash FROM ph),
@@ -654,37 +665,34 @@ object Multimodal {
          |  SELECT phash, CAST(count(*) AS BIGINT) AS n_frame_matches,
          |    CAST(count(DISTINCT vid_doc) AS BIGINT) AS n_video_matches
          |  FROM fr GROUP BY 1),
-         |img AS (SELECT doc_id, ${hashAt("0")} AS phash FROM b)
+         |img AS (SELECT doc_id, ${frameHashSql("0")} AS phash FROM b)
          |SELECT img.doc_id, img.phash,
          |  CAST(coalesce(fs.n_frame_matches, 0) AS BIGINT) AS n_frame_matches,
          |  CAST(coalesce(fs.n_video_matches, 0) AS BIGINT) AS n_video_matches
-         |FROM img LEFT JOIN fs USING (phash) ORDER BY doc_id""".stripMargin
-    },
+         |FROM img LEFT JOIN fs USING (phash) ORDER BY doc_id""".stripMargin,
     "ext_multimodal" ->
-      """WITH h AS (
-        |  SELECT doc_id, lang,
-        |    CAST(1 + n_chars % 12 AS INTEGER) AS width,
-        |    CAST(1 + doc_id % 7 AS INTEGER) AS height,
-        |    coalesce(octet_length(encode(text)), 0) AS len,
-        |    coalesce(hex(encode(text)), '') AS hx
-        |  FROM documents),
-        |b AS (
-        |  SELECT doc_id, lang, width, height, len,
-        |    list_transform(range(1, len + 1),
-        |      i -> CAST(16 * (strpos('0123456789ABCDEF', substr(hx, 2*i-1, 1)) - 1)
-        |              + (strpos('0123456789ABCDEF', substr(hx, 2*i, 1)) - 1) AS BIGINT)) AS bytes
-        |  FROM h)
-        |SELECT doc_id, width, height,
-        |  CAST(width * height AS INTEGER) AS n_pixels,
-        |  CAST(CASE WHEN len = 0 THEN 0 ELSE
-        |    (CAST(width AS BIGINT) * height * 3 // len)
-        |      * coalesce(list_aggregate(bytes, 'sum'), 0)
-        |    + coalesce(list_aggregate(
-        |        bytes[1:CAST(CAST(width AS BIGINT) * height * 3 % len AS INTEGER)],
-        |        'sum'), 0)
-        |  END AS BIGINT) AS sum_rgb,
-        |  lang
-        |FROM b ORDER BY doc_id""".stripMargin,
+      s"""WITH h AS (
+         |  SELECT doc_id, lang,
+         |    CAST(1 + n_chars % 12 AS INTEGER) AS width,
+         |    CAST(1 + doc_id % 7 AS INTEGER) AS height,
+         |    coalesce(octet_length(encode(text)), 0) AS len,
+         |    coalesce(hex(encode(text)), '') AS hx
+         |  FROM documents),
+         |b AS (
+         |  SELECT doc_id, lang, width, height, len,
+         |    $hexBytesSql
+         |  FROM h)
+         |SELECT doc_id, width, height,
+         |  CAST(width * height AS INTEGER) AS n_pixels,
+         |  CAST(CASE WHEN len = 0 THEN 0 ELSE
+         |    (CAST(width AS BIGINT) * height * 3 // len)
+         |      * coalesce(list_aggregate(bytes, 'sum'), 0)
+         |    + coalesce(list_aggregate(
+         |        bytes[1:CAST(CAST(width AS BIGINT) * height * 3 % len AS INTEGER)],
+         |        'sum'), 0)
+         |  END AS BIGINT) AS sum_rgb,
+         |  lang
+         |FROM b ORDER BY doc_id""".stripMargin,
 
     // Closed form mirrors the WAV generator: sample j = (byte(j mod len)
     // - 128) * 256, so Σ|s| over n_total cycled positions and max|s| are
@@ -728,53 +736,43 @@ object Multimodal {
     // sum is the per-frame cycle sum and total_bytes is Σ header+padded
     // rows over ALL frames.
     "ext_frame_sample" ->
-      """WITH h AS (
-        |  SELECT doc_id,
-        |    CAST(1 + doc_id % 4 AS INTEGER) AS f,
-        |    CAST(1 + doc_id % 7 AS INTEGER) AS height,
-        |    CAST(n_chars AS INTEGER) AS n_chars,
-        |    coalesce(octet_length(encode(text)), 0) AS len,
-        |    hex(encode(text)) AS hx
-        |  FROM documents),
-        |b AS (
-        |  SELECT doc_id, f, height, n_chars, len,
-        |    list_transform(range(1, len + 1),
-        |      i -> CAST(16 * (strpos('0123456789ABCDEF', substr(hx, 2*i-1, 1)) - 1)
-        |              + (strpos('0123456789ABCDEF', substr(hx, 2*i, 1)) - 1) AS BIGINT)) AS bytes
-        |  FROM h),
-        |w AS (
-        |  SELECT doc_id, f, height, len, bytes,
-        |    list_transform(range(0, f), i -> 1 + (n_chars + i) % 12) AS ws
-        |  FROM b)
-        |SELECT doc_id,
-        |  f AS n_frames,
-        |  CAST((f + 1) // 2 AS INTEGER) AS n_sampled,
-        |  CAST(CASE WHEN len = 0 THEN 0 ELSE
-        |    list_aggregate(list_transform(list_filter(range(0, f), i -> i % 2 = 0),
-        |      i -> (CAST(ws[i + 1] AS BIGINT) * height * 3 // len)
-        |             * coalesce(list_aggregate(bytes, 'sum'), 0)
-        |           + coalesce(list_aggregate(
-        |               bytes[1:CAST(CAST(ws[i + 1] AS BIGINT) * height * 3 % len AS INTEGER)],
-        |               'sum'), 0)), 'sum')
-        |  END AS BIGINT) AS sum_rgb_sampled,
-        |  CAST(list_aggregate(list_transform(ws,
-        |      w -> 54 + (w * 3 + (4 - (w * 3) % 4) % 4) * height), 'sum')
-        |    AS INTEGER) AS total_bytes
-        |FROM w ORDER BY doc_id""".stripMargin,
+      s"""WITH h AS (
+         |  SELECT doc_id,
+         |    CAST(1 + doc_id % 4 AS INTEGER) AS f,
+         |    CAST(1 + doc_id % 7 AS INTEGER) AS height,
+         |    CAST(n_chars AS INTEGER) AS n_chars,
+         |    coalesce(octet_length(encode(text)), 0) AS len,
+         |    hex(encode(text)) AS hx
+         |  FROM documents),
+         |b AS (
+         |  SELECT doc_id, f, height, n_chars, len,
+         |    $hexBytesSql
+         |  FROM h),
+         |w AS (
+         |  SELECT doc_id, f, height, len, bytes,
+         |    list_transform(range(0, f), i -> 1 + (n_chars + i) % 12) AS ws
+         |  FROM b)
+         |SELECT doc_id,
+         |  f AS n_frames,
+         |  CAST((f + 1) // 2 AS INTEGER) AS n_sampled,
+         |  CAST(CASE WHEN len = 0 THEN 0 ELSE
+         |    list_aggregate(list_transform(list_filter(range(0, f), i -> i % 2 = 0),
+         |      i -> (CAST(ws[i + 1] AS BIGINT) * height * 3 // len)
+         |             * coalesce(list_aggregate(bytes, 'sum'), 0)
+         |           + coalesce(list_aggregate(
+         |               bytes[1:CAST(CAST(ws[i + 1] AS BIGINT) * height * 3 % len AS INTEGER)],
+         |               'sum'), 0)), 'sum')
+         |  END AS BIGINT) AS sum_rgb_sampled,
+         |  CAST(list_aggregate(list_transform(ws,
+         |      w -> 54 + (w * 3 + (4 - (w * 3) % 4) % 4) * height), 'sum')
+         |    AS INTEGER) AS total_bytes
+         |FROM w ORDER BY doc_id""".stripMargin,
 
     // Closed form mirrors decode∘resize: top-down pixel p channel c holds
     // byte (p*3+c) mod len of the text cycle; the NN kernel samples
     // src = (ty·h/h2, tx·w/w2), so the resized sum re-indexes the same
     // byte list at the sampled positions (tx and c flattened into k).
-    "ext_frame_phash" -> {
-      // gray mass of aHash cell `qv` in frame `kv` (frame width depends
-      // on the frame index; each frame restarts the byte cycle)
-      def fg(qv: String, kv: String): String = {
-        val w = s"(1 + (n_chars + $kv) % 12)"
-        val base = s"((($qv // 8) * hh // 8) * $w + (($qv % 8) * $w // 8)) * 3"
-        (0 to 2).map(c =>
-          s"bytes[CAST(($base + $c) % len AS INTEGER) + 1]").mkString(" + ")
-      }
+    "ext_frame_phash" ->
       s"""WITH h AS (
          |  SELECT doc_id, n_chars,
          |    CAST(1 + doc_id % 7 AS INTEGER) AS hh,
@@ -784,123 +782,108 @@ object Multimodal {
          |  FROM documents),
          |b AS (
          |  SELECT doc_id, n_chars, hh, f, len,
-         |    list_transform(range(1, len + 1),
-         |      i -> CAST(16 * (strpos('0123456789ABCDEF', substr(hx, 2*i-1, 1)) - 1)
-         |              + (strpos('0123456789ABCDEF', substr(hx, 2*i, 1)) - 1) AS BIGINT)) AS bytes
+         |    $hexBytesSql
          |  FROM h),
          |ph AS (
          |  SELECT doc_id, f,
          |    list_transform(range(0, f), k ->
-         |      CASE WHEN len = 0 THEN repeat('0', 64)
-         |      ELSE list_aggregate(list_transform(range(0, 64), q ->
-         |        CASE WHEN (${fg("q", "k")}) * 64 >
-         |          list_aggregate(list_transform(range(0, 64),
-         |                                        q2 -> ${fg("q2", "k")}), 'sum')
-         |        THEN '1' ELSE '0' END), 'string_agg', '')
-         |      END) AS hashes
+         |      ${frameHashSql("k")}) AS hashes
          |  FROM b)
          |SELECT doc_id, CAST(f AS INTEGER) AS n_frames,
          |  CAST(len(list_distinct(hashes)) AS INTEGER) AS n_unique_frames,
          |  len(list_distinct(hashes)) = 1 AS is_static
-         |FROM ph ORDER BY doc_id""".stripMargin
-    },
+         |FROM ph ORDER BY doc_id""".stripMargin,
     "ext_audio_phash" ->
-      """WITH h AS (
-        |  SELECT doc_id,
-        |    coalesce(octet_length(encode(text)), 0) AS len,
-        |    coalesce(hex(encode(text)), '') AS hx
-        |  FROM documents),
-        |b AS (
-        |  SELECT doc_id, len,
-        |    (8 + len + doc_id % 32)
-        |      + (8 + len + doc_id % 32) % (1 + doc_id % 2) AS nt,
-        |    list_transform(range(1, len + 1),
-        |      i -> CAST(16 * (strpos('0123456789ABCDEF', substr(hx, 2*i-1, 1)) - 1)
-        |              + (strpos('0123456789ABCDEF', substr(hx, 2*i, 1)) - 1) AS BIGINT)) AS bytes
-        |  FROM h),
-        |s AS (
-        |  SELECT doc_id, nt,
-        |    CASE WHEN len = 0
-        |    THEN list_transform(range(0, nt), j -> CAST(0 AS BIGINT))
-        |    ELSE list_transform(range(0, nt), j ->
-        |      abs((bytes[CAST(j % len AS INTEGER) + 1] - 128) * 256))
-        |    END AS sam
-        |  FROM b),
-        |bk AS (
-        |  SELECT doc_id,
-        |    list_transform(range(0, 64), k ->
-        |      coalesce(list_aggregate(
-        |        sam[CAST(k * nt // 64 AS INTEGER) + 1
-        |            : CAST((k + 1) * nt // 64 AS INTEGER)], 'sum'),
-        |        CAST(0 AS BIGINT))) AS buckets
-        |  FROM s),
-        |f AS (
-        |  SELECT doc_id,
-        |    list_aggregate(list_transform(range(0, 64), k ->
-        |      CASE WHEN buckets[k + 1] * 64 > list_aggregate(buckets, 'sum')
-        |           THEN '1' ELSE '0' END), 'string_agg', '') AS aphash
-        |  FROM bk)
-        |SELECT doc_id, aphash,
-        |  CAST(count(*) OVER (PARTITION BY aphash) AS BIGINT) AS n_same_hash
-        |FROM f ORDER BY doc_id""".stripMargin,
+      s"""WITH h AS (
+         |  SELECT doc_id,
+         |    coalesce(octet_length(encode(text)), 0) AS len,
+         |    coalesce(hex(encode(text)), '') AS hx
+         |  FROM documents),
+         |b AS (
+         |  SELECT doc_id, len,
+         |    (8 + len + doc_id % 32)
+         |      + (8 + len + doc_id % 32) % (1 + doc_id % 2) AS nt,
+         |    $hexBytesSql
+         |  FROM h),
+         |s AS (
+         |  SELECT doc_id, nt,
+         |    CASE WHEN len = 0
+         |    THEN list_transform(range(0, nt), j -> CAST(0 AS BIGINT))
+         |    ELSE list_transform(range(0, nt), j ->
+         |      abs((bytes[CAST(j % len AS INTEGER) + 1] - 128) * 256))
+         |    END AS sam
+         |  FROM b),
+         |bk AS (
+         |  SELECT doc_id,
+         |    list_transform(range(0, 64), k ->
+         |      coalesce(list_aggregate(
+         |        sam[CAST(k * nt // 64 AS INTEGER) + 1
+         |            : CAST((k + 1) * nt // 64 AS INTEGER)], 'sum'),
+         |        CAST(0 AS BIGINT))) AS buckets
+         |  FROM s),
+         |f AS (
+         |  SELECT doc_id,
+         |    list_aggregate(list_transform(range(0, 64), k ->
+         |      CASE WHEN buckets[k + 1] * 64 > list_aggregate(buckets, 'sum')
+         |           THEN '1' ELSE '0' END), 'string_agg', '') AS aphash
+         |  FROM bk)
+         |SELECT doc_id, aphash,
+         |  CAST(count(*) OVER (PARTITION BY aphash) AS BIGINT) AS n_same_hash
+         |FROM f ORDER BY doc_id""".stripMargin,
     "ext_image_phash" ->
-      """WITH h AS (
-        |  SELECT doc_id,
-        |    CAST(1 + n_chars % 12 AS INTEGER) AS w,
-        |    CAST(1 + doc_id % 7 AS INTEGER) AS hh,
-        |    coalesce(octet_length(encode(text)), 0) AS len,
-        |    coalesce(hex(encode(text)), '') AS hx
-        |  FROM documents),
-        |b AS (
-        |  SELECT doc_id, w, hh, len,
-        |    list_transform(range(1, len + 1),
-        |      i -> CAST(16 * (strpos('0123456789ABCDEF', substr(hx, 2*i-1, 1)) - 1)
-        |              + (strpos('0123456789ABCDEF', substr(hx, 2*i, 1)) - 1) AS BIGINT)) AS bytes
-        |  FROM h),
-        |g AS (
-        |  SELECT doc_id,
-        |    CASE WHEN len = 0
-        |    THEN list_transform(range(0, 64), k -> CAST(0 AS BIGINT))
-        |    ELSE list_transform(range(0, 64), k ->
-        |      bytes[CAST((((k // 8) * hh // 8) * w + ((k % 8) * w // 8)) * 3
-        |                 % len AS INTEGER) + 1]
-        |    + bytes[CAST(((((k // 8) * hh // 8) * w + ((k % 8) * w // 8)) * 3 + 1)
-        |                 % len AS INTEGER) + 1]
-        |    + bytes[CAST(((((k // 8) * hh // 8) * w + ((k % 8) * w // 8)) * 3 + 2)
-        |                 % len AS INTEGER) + 1])
-        |    END AS grays
-        |  FROM b),
-        |p AS (
-        |  SELECT doc_id,
-        |    list_aggregate(list_transform(range(0, 64), k ->
-        |      CASE WHEN grays[k + 1] * 64 > list_aggregate(grays, 'sum')
-        |           THEN '1' ELSE '0' END), 'string_agg', '') AS phash
-        |  FROM g)
-        |SELECT doc_id, phash,
-        |  CAST(count(*) OVER (PARTITION BY phash) AS BIGINT) AS n_same_hash
-        |FROM p ORDER BY doc_id""".stripMargin,
+      s"""WITH h AS (
+         |  SELECT doc_id,
+         |    CAST(1 + n_chars % 12 AS INTEGER) AS w,
+         |    CAST(1 + doc_id % 7 AS INTEGER) AS hh,
+         |    coalesce(octet_length(encode(text)), 0) AS len,
+         |    coalesce(hex(encode(text)), '') AS hx
+         |  FROM documents),
+         |b AS (
+         |  SELECT doc_id, w, hh, len,
+         |    $hexBytesSql
+         |  FROM h),
+         |g AS (
+         |  SELECT doc_id,
+         |    CASE WHEN len = 0
+         |    THEN list_transform(range(0, 64), k -> CAST(0 AS BIGINT))
+         |    ELSE list_transform(range(0, 64), k ->
+         |      bytes[CAST((((k // 8) * hh // 8) * w + ((k % 8) * w // 8)) * 3
+         |                 % len AS INTEGER) + 1]
+         |    + bytes[CAST(((((k // 8) * hh // 8) * w + ((k % 8) * w // 8)) * 3 + 1)
+         |                 % len AS INTEGER) + 1]
+         |    + bytes[CAST(((((k // 8) * hh // 8) * w + ((k % 8) * w // 8)) * 3 + 2)
+         |                 % len AS INTEGER) + 1])
+         |    END AS grays
+         |  FROM b),
+         |p AS (
+         |  SELECT doc_id,
+         |    list_aggregate(list_transform(range(0, 64), k ->
+         |      CASE WHEN grays[k + 1] * 64 > list_aggregate(grays, 'sum')
+         |           THEN '1' ELSE '0' END), 'string_agg', '') AS phash
+         |  FROM g)
+         |SELECT doc_id, phash,
+         |  CAST(count(*) OVER (PARTITION BY phash) AS BIGINT) AS n_same_hash
+         |FROM p ORDER BY doc_id""".stripMargin,
     "ext_image_resize" ->
-      """WITH h AS (
-        |  SELECT doc_id,
-        |    CAST(1 + n_chars % 12 AS INTEGER) AS w,
-        |    CAST(1 + doc_id % 7 AS INTEGER) AS hh,
-        |    coalesce(octet_length(encode(text)), 0) AS len,
-        |    hex(encode(text)) AS hx
-        |  FROM documents),
-        |b AS (
-        |  SELECT doc_id, w, hh, len,
-        |    greatest(w // 2, 1) AS w2, greatest(hh // 2, 1) AS h2,
-        |    list_transform(range(1, len + 1),
-        |      i -> CAST(16 * (strpos('0123456789ABCDEF', substr(hx, 2*i-1, 1)) - 1)
-        |              + (strpos('0123456789ABCDEF', substr(hx, 2*i, 1)) - 1) AS BIGINT)) AS bytes
-        |  FROM h)
-        |SELECT doc_id, w AS src_w, hh AS src_h,
-        |  CAST(w2 AS INTEGER) AS dst_w, CAST(h2 AS INTEGER) AS dst_h,
-        |  CAST(CASE WHEN len = 0 THEN 0 ELSE
-        |    list_aggregate(flatten(list_transform(range(0, h2), ty ->
-        |      list_transform(range(0, w2 * 3), k ->
-        |        bytes[CAST((((ty * hh // h2) * w + (k // 3) * w // w2) * 3 + k % 3)
-        |          % len AS INTEGER) + 1]))), 'sum')
-        |  END AS BIGINT) AS sum_rgb_resized
-        |FROM b ORDER BY doc_id""".stripMargin)
+      s"""WITH h AS (
+         |  SELECT doc_id,
+         |    CAST(1 + n_chars % 12 AS INTEGER) AS w,
+         |    CAST(1 + doc_id % 7 AS INTEGER) AS hh,
+         |    coalesce(octet_length(encode(text)), 0) AS len,
+         |    hex(encode(text)) AS hx
+         |  FROM documents),
+         |b AS (
+         |  SELECT doc_id, w, hh, len,
+         |    greatest(w // 2, 1) AS w2, greatest(hh // 2, 1) AS h2,
+         |    $hexBytesSql
+         |  FROM h)
+         |SELECT doc_id, w AS src_w, hh AS src_h,
+         |  CAST(w2 AS INTEGER) AS dst_w, CAST(h2 AS INTEGER) AS dst_h,
+         |  CAST(CASE WHEN len = 0 THEN 0 ELSE
+         |    list_aggregate(flatten(list_transform(range(0, h2), ty ->
+         |      list_transform(range(0, w2 * 3), k ->
+         |        bytes[CAST((((ty * hh // h2) * w + (k // 3) * w // w2) * 3 + k % 3)
+         |          % len AS INTEGER) + 1]))), 'sum')
+         |  END AS BIGINT) AS sum_rgb_resized
+         |FROM b ORDER BY doc_id""".stripMargin)
 }

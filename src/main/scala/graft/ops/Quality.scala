@@ -318,15 +318,11 @@ object Quality {
     // (a crossJoin agg would re-derive the whole tree lineage a second
     // time and plan a BroadcastNestedLoopJoin — the extDomainReweight
     // lesson; the unpartitioned window sorts shard-count rows only)
-    val wAll = org.apache.spark.sql.expressions.Window
-      .partitionBy(lit(1))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-                   org.apache.spark.sql.expressions.Window.unboundedFollowing)
     shardRoots
       .withColumn("dataset_root",
         md5(array_join(transform(
           array_sort(collect_list(struct(col("shard"), col("shard_root")))
-            .over(wAll)),
+            .over(wholeFrame)),
           x => x.getField("shard_root")), "")))
       .select(col("shard"), col("n_docs"), col("n_segments"),
               col("shard_root"), col("dataset_root"))
@@ -342,12 +338,6 @@ object Quality {
     "ext_keep_best" -> extKeepBest,
     "dq_report" -> dqReport,
     "ext_dedup_pipeline" -> extDedupPipeline)
-
-  // hash60 replay (15 hex digits of md5 → bigint), as in Sampling's oracles
-  private def h60q(x: String): String =
-    s"""list_reduce(list_transform(range(1, 16), i ->
-       |      CAST(strpos('0123456789abcdef', substr(md5($x), i, 1)) - 1 AS BIGINT)),
-       |      (a, b) -> a * 16 + b)""".stripMargin
 
   val oracles: Map[String, String] = Map(
     // same four cross-multiplied predicates as the ablation oracle,
@@ -393,7 +383,7 @@ object Quality {
       s"""WITH d AS (
          |  SELECT doc_id,
          |    md5(CAST(doc_id AS VARCHAR) || '|' || text) AS dig,
-         |    ${h60q("'ms|' || CAST(doc_id AS VARCHAR)")} % 8 AS shard
+         |    ${Dedup.hash60Sql("'ms|' || CAST(doc_id AS VARCHAR)")} % 8 AS shard
          |  FROM documents),
          |r AS (
          |  SELECT shard, dig,
@@ -460,8 +450,8 @@ object Quality {
          |  WHERE ${TextAnalysis.qualityExprSql("text")} >= 0.6),
          |sp AS (
          |  SELECT source,
-         |    CASE WHEN ${h60q("'split|' || doc_id")} % 10 <= 7 THEN 'train'
-         |         WHEN ${h60q("'split|' || doc_id")} % 10 = 8 THEN 'val'
+         |    CASE WHEN ${Dedup.hash60Sql("'split|' || doc_id")} % 10 <= 7 THEN 'train'
+         |         WHEN ${Dedup.hash60Sql("'split|' || doc_id")} % 10 = 8 THEN 'val'
          |         ELSE 'test' END AS split,
          |    CAST(len(string_split(text, ' ')) AS BIGINT) AS ws, q
          |  FROM k)

@@ -650,16 +650,12 @@ object Sampling {
     * floor-divides in BIGINT; token mass ≲ 10¹³ even at 100 TB so
     * tokens·10⁶ fits comfortably. */
   val extDomainReweight: Q = (s, d) => {
-    val wAll = org.apache.spark.sql.expressions.Window
-      .partitionBy(lit(1))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-                   org.apache.spark.sql.expressions.Window.unboundedFollowing)
     Tables.documents(s, d)
       .select(col("source"), size(split(col("text"), " ")).cast("long").as("ntok"))
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"), sum(col("ntok")).as("n_tokens"))
-      .withColumn("tot", sum(col("n_tokens")).over(wAll))
-      .withColumn("nsrc", count(lit(1)).over(wAll))
+      .withColumn("tot", sum(col("n_tokens")).over(wholeFrame))
+      .withColumn("nsrc", count(lit(1)).over(wholeFrame))
       .select(col("source"), col("n_docs"), col("n_tokens"),
               expr("n_tokens * 1000000 div tot").as("share_ppm"),
               // uniform target: each source should contribute tot/nsrc
@@ -723,20 +719,16 @@ object Sampling {
     * sources × langs × length buckets), then a whole-frame window
     * over that bounded frame. Integer-exact throughout. */
   val extKAnon: Q = (s, d) => {
-    val wAll = org.apache.spark.sql.expressions.Window
-      .partitionBy(lit(1))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-                   org.apache.spark.sql.expressions.Window.unboundedFollowing)
     Tables.documents(s, d)
       .select(col("source"), col("lang"),
               expr("n_chars div 100").as("len_bucket"))
       .groupBy(col("source"), col("lang"), col("len_bucket"))
       .agg(count(lit(1)).as("class_size"))
-      .withColumn("min_class", min(col("class_size")).over(wAll))
-      .withColumn("total", sum(col("class_size")).over(wAll))
+      .withColumn("min_class", min(col("class_size")).over(wholeFrame))
+      .withColumn("total", sum(col("class_size")).over(wholeFrame))
       .withColumn("risk_docs",
         sum(when(col("class_size") < 5, col("class_size")).otherwise(0L))
-          .over(wAll))
+          .over(wholeFrame))
       .filter(col("class_size") < 5)
       .select(col("source"), col("lang"), col("len_bucket"),
               col("class_size"), col("min_class"),
@@ -835,17 +827,13 @@ object Sampling {
     * window over the mixture-grain frame (a handful of rows regardless
     * of corpus size — same spelling as [[extDomainReweight]]). */
   val extMixtureEgd: Q = (s, d) => {
-    val wAll = org.apache.spark.sql.expressions.Window
-      .partitionBy(lit(1))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-                   org.apache.spark.sql.expressions.Window.unboundedFollowing)
     Tables.documents(s, d)
       .select(col("source"),
               size(split(col("text"), " ")).cast("long").as("ntok"))
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"), sum(col("ntok")).as("n_tokens"))
-      .withColumn("tot_docs", sum(col("n_docs")).over(wAll))
-      .withColumn("tot_tokens", sum(col("n_tokens")).over(wAll))
+      .withColumn("tot_docs", sum(col("n_docs")).over(wholeFrame))
+      .withColumn("tot_tokens", sum(col("n_tokens")).over(wholeFrame))
       .withColumn("mean_tok_x1000", expr("n_tokens * 1000 div n_docs"))
       .withColumn("corpus_x1000", expr("tot_tokens * 1000 div tot_docs"))
       // non-negative numerator, then recenter: mean*8 div corpus in
@@ -858,7 +846,7 @@ object Sampling {
           expr("mean_tok_x1000 * 8 div corpus_x1000") - 8L)))
       .withColumn("weight",
         expr("shiftleft(CAST(1 AS BIGINT), CAST(excess_step + 8 AS INT))"))
-      .withColumn("sum_w", sum(col("weight")).over(wAll))
+      .withColumn("sum_w", sum(col("weight")).over(wholeFrame))
       .select(col("source"), col("n_docs"), col("mean_tok_x1000"),
               col("excess_step"), col("weight"),
               expr("weight * 1000000 div sum_w").as("mix_ppm"))
@@ -891,13 +879,6 @@ object Sampling {
     "ext_dsir_weights" -> extDsirWeights,
     "ext_dataset_card" -> extDatasetCard)
 
-  // DuckDB replay of hash60 (15 hex digits of md5 → bigint), shared by
-  // the three oracles below.
-  private def h60(x: String): String =
-    s"""list_reduce(list_transform(range(1, 16), i ->
-       |      CAST(strpos('0123456789abcdef', substr(md5($x), i, 1)) - 1 AS BIGINT)),
-       |      (a, b) -> a * 16 + b)""".stripMargin
-
   val oracles: Map[String, String] = Map(
     // DSIR: identical hashed-unigram count models (h60 buckets), the
     // bucket log-ratio quantized to micro-nats at FEATURE grain (floor
@@ -907,7 +888,7 @@ object Sampling {
     // reductions, split-sign floor-divide normalizations
     "ext_jsd_domains" ->
       s"""WITH tok AS (
-         |  SELECT source, ${h60("'jsd|' || tok")} % 64 AS bucket
+         |  SELECT source, ${Dedup.hash60Sql("'jsd|' || tok")} % 64 AS bucket
          |  FROM (SELECT source, unnest(string_split(lower(text), ' ')) AS tok
          |        FROM documents)),
          |c AS (SELECT source, bucket, CAST(count(*) AS BIGINT) AS n
@@ -951,7 +932,7 @@ object Sampling {
     "ext_dsir_weights" ->
       s"""WITH tb AS (
          |  SELECT doc_id, lang,
-         |    ${h60("'dsir|' || tok")} % 64 AS bucket
+         |    ${Dedup.hash60Sql("'dsir|' || tok")} % 64 AS bucket
          |  FROM (SELECT doc_id, lang,
          |          unnest(string_split(lower(text), ' ')) AS tok
          |        FROM documents)),
@@ -989,15 +970,15 @@ object Sampling {
          |  SELECT source, n_docs, clipped_sum, true_sum,
          |    greatest(0, clipped_sum + 1000 * (
          |      greatest(0, 20 - length(bin(
-         |        ${h60("'dpm1|' || source")} % 1048576 + 1))) -
+         |        ${Dedup.hash60Sql("'dpm1|' || source")} % 1048576 + 1))) -
          |      greatest(0, 20 - length(bin(
-         |        ${h60("'dpm2|' || source")} % 1048576 + 1)))))
+         |        ${Dedup.hash60Sql("'dpm2|' || source")} % 1048576 + 1)))))
          |      AS noisy_sum,
          |    greatest(1, n_docs +
          |      greatest(0, 20 - length(bin(
-         |        ${h60("'dpm3|' || source")} % 1048576 + 1))) -
+         |        ${Dedup.hash60Sql("'dpm3|' || source")} % 1048576 + 1))) -
          |      greatest(0, 20 - length(bin(
-         |        ${h60("'dpm4|' || source")} % 1048576 + 1))))
+         |        ${Dedup.hash60Sql("'dpm4|' || source")} % 1048576 + 1))))
          |      AS noisy_n
          |  FROM c)
          |SELECT source, n_docs, clipped_sum, true_sum,
@@ -1066,10 +1047,10 @@ object Sampling {
          |g AS (
          |  SELECT source, CAST(len_bucket AS BIGINT) AS len_bucket, n_docs,
          |    greatest(0, 20 - length(bin(
-         |      ${h60("'dph1|' || source || '|' || CAST(len_bucket AS VARCHAR)")}
+         |      ${Dedup.hash60Sql("'dph1|' || source || '|' || CAST(len_bucket AS VARCHAR)")}
          |      % 1048576 + 1))) AS g1,
          |    greatest(0, 20 - length(bin(
-         |      ${h60("'dph2|' || source || '|' || CAST(len_bucket AS VARCHAR)")}
+         |      ${Dedup.hash60Sql("'dph2|' || source || '|' || CAST(len_bucket AS VARCHAR)")}
          |      % 1048576 + 1))) AS g2
          |  FROM c)
          |SELECT source, len_bucket, n_docs, CAST(g1 AS BIGINT) AS g1,
@@ -1086,9 +1067,9 @@ object Sampling {
          |g AS (
          |  SELECT source, n_docs,
          |    greatest(0, 20 - length(bin(
-         |      ${h60("'dp1|' || source")} % 1048576 + 1))) AS g1,
+         |      ${Dedup.hash60Sql("'dp1|' || source")} % 1048576 + 1))) AS g1,
          |    greatest(0, 20 - length(bin(
-         |      ${h60("'dp2|' || source")} % 1048576 + 1))) AS g2
+         |      ${Dedup.hash60Sql("'dp2|' || source")} % 1048576 + 1))) AS g2
          |  FROM c)
          |SELECT source, n_docs, CAST(g1 AS BIGINT) AS g1,
          |  CAST(g2 AS BIGINT) AS g2,
@@ -1146,8 +1127,8 @@ object Sampling {
       s"""WITH b AS (
          |  SELECT doc_id,
          |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok,
-         |    ${h60("'eshard|' || doc_id")} % 8 AS shard_id,
-         |    ${h60("'ord|' || doc_id")} AS ordh
+         |    ${Dedup.hash60Sql("'eshard|' || doc_id")} % 8 AS shard_id,
+         |    ${Dedup.hash60Sql("'ord|' || doc_id")} AS ordh
          |  FROM documents),
          |c AS (
          |  SELECT shard_id, n_tok,
@@ -1165,7 +1146,7 @@ object Sampling {
          |  n_tokens * 1000 // (((n_tokens - 1) // 512 + 1) * 512) AS util_pm
          |FROM g ORDER BY shard_id""".stripMargin,
     "ext_shard_assign" ->
-      s"""SELECT ${h60("'shard|' || doc_id")} % 64 AS shard_id,
+      s"""SELECT ${Dedup.hash60Sql("'shard|' || doc_id")} % 64 AS shard_id,
          |  CAST(count(*) AS BIGINT) AS n_docs,
          |  CAST(SUM(CAST(len(string_split(text, ' ')) AS BIGINT)) AS BIGINT)
          |    AS n_tokens,
@@ -1175,7 +1156,7 @@ object Sampling {
       s"""WITH r AS (
          |  SELECT source, doc_id, n_chars,
          |    CAST(row_number() OVER (PARTITION BY source
-         |      ORDER BY ${h60("'temp|' || doc_id")}, doc_id) AS BIGINT) AS rn,
+         |      ORDER BY ${Dedup.hash60Sql("'temp|' || doc_id")}, doc_id) AS BIGINT) AS rn,
          |    CAST(count(*) OVER (PARTITION BY source) AS BIGINT) AS n_docs
          |  FROM documents),
          |q AS (
@@ -1191,9 +1172,9 @@ object Sampling {
     "ext_mixture_interleave" ->
       s"""WITH sch AS (
          |  SELECT source, doc_id,
-         |    ${h60("'w|' || source")} % 8 + 1 AS wt,
+         |    ${Dedup.hash60Sql("'w|' || source")} % 8 + 1 AS wt,
          |    CAST(row_number() OVER (PARTITION BY source
-         |      ORDER BY ${h60("'ilv|' || doc_id")}, doc_id) AS BIGINT) AS rk
+         |      ORDER BY ${Dedup.hash60Sql("'ilv|' || doc_id")}, doc_id) AS BIGINT) AS rk
          |  FROM documents),
          |p AS (
          |  SELECT source, doc_id, wt, rk, (rk * 840) // wt AS pos
@@ -1280,8 +1261,8 @@ object Sampling {
     "ext_split_bias" ->
       s"""WITH tagged AS (
          |  SELECT doc_id, lang,
-         |    CASE WHEN ${h60("'split|' || doc_id")} % 10 <= 7 THEN 'train'
-         |         WHEN ${h60("'split|' || doc_id")} % 10 = 8 THEN 'val'
+         |    CASE WHEN ${Dedup.hash60Sql("'split|' || doc_id")} % 10 <= 7 THEN 'train'
+         |         WHEN ${Dedup.hash60Sql("'split|' || doc_id")} % 10 = 8 THEN 'val'
          |         ELSE 'test' END AS split
          |  FROM documents),
          |bs AS (SELECT split, lang, CAST(count(*) AS BIGINT) AS n
@@ -1306,23 +1287,23 @@ object Sampling {
          |       ELSE 'test' END AS split,
          |  CAST(count(*) AS BIGINT) AS n_docs
          |FROM (SELECT source,
-         |        ${h60("'split|' || doc_id")} % 10 AS b
+         |        ${Dedup.hash60Sql("'split|' || doc_id")} % 10 AS b
          |      FROM documents)
          |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
     "ext_stratified_sample" ->
       s"""SELECT doc_id, source, rn FROM (
          |  SELECT doc_id, source,
          |    CAST(row_number() OVER (PARTITION BY source
-         |      ORDER BY ${h60("'ss|' || doc_id")}, doc_id) AS INTEGER) AS rn
+         |      ORDER BY ${Dedup.hash60Sql("'ss|' || doc_id")}, doc_id) AS INTEGER) AS rn
          |  FROM documents)
          |WHERE rn <= 5 ORDER BY source, rn""".stripMargin,
 
     "ext_domain_mix" ->
       s"""WITH t AS (
          |  SELECT doc_id, source, n_chars,
-         |    ${h60("'rate|' || source")} % 1000 % 800 + 100 AS rate_pm,
-         |    ${h60("'mix|' || doc_id")} % 1000 <
-         |      ${h60("'rate|' || source")} % 1000 % 800 + 100 AS keep
+         |    ${Dedup.hash60Sql("'rate|' || source")} % 1000 % 800 + 100 AS rate_pm,
+         |    ${Dedup.hash60Sql("'mix|' || doc_id")} % 1000 <
+         |      ${Dedup.hash60Sql("'rate|' || source")} % 1000 % 800 + 100 AS keep
          |  FROM documents)
          |SELECT source, rate_pm,
          |  count(*) AS n_docs,
@@ -1350,7 +1331,7 @@ object Sampling {
       s"""WITH b AS (
          |  SELECT doc_id, source,
          |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok,
-         |    (${h60("'rtbf|' || doc_id")}) % 37 = 0 AS del
+         |    (${Dedup.hash60Sql("'rtbf|' || doc_id")}) % 37 = 0 AS del
          |  FROM documents),
          |c AS (
          |  SELECT *, CAST(SUM(n_tok) OVER (PARTITION BY source

@@ -44,15 +44,19 @@ object Similarity {
   private def cosine(a: Column, b: Column): Column =
     dotD(a, b) / (normD(a) * normD(b))
 
-  // deterministic hyperplanes: 6 planes × 64 dims from a fixed LCG
-  private[ops] val planes: Seq[Array[Double]] = {
+  /** Deterministic hyperplanes, 64 dims each, from a fixed LCG stream:
+    * `morePlanes(n)` is the first n of it. */
+  private[ops] def morePlanes(n: Int): Seq[Array[Double]] = {
     var x = 0x9E3779B97F4A7C15L
     def next(): Double = {
       x = x * 6364136223846793005L + 1442695040888963407L
       (x >>> 11).toDouble / (1L << 53).toDouble * 2.0 - 1.0
     }
-    Seq.fill(6)(Array.fill(64)(next()))
+    Seq.fill(n)(Array.fill(64)(next()))
   }
+
+  /** The [[lshSig]] planes: the stream's first 6. */
+  private[ops] val planes: Seq[Array[Double]] = morePlanes(6)
 
   private def planeLit(p: Array[Double]): Column = array(p.map(lit): _*)
 
@@ -185,26 +189,24 @@ object Similarity {
       .distinct() // a pair may match in several bands
   }
 
-  /** Deterministic hyperplanes beyond the first 6 — same LCG stream. */
-  private[ops] def morePlanes(n: Int): Seq[Array[Double]] = {
-    var x = 0x9E3779B97F4A7C15L
-    def next(): Double = {
-      x = x * 6364136223846793005L + 1442695040888963407L
-      (x >>> 11).toDouble / (1L << 53).toDouble * 2.0 - 1.0
-    }
-    Seq.fill(n)(Array.fill(64)(next()))
+  /** The LSH ANN sides shared by [[extAnnLsh]], [[extAnnRecall]] and
+    * [[extAnnMultiprobe]]: every vector with its [[lshSig]] bucket, as
+    * the vec_id < 10 queries `(qid, qe, qsig)` and the corpus
+    * `(cid, ce, csig)`. */
+  private def lshSides(s: SparkSession, d: String): (DataFrame, DataFrame) = {
+    graft.expressions.FloatVecDot.register(s)
+    val e = Tables.embeddings(s, d)
+      .select(col("vec_id"), col("embedding"), lshSig(col("embedding")).as("sig"))
+    (e.select(col("vec_id").as("qid"), col("embedding").as("qe"),
+              col("sig").as("qsig")).filter(col("qid") < 10),
+     e.select(col("vec_id").as("cid"), col("embedding").as("ce"),
+              col("sig").as("csig")))
   }
 
   /** E3c — LSH-bucketed ANN: same-bucket candidates only (the 100 TB
     * shape: equi-join on sig instead of a cross join), top-3 per query. */
   val extAnnLsh: Q = (s, d) => {
-    graft.expressions.FloatVecDot.register(s)
-    val e = Tables.embeddings(s, d)
-      .select(col("vec_id"), col("embedding"), lshSig(col("embedding")).as("sig"))
-    val q = e.select(col("vec_id").as("qid"), col("embedding").as("qe"),
-                     col("sig").as("qsig")).filter(col("qid") < 10)
-    val c = e.select(col("vec_id").as("cid"), col("embedding").as("ce"),
-                     col("sig").as("csig"))
+    val (q, c) = lshSides(s, d)
     val scored = broadcast(q)
       .join(c, col("qsig") === col("csig") && col("qid") =!= col("cid"))
       .select(col("qid"), col("cid"), col("qsig").as("bucket"),
@@ -286,17 +288,13 @@ object Similarity {
     * whole-frame TVD window. Cell count is the quantizer's, never the
     * corpus's. */
   val extEmbeddingDrift: Q = (s, d) => {
-    val wAll = org.apache.spark.sql.expressions.Window
-      .partitionBy(lit(1))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-                   org.apache.spark.sql.expressions.Window.unboundedFollowing)
     ivfAssigned(s, d)
       .select(col("vec_id"), col("list_id"))
       .groupBy(col("list_id"))
       .agg(sum(when(col("vec_id") % 2 === 0, 1L).otherwise(0L)).as("n_a"),
            sum(when(col("vec_id") % 2 === 1, 1L).otherwise(0L)).as("n_b"))
-      .withColumn("tot_a", sum(col("n_a")).over(wAll))
-      .withColumn("tot_b", sum(col("n_b")).over(wAll))
+      .withColumn("tot_a", sum(col("n_a")).over(wholeFrame))
+      .withColumn("tot_b", sum(col("n_b")).over(wholeFrame))
       // greatest(tot,1): an all-one-parity corpus leaves one snapshot
       // empty; unguarded, Spark's `div` yields NULL while DuckDB's `//`
       // errors — the same engine-divergence guard every other
@@ -304,7 +302,7 @@ object Similarity {
       .withColumn("share_a_ppm", expr("n_a * 1000000 div greatest(tot_a, 1)"))
       .withColumn("share_b_ppm", expr("n_b * 1000000 div greatest(tot_b, 1)"))
       .withColumn("abs_diff_ppm", abs(col("share_a_ppm") - col("share_b_ppm")))
-      .withColumn("sum_diff", sum(col("abs_diff_ppm")).over(wAll))
+      .withColumn("sum_diff", sum(col("abs_diff_ppm")).over(wholeFrame))
       .withColumn("tvd_ppm", expr("sum_diff div 2"))
       .select(col("list_id"), col("n_a"), col("n_b"),
               col("share_a_ppm"), col("share_b_ppm"), col("abs_diff_ppm"),
@@ -577,13 +575,7 @@ object Similarity {
     * window over the broadcast query batch; the audit grain is the
     * query batch, so the exact side stays bounded at any corpus size. */
   val extAnnRecall: Q = (s, d) => {
-    graft.expressions.FloatVecDot.register(s)
-    val e = Tables.embeddings(s, d)
-      .select(col("vec_id"), col("embedding"), lshSig(col("embedding")).as("sig"))
-    val q = e.select(col("vec_id").as("qid"), col("embedding").as("qe"),
-                     col("sig").as("qsig")).filter(col("qid") < 10)
-    val c = e.select(col("vec_id").as("cid"), col("embedding").as("ce"),
-                     col("sig").as("csig"))
+    val (q, c) = lshSides(s, d)
     recallAt5(q, c, broadcast(q)
       .join(c, col("qsig") === col("csig") && col("qid") =!= col("cid"))
       .select(col("qid"), col("cid"), cosine(col("qe"), col("ce")).as("cos")))
@@ -598,13 +590,7 @@ object Similarity {
     * cost-vs-recall trade directly legible: compare the two entries
     * row by row. */
   val extAnnMultiprobe: Q = (s, d) => {
-    graft.expressions.FloatVecDot.register(s)
-    val e = Tables.embeddings(s, d)
-      .select(col("vec_id"), col("embedding"), lshSig(col("embedding")).as("sig"))
-    val q = e.select(col("vec_id").as("qid"), col("embedding").as("qe"),
-                     col("sig").as("qsig")).filter(col("qid") < 10)
-    val c = e.select(col("vec_id").as("cid"), col("embedding").as("ce"),
-                     col("sig").as("csig"))
+    val (q, c) = lshSides(s, d)
     val probes = q.select(col("qid"), col("qe"),
       explode(array((Seq(0) ++ (0 until 6).map(1 << _)).map(m =>
         col("qsig").bitwiseXOR(lit(m))): _*)).as("probe"))
@@ -1163,6 +1149,32 @@ object Similarity {
        |${cosTop5Sql(annFrom, rn)},
        |$recallJoinSql""".stripMargin
 
+  /** `ranked(vec_id, embedding, seed_id, rn)`: the [[ivfRanked]] replay,
+    * every vector against the 16 seeds, rn = 1 its home list. Shared by
+    * ext_ivfpq_adc, ext_ivf_recall and ext_probe_curve. */
+  private val ivfRankedSql: String =
+    s"""ranked AS (
+       |  SELECT e.vec_id, e.embedding, s.vec_id AS seed_id,
+       |    row_number() OVER (PARTITION BY e.vec_id ORDER BY
+       |      ${cosSql("e.embedding", "s.embedding")} DESC, s.vec_id) AS rn
+       |  FROM embeddings e CROSS JOIN
+       |    (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 16) s)""".stripMargin
+
+  /** `assigned(vec_id, [embedding,] list_id)`: the [[ivfAssigned]]
+    * replay, each vector's nearest seed; `embedding` carries the vector
+    * along. Shared by ext_ann_ivf, ext_semdedup and ext_embedding_drift. */
+  private def ivfAssignedSql(embedding: Boolean): String = {
+    val (outer, inner) = if (embedding) (" embedding,", " e.embedding,") else ("", "")
+    s"""assigned AS (
+       |  SELECT vec_id,$outer seed_id AS list_id FROM (
+       |    SELECT e.vec_id,$inner s.vec_id AS seed_id,
+       |      row_number() OVER (PARTITION BY e.vec_id ORDER BY
+       |        ${cosSql("e.embedding", "s.embedding")} DESC, s.vec_id) AS rn
+       |    FROM embeddings e CROSS JOIN
+       |      (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 16) s)
+       |  WHERE rn = 1)""".stripMargin
+  }
+
   val oracles: Map[String, String] = Map(
     // same two-window ranking over the same exact cosines; each DCG term
     // rounded to 12 decimals and decimal-summed so the reduction is
@@ -1300,12 +1312,7 @@ object Similarity {
     // candidate's home cell is unique so each (qid, cid) pair appears
     // through exactly one probe
     "ext_ivfpq_adc" ->
-      s"""WITH ranked AS (
-         |  SELECT e.vec_id, e.embedding, s.vec_id AS seed_id,
-         |    row_number() OVER (PARTITION BY e.vec_id ORDER BY
-         |      ${cosSql("e.embedding", "s.embedding")} DESC, s.vec_id) AS rn
-         |  FROM embeddings e CROSS JOIN
-         |    (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 16) s),
+      s"""WITH $ivfRankedSql,
          |home AS (SELECT vec_id, seed_id AS list_id FROM ranked WHERE rn = 1),
          |probes AS (
          |  SELECT vec_id AS qid, seed_id AS plist,
@@ -1339,14 +1346,7 @@ object Similarity {
     // SemDeDup cell report: same coarse-assignment CTE, within-cell
     // lower-id neighbor EXISTS via a DISTINCT pair join
     "ext_semdedup" ->
-      s"""WITH assigned AS (
-         |  SELECT vec_id, embedding, seed_id AS list_id FROM (
-         |    SELECT e.vec_id, e.embedding, s.vec_id AS seed_id,
-         |      row_number() OVER (PARTITION BY e.vec_id ORDER BY
-         |        ${cosSql("e.embedding", "s.embedding")} DESC, s.vec_id) AS rn
-         |    FROM embeddings e CROSS JOIN
-         |      (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 16) s)
-         |  WHERE rn = 1),
+      s"""WITH ${ivfAssignedSql(embedding = true)},
          |dropped AS (
          |  SELECT DISTINCT a.list_id, b.vec_id AS idb
          |  FROM assigned a JOIN assigned b
@@ -1450,12 +1450,7 @@ object Similarity {
     "ext_ivf_recall" -> {
       val bfFrom = """q JOIN (SELECT vec_id AS cid, embedding AS ce
                      |                 FROM embeddings) ca ON qid <> cid""".stripMargin
-      s"""WITH ranked AS (
-         |  SELECT e.vec_id, e.embedding, s.vec_id AS seed_id,
-         |    row_number() OVER (PARTITION BY e.vec_id ORDER BY
-         |      ${cosSql("e.embedding", "s.embedding")} DESC, s.vec_id) AS rn
-         |  FROM embeddings e CROSS JOIN
-         |    (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 16) s),
+      s"""WITH $ivfRankedSql,
          |c AS (SELECT vec_id AS cid, embedding AS ce, seed_id AS list_id
          |      FROM ranked WHERE rn = 1),
          |q AS (SELECT vec_id AS qid, embedding AS qe FROM embeddings
@@ -1467,12 +1462,7 @@ object Similarity {
     // ann_ivf's assignment replay, probed at rn<=4, one candidate join
     // fanned to the four configs by the probe_rank <= probes filter
     "ext_probe_curve" ->
-      s"""WITH ranked AS (
-         |  SELECT e.vec_id, e.embedding, s.vec_id AS seed_id,
-         |    row_number() OVER (PARTITION BY e.vec_id ORDER BY
-         |      ${cosSql("e.embedding", "s.embedding")} DESC, s.vec_id) AS rn
-         |  FROM embeddings e CROSS JOIN
-         |    (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 16) s),
+      s"""WITH $ivfRankedSql,
          |c AS (SELECT vec_id AS cid, embedding AS ce, seed_id AS list_id
          |      FROM ranked WHERE rn = 1),
          |qp AS (SELECT vec_id AS qid, embedding AS qe, seed_id AS plist,
@@ -1520,14 +1510,7 @@ object Similarity {
     // ann_ivf's assignment replay reduced to cell-grain snapshot
     // occupancy (vec_id parity = snapshot id) + TVD window
     "ext_embedding_drift" ->
-      s"""WITH assigned AS (
-         |  SELECT vec_id, seed_id AS list_id FROM (
-         |    SELECT e.vec_id, s.vec_id AS seed_id,
-         |      row_number() OVER (PARTITION BY e.vec_id ORDER BY
-         |        ${cosSql("e.embedding", "s.embedding")} DESC, s.vec_id) AS rn
-         |    FROM embeddings e CROSS JOIN
-         |      (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 16) s)
-         |  WHERE rn = 1),
+      s"""WITH ${ivfAssignedSql(embedding = false)},
          |c AS (
          |  SELECT list_id,
          |    CAST(SUM(CASE WHEN vec_id % 2 = 0 THEN 1 ELSE 0 END) AS BIGINT)
@@ -1552,14 +1535,7 @@ object Similarity {
          |    AS tvd_ppm
          |FROM v ORDER BY list_id""".stripMargin,
     "ext_ann_ivf" ->
-      s"""WITH assigned AS (
-         |  SELECT vec_id, embedding, seed_id AS list_id FROM (
-         |    SELECT e.vec_id, e.embedding, s.vec_id AS seed_id,
-         |      row_number() OVER (PARTITION BY e.vec_id ORDER BY
-         |        ${cosSql("e.embedding", "s.embedding")} DESC, s.vec_id) AS rn
-         |    FROM embeddings e CROSS JOIN
-         |      (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 16) s)
-         |  WHERE rn = 1)
+      s"""WITH ${ivfAssignedSql(embedding = true)}
          |SELECT qid, cid, list_id, cos, rn FROM (
          |  SELECT qid, cid, list_id, cos, CAST(row_number() OVER (
          |    PARTITION BY qid ORDER BY cos DESC, cid) AS INTEGER) AS rn

@@ -21,38 +21,26 @@ object SqlSurface {
         Tables.table(s, sfDir, n).createOrReplaceTempView(n)
     }
 
-  /** Register only the views a query references — registerAll's 10 eager
-    * schema reads per invocation are waste when the query touches one
-    * table. */
-  private def q(tables: String*)(sql: String): Q = (s, d) => {
+  /** Run entry `name`'s own oracle text through `spark.sql`, registering
+    * only the views it references — registerAll's 10 eager schema reads
+    * per invocation are waste when the query touches one table. One
+    * text serves both engines: where the oracle pins a DuckDB dtype with
+    * `CAST(count(*) AS BIGINT)`, Spark's count is already BIGINT and
+    * SimplifyCasts drops the cast. */
+  private def q(name: String, tables: String*): Q = (s, d) => {
     tables.foreach {
       case "events" => Tables.events(s, d).createOrReplaceTempView("events")
       case n => Tables.table(s, d, n).createOrReplaceTempView(n)
     }
-    s.sql(sql)
+    s.sql(oracles(name))
   }
 
   /** Pricing-summary flagship, expressed as textual SQL. */
-  val sqlPricingSummary: Q = q("lineitem")(
-    """SELECT l_returnflag, l_linestatus,
-      |  count(*) AS n_rows,
-      |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-      |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) *
-      |    CAST(1.0 - l_discount AS DECIMAL(18,2))) AS DOUBLE) AS revenue
-      |FROM lineitem
-      |WHERE l_quantity > 5
-      |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)
+  val sqlPricingSummary: Q = q("sql_pricing_summary", "lineitem")
 
   /** Correlated scalar subquery in SQL — Catalyst decorrelates it into
     * the same aggregate-join the DataFrame form (J6) builds by hand. */
-  val sqlCorrelatedSubquery: Q = q("orders")(
-    """SELECT o_orderkey, o_custkey, o_totalprice
-      |FROM orders o
-      |WHERE o_totalprice > 2.0 * (
-      |  SELECT CAST(SUM(CAST(i.o_totalprice AS DECIMAL(18,2))) AS DOUBLE) /
-      |         count(*)
-      |  FROM orders i WHERE i.o_custkey = o.o_custkey)
-      |ORDER BY o_orderkey""".stripMargin)
+  val sqlCorrelatedSubquery: Q = q("sql_correlated_subquery", "orders")
 
   /** Explicit GROUPING SETS (the general form ROLLUP/CUBE specialize —
     * both already entries via `agg_rollup`/`agg_cube`): per-(status,
@@ -60,45 +48,20 @@ object SqlSurface {
     * aggregation before the expand — not three queries unioned.
     * `GROUPING()` disambiguates a genuine NULL group key from a
     * summarized one, exactly as the rollup/cube entries do. */
-  val sqlGroupingSets: Q = q("orders")(
-    """SELECT o_orderstatus, o_orderpriority,
-      |  CAST(GROUPING(o_orderstatus) AS INTEGER) AS g_status,
-      |  CAST(GROUPING(o_orderpriority) AS INTEGER) AS g_priority,
-      |  count(*) AS n_orders,
-      |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
-      |FROM orders
-      |GROUP BY GROUPING SETS ((o_orderstatus, o_orderpriority),
-      |                        (o_orderstatus), ())
-      |ORDER BY g_status, g_priority, o_orderstatus, o_orderpriority"""
-      .stripMargin)
+  val sqlGroupingSets: Q = q("sql_grouping_sets", "orders")
 
   /** EXISTS / NOT EXISTS correlated predicates — Catalyst's
     * RewritePredicateSubquery turns them into the semi/anti joins the
     * DataFrame entries (J4/J5) build by hand; this entry checks the SQL
     * path end-to-end: customers holding at least one >150k order but no
     * order below 5k. */
-  val sqlExists: Q = q("customer", "orders")(
-    """SELECT c_custkey, c_name
-      |FROM customer c
-      |WHERE EXISTS (SELECT 1 FROM orders o
-      |              WHERE o.o_custkey = c.c_custkey
-      |                AND o.o_totalprice > 150000)
-      |  AND NOT EXISTS (SELECT 1 FROM orders o
-      |                  WHERE o.o_custkey = c.c_custkey
-      |                    AND o.o_totalprice < 5000)
-      |ORDER BY c_custkey""".stripMargin)
+  val sqlExists: Q = q("sql_exists_not_exists", "customer", "orders")
 
   /** LATERAL correlated subquery — per-customer top-2 orders by price,
     * the classic top-N-per-group as its SQL-standard LATERAL spelling
     * (Catalyst decorrelates into the same WindowGroupLimit-able shape
     * the DataFrame rank entries use). */
-  val sqlLateral: Q = q("customer", "orders")(
-    """SELECT c.c_custkey, t.o_orderkey, t.o_totalprice
-      |FROM customer c,
-      |LATERAL (SELECT o_orderkey, o_totalprice FROM orders o
-      |         WHERE o.o_custkey = c.c_custkey
-      |         ORDER BY o_totalprice DESC, o_orderkey LIMIT 2) t
-      |ORDER BY c.c_custkey, t.o_totalprice DESC, t.o_orderkey""".stripMargin)
+  val sqlLateral: Q = q("sql_lateral_topn", "customer", "orders")
 
   /** WITH RECURSIVE (supported since Spark 4.0) — iterative reachability
     * over the event-type transition graph derived from the stream: all

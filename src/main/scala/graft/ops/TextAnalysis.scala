@@ -574,17 +574,13 @@ object TextAnalysis {
     * ratio against the round-0 mass, computed with a whole-frame
     * window over the (rounds+1)-row result. */
   val extBpeApply: Q = (s, d) => {
-    val wAll = org.apache.spark.sql.expressions.Window
-      .partitionBy(lit(1))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-                   org.apache.spark.sql.expressions.Window.unboundedFollowing)
     val (_, segs) = bpeRounds(s, d, 6, needSegs = true)
     segs.zipWithIndex.map { case (seg, t) =>
       seg.agg(sum(col("cnt")).as("n_tokens"))
         .select(lit(t.toLong).as("round"), col("n_tokens"))
     }.reduce(_ unionAll _)
       .filter(col("n_tokens").isNotNull)
-      .withColumn("max_tokens", max(col("n_tokens")).over(wAll))
+      .withColumn("max_tokens", max(col("n_tokens")).over(wholeFrame))
       .select(col("round"), col("n_tokens"),
               expr("max_tokens * 1000 div n_tokens")
                 .as("chars_per_token_x1000"))

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Tables
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -308,6 +309,20 @@ object Windows {
       .orderBy(col("event_type"), col("month"))
   }
 
+  /** Daily totals per event type as exact cent integers: `(event_type,
+    * day, svc)` with svc = Σ floor(value·100) — the exact-integer base
+    * of the daily-series entries ([[winEwma]], [[winMovingMedian]],
+    * [[winDrawdown]], [[winLinearInterp]], [[winRollingMad]]); each
+    * divides by 100 once, at output. */
+  private def dailyCents(s: SparkSession, d: String): DataFrame =
+    Tables.events(s, d)
+      .groupBy(col("event_type"), to_date(col("ts")).as("day"))
+      .agg(sum(floor(col("value") * 100).cast("long")).as("svc"))
+
+  /** Trailing 7-day frame over [[dailyCents]]. */
+  private val w7 = Window.partitionBy(col("event_type")).orderBy(col("day"))
+    .rowsBetween(-6, 0)
+
   /** W15 — exponential moving average (α = 1/2) of the daily value
     * total per event type over the trailing 7 observations — the
     * smoothed-trend line on every ops dashboard, and the one smoothing
@@ -322,9 +337,7 @@ object Windows {
     * state per key); the 7-lag expression is fixed-size codegen. */
   val winEwma: Q = (s, d) => {
     val w = Window.partitionBy(col("event_type")).orderBy(col("day"))
-    val daily = Tables.events(s, d)
-      .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-      .agg(sum(floor(col("value") * 100).cast("long")).as("svc"))
+    val daily = dailyCents(s, d)
     val lags = (0 to 6).map(k =>
       (lag(col("svc"), k).over(w).cast("double"), lit(math.pow(0.5, k))))
     val num = lags.map { case (x, wt) => coalesce(x * wt, lit(0.0)) }
@@ -354,18 +367,13 @@ object Windows {
     * unchanged: day × type cardinality in, day × type out; for frames of
     * thousands of rows the per-frame re-sort would motivate a sliding
     * order-statistic tree, but the operator contract stays this. */
-  val winMovingMedian: Q = (s, d) => {
-    val w7 = Window.partitionBy(col("event_type")).orderBy(col("day"))
-      .rowsBetween(-6, 0)
-    Tables.events(s, d)
-      .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-      .agg(sum(floor(col("value") * 100).cast("long")).as("svc"))
+  val winMovingMedian: Q = (s, d) =>
+    dailyCents(s, d)
       .select(col("event_type"), col("day"),
               (col("svc").cast("double") / 100.0).as("daily_total"),
               (percentile(col("svc"), lit(0.5)).over(w7) / 100.0)
                 .as("med7"))
       .orderBy(col("event_type"), col("day"))
-  }
 
   /** W19 — running-max drawdown: per event type, how far each day's
     * total sits below the best day seen so far, plus the worst such gap
@@ -380,9 +388,7 @@ object Windows {
   val winDrawdown: Q = (s, d) => {
     val wRun = Window.partitionBy(col("event_type")).orderBy(col("day"))
       .rowsBetween(Window.unboundedPreceding, 0)
-    Tables.events(s, d)
-      .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-      .agg(sum(floor(col("value") * 100).cast("long")).as("svc"))
+    dailyCents(s, d)
       .withColumn("run_max", max(col("svc")).over(wRun))
       .withColumn("dd", col("run_max") - col("svc"))
       .withColumn("max_dd", max(col("dd")).over(wRun))
@@ -411,9 +417,7 @@ object Windows {
     // deterministic dropout (every 3rd day-of-month) so the gap-fill
     // branch is exercised at every SF — the testdata's daily series is
     // dense, and an interpolator no gap ever reaches is untested code
-    val daily = Tables.events(s, d)
-      .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-      .agg(sum(floor(col("value") * 100).cast("long")).as("svc"))
+    val daily = dailyCents(s, d)
       .where(dayofmonth(col("day")) % 3 =!= 0)
     val spine = daily.groupBy(col("event_type"))
       .agg(min(col("day")).as("d0"), max(col("day")).as("d1"))
@@ -458,12 +462,8 @@ object Windows {
     * `dev > 3·mad` comparison is exact-vs-exact, so the flag cannot
     * straddle an engine rounding difference. Day×type grain, O(frame)
     * state per row. */
-  val winRollingMad: Q = (s, d) => {
-    val w7 = Window.partitionBy(col("event_type")).orderBy(col("day"))
-      .rowsBetween(-6, 0)
-    Tables.events(s, d)
-      .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-      .agg(sum(floor(col("value") * 100).cast("long")).as("svc"))
+  val winRollingMad: Q = (s, d) =>
+    dailyCents(s, d)
       .withColumn("med7", percentile(col("svc"), lit(0.5)).over(w7))
       .withColumn("dev", abs(col("svc").cast("double") - col("med7")))
       .withColumn("mad7", percentile(col("dev"), lit(0.5)).over(w7))
@@ -473,7 +473,6 @@ object Windows {
               (col("mad7") / 100.0).as("mad7"),
               (col("dev") > col("mad7") * 3.0).as("is_anomaly"))
       .orderBy(col("event_type"), col("day"))
-  }
 
   /** W22 — VALUE-range window frame (`RANGE BETWEEN n PRECEDING AND n
     * FOLLOWING` over a numeric ordering — not time): for every order,
@@ -627,6 +626,13 @@ object Windows {
     "win_whole_partition" -> winWholePartition,
     "win_single_offset_frame" -> winSingleOffsetFrame)
 
+  /** `daily(event_type, day, svc)`: the [[dailyCents]] replay. */
+  private val dailyCentsSql: String =
+    """daily AS (
+      |  SELECT event_type, CAST(ts AS DATE) AS day,
+      |    SUM(CAST(floor(value * 100) AS BIGINT)) AS svc
+      |  FROM events GROUP BY 1, 2)""".stripMargin
+
   val oracles: Map[String, String] = Map(
     // half-open sweep: at equal t the close (-1) sorts before the open
     // (+1); all integers
@@ -701,29 +707,26 @@ object Windows {
     // dyadic-exact throughout: cent ints → half-integer med7 → dyadic
     // deviations → quarter-dyadic mad7; flag compares exact doubles
     "win_rolling_mad" ->
-      """WITH daily AS (
-        |  SELECT event_type, CAST(ts AS DATE) AS day,
-        |    SUM(CAST(floor(value * 100) AS BIGINT)) AS svc
-        |  FROM events GROUP BY 1, 2),
-        |m AS (
-        |  SELECT event_type, day, svc,
-        |    median(svc) OVER (PARTITION BY event_type ORDER BY day
-        |      ROWS BETWEEN 6 PRECEDING AND CURRENT ROW) AS med7
-        |  FROM daily),
-        |v AS (
-        |  SELECT event_type, day, svc, med7,
-        |    abs(CAST(svc AS DOUBLE) - med7) AS dev
-        |  FROM m),
-        |w AS (
-        |  SELECT event_type, day, svc, med7, dev,
-        |    median(dev) OVER (PARTITION BY event_type ORDER BY day
-        |      ROWS BETWEEN 6 PRECEDING AND CURRENT ROW) AS mad7
-        |  FROM v)
-        |SELECT event_type, day,
-        |  CAST(svc AS DOUBLE) / 100.0 AS daily_total,
-        |  med7 / 100.0 AS med7, mad7 / 100.0 AS mad7,
-        |  dev > mad7 * 3.0 AS is_anomaly
-        |FROM w ORDER BY event_type, day""".stripMargin,
+      s"""WITH $dailyCentsSql,
+         |m AS (
+         |  SELECT event_type, day, svc,
+         |    median(svc) OVER (PARTITION BY event_type ORDER BY day
+         |      ROWS BETWEEN 6 PRECEDING AND CURRENT ROW) AS med7
+         |  FROM daily),
+         |v AS (
+         |  SELECT event_type, day, svc, med7,
+         |    abs(CAST(svc AS DOUBLE) - med7) AS dev
+         |  FROM m),
+         |w AS (
+         |  SELECT event_type, day, svc, med7, dev,
+         |    median(dev) OVER (PARTITION BY event_type ORDER BY day
+         |      ROWS BETWEEN 6 PRECEDING AND CURRENT ROW) AS mad7
+         |  FROM v)
+         |SELECT event_type, day,
+         |  CAST(svc AS DOUBLE) / 100.0 AS daily_total,
+         |  med7 / 100.0 AS med7, mad7 / 100.0 AS mad7,
+         |  dev > mad7 * 3.0 AS is_anomaly
+         |FROM w ORDER BY event_type, day""".stripMargin,
     // identical associativity both engines: prev + (next-prev)*pos/len,
     // all operands exact ints cast to double, one rounded division
     "win_linear_interp" ->
@@ -765,69 +768,60 @@ object Windows {
         |FROM j ORDER BY event_type, day""".stripMargin,
     // integer-exact: both running maxima in the cent domain, /100 last
     "win_drawdown" ->
-      """WITH daily AS (
-        |  SELECT event_type, CAST(ts AS DATE) AS day,
-        |    SUM(CAST(floor(value * 100) AS BIGINT)) AS svc
-        |  FROM events GROUP BY 1, 2),
-        |r AS (
-        |  SELECT event_type, day, svc,
-        |    max(svc) OVER w AS run_max,
-        |    max(svc) OVER w - svc AS dd
-        |  FROM daily
-        |  WINDOW w AS (PARTITION BY event_type ORDER BY day
-        |    ROWS UNBOUNDED PRECEDING))
-        |SELECT event_type, day,
-        |  CAST(svc AS DOUBLE) / 100.0 AS daily_total,
-        |  CAST(run_max AS DOUBLE) / 100.0 AS peak,
-        |  CAST(dd AS DOUBLE) / 100.0 AS drawdown,
-        |  CAST(max(dd) OVER (PARTITION BY event_type ORDER BY day
-        |    ROWS UNBOUNDED PRECEDING) AS DOUBLE) / 100.0 AS max_drawdown
-        |FROM r ORDER BY event_type, day""".stripMargin,
+      s"""WITH $dailyCentsSql,
+         |r AS (
+         |  SELECT event_type, day, svc,
+         |    max(svc) OVER w AS run_max,
+         |    max(svc) OVER w - svc AS dd
+         |  FROM daily
+         |  WINDOW w AS (PARTITION BY event_type ORDER BY day
+         |    ROWS UNBOUNDED PRECEDING))
+         |SELECT event_type, day,
+         |  CAST(svc AS DOUBLE) / 100.0 AS daily_total,
+         |  CAST(run_max AS DOUBLE) / 100.0 AS peak,
+         |  CAST(dd AS DOUBLE) / 100.0 AS drawdown,
+         |  CAST(max(dd) OVER (PARTITION BY event_type ORDER BY day
+         |    ROWS UNBOUNDED PRECEDING) AS DOUBLE) / 100.0 AS max_drawdown
+         |FROM r ORDER BY event_type, day""".stripMargin,
     // exact windowed median: cent integers, both engines interpolate
     // lo + 0.5*(hi-lo) → dyadic doubles, no rounding needed
     "win_moving_median" ->
-      """WITH daily AS (
-        |  SELECT event_type, CAST(ts AS DATE) AS day,
-        |    SUM(CAST(floor(value * 100) AS BIGINT)) AS svc
-        |  FROM events GROUP BY 1, 2)
-        |SELECT event_type, day,
-        |  CAST(svc AS DOUBLE) / 100.0 AS daily_total,
-        |  median(svc) OVER (PARTITION BY event_type ORDER BY day
-        |    ROWS BETWEEN 6 PRECEDING AND CURRENT ROW) / 100.0 AS med7
-        |FROM daily ORDER BY event_type, day""".stripMargin,
+      s"""WITH $dailyCentsSql
+         |SELECT event_type, day,
+         |  CAST(svc AS DOUBLE) / 100.0 AS daily_total,
+         |  median(svc) OVER (PARTITION BY event_type ORDER BY day
+         |    ROWS BETWEEN 6 PRECEDING AND CURRENT ROW) / 100.0 AS med7
+         |FROM daily ORDER BY event_type, day""".stripMargin,
     // exact dyadic EWMA replay: identical 7-lag expression, exact cent
     // integers × exactly-representable 2^-k weights, one IEEE division
     "win_ewma" ->
-      """WITH daily AS (
-        |  SELECT event_type, CAST(ts AS DATE) AS day,
-        |    SUM(CAST(floor(value * 100) AS BIGINT)) AS svc
-        |  FROM events GROUP BY 1, 2),
-        |l AS (
-        |  SELECT event_type, day, svc,
-        |    CAST(lag(svc, 0) OVER w AS DOUBLE) AS x0,
-        |    CAST(lag(svc, 1) OVER w AS DOUBLE) AS x1,
-        |    CAST(lag(svc, 2) OVER w AS DOUBLE) AS x2,
-        |    CAST(lag(svc, 3) OVER w AS DOUBLE) AS x3,
-        |    CAST(lag(svc, 4) OVER w AS DOUBLE) AS x4,
-        |    CAST(lag(svc, 5) OVER w AS DOUBLE) AS x5,
-        |    CAST(lag(svc, 6) OVER w AS DOUBLE) AS x6
-        |  FROM daily
-        |  WINDOW w AS (PARTITION BY event_type ORDER BY day))
-        |SELECT event_type, day,
-        |  CAST(svc AS DOUBLE) / 100.0 AS daily_total,
-        |  ((coalesce(x0 * 1.0, 0.0) + coalesce(x1 * 0.5, 0.0)
-        |    + coalesce(x2 * 0.25, 0.0) + coalesce(x3 * 0.125, 0.0)
-        |    + coalesce(x4 * 0.0625, 0.0) + coalesce(x5 * 0.03125, 0.0)
-        |    + coalesce(x6 * 0.015625, 0.0))
-        |   / (CASE WHEN x0 IS NOT NULL THEN 1.0 ELSE 0.0 END
-        |      + CASE WHEN x1 IS NOT NULL THEN 0.5 ELSE 0.0 END
-        |      + CASE WHEN x2 IS NOT NULL THEN 0.25 ELSE 0.0 END
-        |      + CASE WHEN x3 IS NOT NULL THEN 0.125 ELSE 0.0 END
-        |      + CASE WHEN x4 IS NOT NULL THEN 0.0625 ELSE 0.0 END
-        |      + CASE WHEN x5 IS NOT NULL THEN 0.03125 ELSE 0.0 END
-        |      + CASE WHEN x6 IS NOT NULL THEN 0.015625 ELSE 0.0 END))
-        |  / 100.0 AS ewma
-        |FROM l ORDER BY event_type, day""".stripMargin,
+      s"""WITH $dailyCentsSql,
+         |l AS (
+         |  SELECT event_type, day, svc,
+         |    CAST(lag(svc, 0) OVER w AS DOUBLE) AS x0,
+         |    CAST(lag(svc, 1) OVER w AS DOUBLE) AS x1,
+         |    CAST(lag(svc, 2) OVER w AS DOUBLE) AS x2,
+         |    CAST(lag(svc, 3) OVER w AS DOUBLE) AS x3,
+         |    CAST(lag(svc, 4) OVER w AS DOUBLE) AS x4,
+         |    CAST(lag(svc, 5) OVER w AS DOUBLE) AS x5,
+         |    CAST(lag(svc, 6) OVER w AS DOUBLE) AS x6
+         |  FROM daily
+         |  WINDOW w AS (PARTITION BY event_type ORDER BY day))
+         |SELECT event_type, day,
+         |  CAST(svc AS DOUBLE) / 100.0 AS daily_total,
+         |  ((coalesce(x0 * 1.0, 0.0) + coalesce(x1 * 0.5, 0.0)
+         |    + coalesce(x2 * 0.25, 0.0) + coalesce(x3 * 0.125, 0.0)
+         |    + coalesce(x4 * 0.0625, 0.0) + coalesce(x5 * 0.03125, 0.0)
+         |    + coalesce(x6 * 0.015625, 0.0))
+         |   / (CASE WHEN x0 IS NOT NULL THEN 1.0 ELSE 0.0 END
+         |      + CASE WHEN x1 IS NOT NULL THEN 0.5 ELSE 0.0 END
+         |      + CASE WHEN x2 IS NOT NULL THEN 0.25 ELSE 0.0 END
+         |      + CASE WHEN x3 IS NOT NULL THEN 0.125 ELSE 0.0 END
+         |      + CASE WHEN x4 IS NOT NULL THEN 0.0625 ELSE 0.0 END
+         |      + CASE WHEN x5 IS NOT NULL THEN 0.03125 ELSE 0.0 END
+         |      + CASE WHEN x6 IS NOT NULL THEN 0.015625 ELSE 0.0 END))
+         |  / 100.0 AS ewma
+         |FROM l ORDER BY event_type, day""".stripMargin,
     "win_cume_distinct" ->
       """WITH ev AS (
         |  SELECT event_type, user_id, CAST(ts AS DATE) AS day FROM events),

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Shared conventions for the oracle-differential query surface.
@@ -31,6 +32,12 @@ package object ops {
     * verified on Spark 4.1). */
   def bindOnce(c: Column)(f: Column => Column): Column =
     element_at(transform(array(c), f), 1)
+
+  /** The whole-frame window: one partition, every row's frame the whole
+    * frame — for frame-wide totals over small (post-aggregate) frames. */
+  val wholeFrame =
+    Window.partitionBy(lit(1))
+      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
 
   /** Pin parallelism for a CPU-dense per-row projection (per-doc gram
     * hashing and the like) whose input is byte-small: the parquet split
