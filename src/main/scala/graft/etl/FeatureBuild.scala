@@ -1,7 +1,7 @@
 package graft.etl
 
 import graft.functions.GtfsFunctions._
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -14,9 +14,10 @@ import org.apache.spark.sql.functions._
   * Where the reference builds temp tables + indexes + 11 UPDATE ... FROM
   * statements (manual decorrelation, SURVEY §4), this is groupBy
   * aggregates joined back in one immutable plan — Catalyst sees the whole
-  * dataflow, so the 200-line temp-table machinery collapses and every
-  * historical aggregate is a broadcast join against a small (per-key)
-  * aggregate.
+  * dataflow, so the 200-line temp-table machinery collapses into two
+  * broadcasts: the (trip, stop) aggregate, and one row of per-key maps
+  * that a single grouping-sets pass builds for the route, stop, hour,
+  * weekday and weather grains.
   *
   * Determinism: the reference's `CURRENT_DATE - INTERVAL '7 days'`
   * windows take an explicit `asOf` date parameter (SURVEY §5 discipline);
@@ -24,12 +25,14 @@ import org.apache.spark.sql.functions._
   * aggregate join (J7 shape).
   *
   * Scale notes: per-key historical aggregates are tiny relative to the
-  * event table (keys × window), so the joins broadcast; the only wide
-  * operation over the full event table is the prev-stop window, which
-  * shuffles once on (trip_id, service date). The reference's 100k-row
-  * training cap
-  * exists only because pandas materializes on one machine — here the
-  * feature matrix never leaves the cluster (SURVEY §3.2).
+  * event table (keys × window), so they broadcast. A map lookup scans
+  * its grain's keys, which suits the small grains; the (trip, stop)
+  * grain, about one key per timetable stop visit, keeps its hash join.
+  * The only wide operation over the full event table is the prev-stop
+  * window, which shuffles once on (trip_id, service date). The
+  * reference's 100k-row training cap exists only because pandas
+  * materializes on one machine — here the feature matrix never leaves
+  * the cluster (SURVEY §3.2).
   */
 object FeatureBuild {
 
@@ -59,32 +62,48 @@ object FeatureBuild {
            min_by(col("precipitation"), col("recorded_at")).as("w_precip"),
            min_by(col("wind_speed"), col("recorded_at")).as("w_wind"))
 
-    // historical aggregates, decorrelated (ml_feature_engineering.sql:253-345):
-    // one pass per key grain over the 30-day cut, its 7-day figures
-    // conditional aggregates of the same pass (both cut-offs are lower
-    // bounds, so the 7-day rows are a subset of the 30-day rows)
+    // historical aggregates, decorrelated (ml_feature_engineering.sql:
+    // 253-345), over the 30-day cut, their 7-day figures aggregates of
+    // the same pass, conditional on the 7-day cut (both cut-offs are
+    // lower bounds, so the 7-day rows are a subset of the 30-day rows; a
+    // key seen only 8-30 days back gets null 7-day figures, as an absent
+    // key does)
     val in7 = col("actual_arrival") >= date_sub(lit(asOf), 7)
     val delay = col("delay_minutes")
     val d7 = when(in7, delay)
     val de30 = de.filter(col("actual_arrival") >= date_sub(lit(asOf), 30))
+    // (trip, stop) has about as many keys as the timetable has stop
+    // visits: its own aggregate, broadcast-joined
     val histRS = de30.groupBy(col("trip_id"), col("stop_id"))
       .agg(avg(d7).as("avg_rs7"),
            count(when(in7, 1)).as("cnt_rs7"), // rows, null delays included
            max(d7).as("max_rs7"),
            avg(delay).as("avg_rs30"))
-    val histRoute = de30.join(op.trips.select("trip_id", "route_id"), Seq("trip_id"))
-      .groupBy(col("route_id"))
-      .agg(avg(d7).as("avg_route7"), stddev_samp(d7).as("sd_route7"),
-           avg(delay).as("avg_route30"))
-    val histStop = de30.groupBy(col("stop_id"))
-      .agg(avg(d7).as("avg_stop7"), avg(delay).as("avg_stop30"))
-    val histHour = de30.groupBy(hour(col("actual_arrival")).as("h"))
-      .agg(avg(d7).as("avg_hour7"), avg(delay).as("avg_hour30"))
-    val de7 = de.filter(in7)
-    val histDow7 = de7.groupBy(dowPg(col("actual_arrival")).as("dw"))
-      .agg(avg(delay).as("avg_dow7"))
-    val histWeather7 = de7.groupBy(col("weather_condition"))
-      .agg(avg(delay).as("avg_weather7"))
+    // the five small grains: ONE grouping-sets pass (the Data Cube's
+    // GROUPING SETS, Gray et al., ICDE 1996) folded into one row of
+    // per-grain maps, so one shuffle and one broadcast serve them all.
+    // The trip join is a left join, so events of unknown trips still count
+    // at the other grains. Grains are told apart by grouping_id (bit 1 =
+    // not grouped by), never by null keys; a null key is dropped, as it
+    // never matched an equi-join and map_from_entries rejects it.
+    val grains = Seq("route_id", "stop_id", "h", "dw", "weather_condition")
+    val cube = de30
+      .join(op.trips.select("trip_id", "route_id"), Seq("trip_id"), "left")
+      .withColumn("h", hour(col("actual_arrival")))
+      .withColumn("dw", dowPg(col("actual_arrival")))
+      .groupingSets(grains.map(g => Seq(col(g))), grains.map(col): _*)
+      .agg(grouping_id().as("gid"), avg(d7).as("a7"),
+           stddev_samp(d7).as("sd7"), avg(delay).as("a30"))
+    val maps = grains.zipWithIndex.map { case (g, i) =>
+      val gid = (1 << grains.size) - 1 - (1 << (grains.size - 1 - i))
+      map_from_entries(collect_list(
+        when(col("gid") === gid && col(g).isNotNull,
+             struct(col(g), struct(col("a7"), col("sd7"), col("a30"))))))
+        .as(s"m_$g")
+    }
+    val hist = cube.agg(maps.head, maps.tail: _*)
+    def at(grain: String, stat: String): Column =
+      element_at(col(s"m_$grain"), col(grain)).getField(stat)
 
     // per-trip stop counts (reference's correlated COUNT/MAX subqueries)
     val tripStops = op.stopTimes.groupBy(col("trip_id"))
@@ -136,14 +155,11 @@ object FeatureBuild {
       .withColumn("wh", hourKey)
       .join(broadcast(weatherHourly), Seq("wh"), "left")
       .join(broadcast(histRS), Seq("trip_id", "stop_id"), "left")
-      .join(broadcast(histRoute), Seq("route_id"), "left")
-      .join(broadcast(histStop), Seq("stop_id"), "left")
       .withColumn("h", hr)
-      .join(broadcast(histHour), Seq("h"), "left")
       .withColumn("dw", dowPg(col("actual_arrival")))
-      .join(broadcast(histDow7), Seq("dw"), "left")
-      .join(broadcast(histWeather7), Seq("weather_condition"), "left")
       .join(prevStop, Seq("trip_id", "stop_id", "actual_arrival"), "left")
+      // last, so the maps are read in the final projection, never shuffled
+      .crossJoin(broadcast(hist))
       .select(
         // identifiers + target (:150-161)
         col("trip_id"), col("stop_id"), col("route_id"),
@@ -192,19 +208,19 @@ object FeatureBuild {
         coalesce(col("avg_rs7"), lit(0.0)).as("avg_delay_same_route_stop_7d"),
         coalesce(col("cnt_rs7"), lit(0L)).as("delay_count_same_route_stop_7d"),
         coalesce(col("max_rs7"), lit(0)).as("max_delay_same_route_stop_7d"),
-        coalesce(col("avg_route7"), lit(0.0)).as("avg_delay_route_7d"),
-        coalesce(col("sd_route7"), lit(0.0)).as("stddev_delay_route_7d"),
-        coalesce(col("avg_stop7"), lit(0.0)).as("avg_delay_stop_7d"),
-        coalesce(col("avg_hour7"), lit(0.0)).as("avg_delay_same_hour_7d"),
-        coalesce(col("avg_dow7"), lit(0.0)).as("avg_delay_same_dow_7d"),
-        coalesce(col("avg_weather7"), lit(0.0)).as("avg_delay_same_weather_7d"),
+        coalesce(at("route_id", "a7"), lit(0.0)).as("avg_delay_route_7d"),
+        coalesce(at("route_id", "sd7"), lit(0.0)).as("stddev_delay_route_7d"),
+        coalesce(at("stop_id", "a7"), lit(0.0)).as("avg_delay_stop_7d"),
+        coalesce(at("h", "a7"), lit(0.0)).as("avg_delay_same_hour_7d"),
+        coalesce(at("dw", "a7"), lit(0.0)).as("avg_delay_same_dow_7d"),
+        coalesce(at("weather_condition", "a7"), lit(0.0)).as("avg_delay_same_weather_7d"),
         coalesce(col("avg_rs30"), lit(0.0)).as("avg_delay_same_route_stop_30d"),
-        coalesce(col("avg_route30"), lit(0.0)).as("avg_delay_route_30d"),
-        coalesce(col("avg_stop30"), lit(0.0)).as("avg_delay_stop_30d"),
-        coalesce(col("avg_hour30"), lit(0.0)).as("avg_delay_same_hour_30d"),
+        coalesce(at("route_id", "a30"), lit(0.0)).as("avg_delay_route_30d"),
+        coalesce(at("stop_id", "a30"), lit(0.0)).as("avg_delay_stop_30d"),
+        coalesce(at("h", "a30"), lit(0.0)).as("avg_delay_same_hour_30d"),
         (coalesce(col("avg_rs7"), lit(0.0)) -
          coalesce(col("avg_rs30"), lit(0.0))).as("delay_trend_7d"),
-        coalesce(col("sd_route7"), lit(0.0)).as("delay_volatility_7d"),
+        coalesce(at("route_id", "sd7"), lit(0.0)).as("delay_volatility_7d"),
         coalesce(col("prev_stop_delay"), lit(0.0)).as("prev_stop_delay"))
   }
 

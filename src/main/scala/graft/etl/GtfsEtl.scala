@@ -204,12 +204,14 @@ object GtfsEtl {
         rushHourPeriod(col("hour")).as("rush_hour_period"))
 
     // dim_stop (:220-244): stop_area via global avg lat; hub = >=5 distinct
-    // routes through the stop (decorrelated: aggregate once, broadcast)
+    // routes through the stop (decorrelated: aggregate once, broadcast;
+    // the size of a set is one aggregation pass, where countDistinct
+    // would shuffle twice)
     val avgLat = lat.getDouble(0)
     val routesPerStop = op.stopTimes.select("stop_id", "trip_id")
       .join(broadcast(op.trips.select("trip_id", "route_id")), Seq("trip_id"))
       .groupBy(col("stop_id"))
-      .agg(countDistinct(col("route_id")).as("n_routes"))
+      .agg(size(collect_set(col("route_id"))).as("n_routes"))
     val wStop = Window.orderBy(col("stop_id"))
     val dimStop = op.stops
       .join(broadcast(routesPerStop), Seq("stop_id"), "left")
@@ -219,7 +221,7 @@ object GtfsEtl {
         when(col("stop_lat") > avgLat, "North")
           .when(col("stop_lat") < avgLat, "South")
           .otherwise("Central").as("stop_area"),
-        (coalesce(col("n_routes"), lit(0L)) >= 5).as("is_major_hub"))
+        (coalesce(col("n_routes"), lit(0)) >= 5).as("is_major_hub"))
       .withColumn("stop_key", row_number().over(wStop))
 
     // dim_route (:247-283): avg trip duration decorrelated
@@ -304,20 +306,26 @@ object GtfsEtl {
   }
 
   /** Data-quality checks the reference runs inline after load
-    * (`load_gtfs_data.sql:86-114`): returns (check_name, n_bad) rows;
-    * all-zero = clean. One query: a union of one-row counts. */
+    * (`load_gtfs_data.sql:86-114`): returns (check_name, n_bad) rows, one
+    * per check in a fixed order, zero counts included; all-zero = clean.
+    * One aggregate over the union of the tagged bad rows counts all four,
+    * so the checks share one shuffle instead of one global count each. */
   def dataQuality(st: StagingTables): DataFrame = {
-    def check(name: String, bad: DataFrame) =
-      bad.agg(lit(name).as("check_name"), count(lit(1)).as("n_bad"))
-    Seq(
-      check("null_coord_stops",
-        st.stops.filter(col("stop_lat").isNull || col("stop_lon").isNull)),
-      check("orphan_trips",
-        st.trips.join(st.routes.select("route_id"), Seq("route_id"), "left_anti")),
-      check("invalid_stop_times",
-        st.stopTimes.filter(col("arrival_time").isNull)),
-      check("orphan_stop_times",
+    val checks = Seq(
+      "null_coord_stops" ->
+        st.stops.filter(col("stop_lat").isNull || col("stop_lon").isNull),
+      "orphan_trips" ->
+        st.trips.join(st.routes.select("route_id"), Seq("route_id"), "left_anti"),
+      "invalid_stop_times" ->
+        st.stopTimes.filter(col("arrival_time").isNull),
+      "orphan_stop_times" ->
         st.stopTimes.join(st.trips.select("trip_id"), Seq("trip_id"), "left_anti"))
-    ).reduce(_ union _)
+    checks.map { case (name, bad) => bad.select(lit(name).as("check_name")) }
+      .reduce(_ union _)
+      .agg(array(checks.map { case (name, _) =>
+        struct(lit(name).as("check_name"),
+               count(when(col("check_name") === name, 1)).as("n_bad"))
+      }: _*).as("checks"))
+      .select(inline(col("checks")))
   }
 }

@@ -496,39 +496,6 @@ object Dedup {
                (col("nw1") + col("nw2") - col("n_common"))).as("jaccard"))
       .filter(col("jaccard") >= threshold)
 
-  /** Exact pairwise Jaccard via the sorted-array merge kernel
-    * ([[graft.expressions.SortedIntersectCount]]): per-doc sorted
-    * distinct tokens are a pure expression (no extra shuffle), then each
-    * block pair costs O(|a|+|b|) binary comparisons in codegen. The
-    * shape for token spaces no mask fits AND blocks dense in qualifying
-    * pairs (postings pay Σ|posting|² there) — with one more
-    * precondition, measured the hard way (PLANS.md): the input lineage
-    * should be cheap or cached, because the self-join computes it twice.
-    * On this corpus's SPARSE trigram pairs the postings join won (~2 s
-    * vs ~12.5 s), so the shipped trigram query takes [[jaccardPairs]]'
-    * auto-dispatch; this method is the documented alternative for
-    * pair-dense blocks. */
-  def jaccardPairsKernel(docsTokRaw: org.apache.spark.sql.DataFrame,
-                         threshold: Double)
-      : org.apache.spark.sql.DataFrame = {
-    graft.expressions.SortedIntersectCount.register(docsTokRaw.sparkSession)
-    // filter(isNotNull) establishes the kernel's non-null-element
-    // precondition (array_distinct alone keeps a null; the merge walk's
-    // getUTF8String would NPE on it)
-    val docsTok = docsTokRaw.select(col("doc_id"), col("source"),
-      sort_array(filter(array_distinct(col("toks")), x => x.isNotNull))
-        .as("stoks"))
-      .withColumn("nw", size(col("stoks")))
-    score(
-      docsTok.as("x").join(docsTok.as("y"),
-          col("x.source") === col("y.source") &&
-          col("x.doc_id") < col("y.doc_id"))
-        .select(col("x.doc_id").as("d1"), col("y.doc_id").as("d2"),
-          expr("sorted_intersect_count(x.stoks, y.stoks)").as("n_common"),
-          col("x.nw").as("nw1"), col("y.nw").as("nw2")),
-      threshold)
-  }
-
   /** E3 — n-gram (n=1 here, so the oracle is SQL-expressible; the n=3
     * variant uses [[shingles3]] and is spec-tested) Jaccard similarity of
     * doc pairs, blocked by `source`. Physical strategy: [[jaccardPairs]]

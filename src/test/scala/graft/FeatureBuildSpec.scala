@@ -105,6 +105,99 @@ class FeatureBuildSpec extends SparkSpec {
     r1.getAs[Double]("stddev_delay_route_7d") shouldBe math.sqrt(8.0) +- 1e-12
   }
 
+  test("historical lookups equal the per-grain groupBy + left-join " +
+       "formulation, nulls, unknown trips and old-only keys included") {
+    import spark.implicits._
+    // asOf 2024-01-14: 7d cut 2024-01-07, 30d cut 2023-12-15
+    val asOf = java.sql.Date.valueOf("2024-01-14")
+    val ev = Seq[(String, String, String, Option[Int], String)](
+      ("T1", "S1", "2024-01-10 08:02:00", Some(3), "clear"),
+      ("T1", "S2", "2024-01-10 08:17:00", None, "clear"),      // null delay
+      ("T2", "S3", "2024-01-11 17:07:00", Some(9), "rainy"),
+      ("T2", null, "2024-01-11 17:30:00", Some(4), "rainy"),   // null stop
+      ("T3", "S1", "2024-01-12 23:55:00", Some(6), null),      // null weather
+      ("T6", "S1", "2024-01-12 07:05:00", Some(30), "clear"),  // unknown trip
+      ("T1", "S1", "2024-01-13 08:05:00", Some(5), "clear"),
+      // keys seen only 8-30 days back: route R3, stop S4, hours 0 and 12,
+      // Tuesday, fog, snow and cloudy
+      ("T5", "S1", "2024-01-02 12:31:00", Some(7), "fog"),
+      ("T3", "S4", "2023-12-20 00:20:00", Some(11), "snow"),
+      ("T4", "S2", "2023-12-28 09:01:00", None, "cloudy"),
+      // older than 30 days
+      ("T1", "S3", "2023-12-01 08:32:00", Some(50), "clear"),
+      ("T7", "S1", "2023-11-20 09:00:00", Some(12), "windy")
+    ).toDF("trip_id", "stop_id", "arrival_str", "delay_minutes",
+           "weather_condition")
+      .withColumn("actual_arrival", col("arrival_str").cast("timestamp"))
+      .withColumn("is_holiday", lit(false))
+      .drop("arrival_str")
+    val in7 = col("actual_arrival") >= date_sub(lit(asOf), 7)
+    val delay = col("delay_minutes")
+    val d7 = when(in7, delay)
+    val de30 = ev.filter(col("actual_arrival") >= date_sub(lit(asOf), 30))
+    val de7 = ev.filter(in7)
+    val trips = op.trips.select("trip_id", "route_id")
+    val dw = dayofweek(col("actual_arrival")) - 1
+    val expected = ev.join(trips, Seq("trip_id"))
+      .withColumn("h", hour(col("actual_arrival")))
+      .withColumn("dw", dw)
+      .join(de30.groupBy("trip_id", "stop_id").agg(avg(d7).as("rs7"),
+              count(when(in7, 1)).as("rsn7"), max(d7).as("rsmax7"),
+              avg(delay).as("rs30")),
+            Seq("trip_id", "stop_id"), "left")
+      .join(de30.join(trips, Seq("trip_id")).groupBy("route_id")
+              .agg(avg(d7).as("route7"), stddev_samp(d7).as("routesd7"),
+                   avg(delay).as("route30")),
+            Seq("route_id"), "left")
+      .join(de30.groupBy("stop_id")
+              .agg(avg(d7).as("stop7"), avg(delay).as("stop30")),
+            Seq("stop_id"), "left")
+      .join(de30.groupBy(hour(col("actual_arrival")).as("h"))
+              .agg(avg(d7).as("hour7"), avg(delay).as("hour30")),
+            Seq("h"), "left")
+      .join(de7.groupBy(dw.as("dw")).agg(avg(delay).as("dow7")),
+            Seq("dw"), "left")
+      .join(de7.groupBy("weather_condition").agg(avg(delay).as("weather7")),
+            Seq("weather_condition"), "left")
+      .select(col("trip_id"), col("stop_id"),
+        to_date(col("actual_arrival")).as("date"), col("h").as("hour_of_day"),
+        minute(col("actual_arrival")).as("minute_of_hour"),
+        coalesce(col("rs7"), lit(0.0)).as("avg_delay_same_route_stop_7d"),
+        coalesce(col("rsn7"), lit(0L)).as("delay_count_same_route_stop_7d"),
+        coalesce(col("rsmax7"), lit(0)).as("max_delay_same_route_stop_7d"),
+        coalesce(col("route7"), lit(0.0)).as("avg_delay_route_7d"),
+        coalesce(col("routesd7"), lit(0.0)).as("stddev_delay_route_7d"),
+        coalesce(col("stop7"), lit(0.0)).as("avg_delay_stop_7d"),
+        coalesce(col("hour7"), lit(0.0)).as("avg_delay_same_hour_7d"),
+        coalesce(col("dow7"), lit(0.0)).as("avg_delay_same_dow_7d"),
+        coalesce(col("weather7"), lit(0.0)).as("avg_delay_same_weather_7d"),
+        coalesce(col("rs30"), lit(0.0)).as("avg_delay_same_route_stop_30d"),
+        coalesce(col("route30"), lit(0.0)).as("avg_delay_route_30d"),
+        coalesce(col("stop30"), lit(0.0)).as("avg_delay_stop_30d"),
+        coalesce(col("hour30"), lit(0.0)).as("avg_delay_same_hour_30d"))
+    val f = FeatureBuild.features(op, wh.dimStop, ev, emptyWeather, asOf)
+    val actual = f.select(expected.columns.map(col).toSeq: _*)
+    actual.count() shouldBe 11 // every event of a known trip
+    actual.exceptAll(expected).count() shouldBe 0
+    expected.exceptAll(actual).count() shouldBe 0
+    // the fixture reaches each case: the unknown trip's event counts at
+    // the stop grain, the null-stop and null-weather rows get zeros, and
+    // old-only keys have 30-day figures but zero 7-day ones
+    val s1 = f.filter(col("stop_id") === "S1" && col("day_of_month") === 13)
+      .first()
+    s1.getAs[Double]("avg_delay_stop_7d") shouldBe 11.0 // (3+6+30+5)/4
+    val noStop = f.filter(col("stop_id").isNull).first()
+    noStop.getAs[Double]("avg_delay_stop_30d") shouldBe 0.0
+    val noWeather = f.filter(col("weather_condition").isNull).first()
+    noWeather.getAs[Double]("avg_delay_same_weather_7d") shouldBe 0.0
+    val r3 = f.filter(col("trip_id") === "T5").first()
+    r3.getAs[Double]("avg_delay_route_7d") shouldBe 0.0
+    r3.getAs[Double]("avg_delay_route_30d") shouldBe 7.0
+    r3.getAs[Double]("avg_delay_same_hour_30d") shouldBe 7.0
+    r3.getAs[Double]("avg_delay_same_dow_7d") shouldBe 0.0
+    r3.getAs[Double]("avg_delay_same_weather_7d") shouldBe 0.0
+  }
+
   test("prev-stop cascade feature uses the 1-PRECEDING frame") {
     val t1s2 = feats.filter(col("trip_id") === "T1" && col("stop_id") === "S2").first()
     t1s2.getAs[Double]("prev_stop_delay") shouldBe 3.0 // T1 S1 (seq 1) delay

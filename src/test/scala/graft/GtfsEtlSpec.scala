@@ -34,6 +34,21 @@ class GtfsEtlSpec extends SparkSpec {
     dq("orphan_stop_times") shouldBe 0
   }
 
+  test("data-quality report keeps all four checks when every count is 0") {
+    val trips = st.trips.join(st.routes.select("route_id"), Seq("route_id"),
+      "left_semi")
+    val clean = GtfsEtl.StagingTables(
+      st.stops.filter(col("stop_lat").isNotNull && col("stop_lon").isNotNull),
+      st.routes, trips,
+      st.stopTimes.filter(col("arrival_time").isNotNull)
+        .join(trips.select("trip_id"), Seq("trip_id"), "left_semi"),
+      st.calendar)
+    GtfsEtl.dataQuality(clean).collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toSeq shouldBe Seq(
+        "null_coord_stops" -> 0L, "orphan_trips" -> 0L,
+        "invalid_stop_times" -> 0L, "orphan_stop_times" -> 0L)
+  }
+
   test("operational load: null-filter, defaults, FK filter, PK dedup") {
     // S5 dropped (null coords), S1 dup collapsed
     op.stops.count() shouldBe 5

@@ -1,12 +1,13 @@
 package graft
 
 import graft.etl.Pipeline
+import org.apache.spark.GraftProbeShim
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.matchers.should.Matchers._
 
-/** The DAG-as-code runner: stage ordering, output capture, and
-  * upstream-failure skip semantics. */
+/** The DAG-as-code runner: stage ordering, output capture,
+  * upstream-failure skip semantics, and its Spark job budget. */
 class PipelineSpec extends SparkSpec {
 
   private def delays = {
@@ -78,5 +79,27 @@ class PipelineSpec extends SparkSpec {
     failed("operational_load") shouldBe "success"
     failed("warehouse_build") shouldBe "failed"
     caches.isEmpty shouldBe true
+  }
+
+  test("a daily job over the fixture runs at most 58 Spark jobs") {
+    // With AQE every shuffle, broadcast and action is a Spark job, and at
+    // small inputs the daily job's time follows its job count. The jobs
+    // are counted by their own job group, so other suites' jobs are not.
+    // Collecting the evaluation reports is part of the job: the metrics
+    // row is collected once inside runDaily, so reading it again is free.
+    val sc = spark.sparkContext
+    val group = "pipeline-spec-job-budget"
+    val out = collection.mutable.Map.empty[String, DataFrame]
+    sc.setJobGroup(group, "one daily job over the /gtfs fixture")
+    try {
+      Pipeline.runDaily(spark, getClass.getResource("/gtfs").getPath, delays,
+        noWeather, java.sql.Date.valueOf("2024-01-14"), out)
+      out("metrics").collect()
+      out("risk").collect()
+    } finally sc.clearJobGroup()
+    GraftProbeShim.drainListeners(sc)
+    out("fact").unpersist()
+    out("features").unpersist()
+    sc.statusTracker.getJobIdsForGroup(group).length should be <= 58
   }
 }

@@ -1,7 +1,7 @@
 package org.apache.spark
 
-/** TEST-HARNESS-ONLY shim (used exclusively by
-  * [[graft.StreamLossProbe]]): `SparkContext.killAndReplaceExecutor`
+/** TEST-HARNESS-ONLY shim (used by [[graft.StreamLossProbe]] and the
+  * job budget of [[graft.PipelineSpec]]): `SparkContext.killAndReplaceExecutor`
   * is `private[spark]`, but it is precisely the fault-injection
   * primitive an executor-loss rehearsal needs — it kills an executor
   * WITHOUT lowering the app's desired executor total, so the Master
@@ -13,4 +13,9 @@ package org.apache.spark
 object GraftProbeShim {
   def killAndReplace(sc: SparkContext, executorId: String): Boolean =
     sc.killAndReplaceExecutor(executorId)
+
+  /** Waits until the listener bus has delivered every queued event, so
+    * the status store (`statusTracker`) knows every finished job. The
+    * drain is `private[spark]`. */
+  def drainListeners(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }

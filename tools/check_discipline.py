@@ -17,7 +17,9 @@ the audits load-bearing:
      V  value-insensitive under ties, proven — reason required
      unordered  no ORDER BY in the chain (checked textually)
    An undeclared spec chain FAILS the lint — new window code must
-   declare its class to ship.
+   declare its class to ship. A spec held in a val is fingerprinted
+   again wherever a frame extends it (`w.rowsBetween(...)`): the
+   extended chain is a spec of its own.
 
 2. WINDOW TIE-BREAK (oracle side): every OVER(...) clause in
    target/verify_out/oracle_sql.json is parsed. Auto-classified safe:
@@ -81,6 +83,10 @@ the audits load-bearing:
    scan (SQL text is the oracle lints' jurisdiction: order-sensitive
    OVER clauses in SQL entries are already forced through
    oracle_windows).
+
+Every table is checked both ways: a declaration whose site is gone is
+DEAD and FAILS the lint too, so tools/discipline.json holds exactly the
+live sites.
 
 Usage:
     python3 tools/check_discipline.py            # lint (exit 1 on fail)
@@ -269,47 +275,81 @@ def strip_comments(text):
     return "".join(out)
 
 
+def parse_chain(text, i):
+    """Parse a `.partitionBy(..).orderBy(..).rowsBetween(..)` chain
+    starting at text[i]; return (parts, order_args, end index)."""
+    parts = []
+    order_args = []
+    while True:
+        mm = re.match(r"\s*(\w+)\s*\(", text[i:])
+        if not mm or mm.group(1) not in CHAIN_CALLS:
+            # allow continued chain across whitespace + dot
+            mm2 = re.match(r"\s*\.\s*(\w+)\s*\(", text[i:])
+            if not mm2 or mm2.group(1) not in CHAIN_CALLS:
+                break
+            mm = mm2
+        call = mm.group(1)
+        op = i + mm.end() - 1          # index of '('
+        end = balanced(text, op)
+        arg = text[op + 1:end - 1]
+        parts.append(f"{call}({norm_scala_arg(arg)})")
+        if call == "orderBy":
+            order_args.append(arg)
+        i = end
+    return parts, order_args, i
+
+
+def window_sites_in(text, rel):
+    """Yield (relpath, line, chain_fingerprint, has_orderby,
+    last_order_arg) for every Window spec chain in one comment-stripped
+    source text. A spec held in a val (`val w = Window.…`) is
+    fingerprinted where it is built, and again wherever a frame or
+    another chain call extends it (`w.rowsBetween(…)`): the extended
+    chain is its own spec, with the val's chain as its prefix."""
+    held = {}                  # val name -> [(pos, parts, order_args)]
+    for m in re.finditer(r"\bWindow\s*\.", text):
+        parts, order_args, _ = parse_chain(text, m.end())
+        if not parts:
+            continue          # Window.unboundedPreceding etc.
+        if not any(p.startswith(("partitionBy", "orderBy"))
+                   for p in parts):
+            continue
+        v = re.search(r"\bval\s+(\w+)\s*(?::\s*[\w.]+\s*)?=\s*$",
+                      text[:m.start()])
+        if v:
+            held.setdefault(v.group(1), []).append(
+                (m.start(), parts, order_args))
+        line = text.count("\n", 0, m.start()) + 1
+        yield (rel, line, ".".join(parts),
+               any(p.startswith("orderBy") for p in parts),
+               order_args[-1] if order_args else "")
+    for name, defs in held.items():
+        for m in re.finditer(r"\b%s(?=\s*\.\s*(%s)\s*\()"
+                             % (re.escape(name), "|".join(CHAIN_CALLS)),
+                             text):
+            # the nearest definition above the use (else the first one)
+            before = [d for d in defs if d[0] < m.start()]
+            _, base, base_order = (before or defs)[-1 if before else 0]
+            more, order_args, _ = parse_chain(text, m.end())
+            parts = base + more
+            order_args = base_order + order_args
+            line = text.count("\n", 0, m.start()) + 1
+            yield (rel, line, ".".join(parts),
+                   any(p.startswith("orderBy") for p in parts),
+                   order_args[-1] if order_args else "")
+    # tripwire: a WindowSpec passed around by type (a parameter, a def
+    # result) would evade the scan above — force it to be extended first
+    for m in re.finditer(r"\bWindowSpec\b", text):
+        line = text.count("\n", 0, m.start()) + 1
+        yield rel, line, "WINDOWSPEC_TYPE_USED", True, ""
+
+
 def scala_window_sites():
     """Yield (relpath, line, chain_fingerprint, has_orderby, last_order_arg)
     for every Window spec chain in main source."""
     for path in sorted(glob.glob(f"{SRC}/**/*.scala", recursive=True)):
-        text = strip_comments(open(path).read())
-        rel = os.path.relpath(path, REPO)
-        for m in re.finditer(r"\bWindow\s*\.", text):
-            i = m.end()
-            parts = []
-            order_args = []
-            while True:
-                mm = re.match(r"\s*(\w+)\s*\(", text[i:])
-                if not mm or mm.group(1) not in CHAIN_CALLS:
-                    # allow continued chain across whitespace + dot
-                    mm2 = re.match(r"\s*\.\s*(\w+)\s*\(", text[i:])
-                    if not mm2 or mm2.group(1) not in CHAIN_CALLS:
-                        break
-                    mm = mm2
-                call = mm.group(1)
-                op = i + mm.end() - 1          # index of '('
-                end = balanced(text, op)
-                arg = text[op + 1:end - 1]
-                parts.append(f"{call}({norm_scala_arg(arg)})")
-                if call == "orderBy":
-                    order_args.append(arg)
-                i = end
-            if not parts:
-                continue          # Window.unboundedPreceding etc.
-            if not any(p.startswith(("partitionBy", "orderBy"))
-                       for p in parts):
-                continue
-            line = text.count("\n", 0, m.start()) + 1
-            fp = ".".join(parts)
-            has_ob = any(p.startswith("orderBy") for p in parts)
-            last_arg = order_args[-1] if order_args else ""
-            yield rel, line, fp, has_ob, last_arg
-        # tripwire: a detached WindowSpec variable would evade the
-        # anchored scan above — force the scanner to be extended first
-        for m in re.finditer(r"\bWindowSpec\b", text):
-            line = text.count("\n", 0, m.start()) + 1
-            yield rel, line, "WINDOWSPEC_TYPE_USED", True, ""
+        yield from window_sites_in(strip_comments(open(path).read()),
+                                   os.path.relpath(path, REPO))
 
 
 def norm_scala_arg(arg):
@@ -507,9 +547,12 @@ def load_decls():
 
 def lint(sqls, decls, verbose=True):
     bad = []
+    live = {t: set() for t in ("scala_windows", "oracle_windows",
+                               "round_scala", "round_sql", "retry_scala")}
     dw = decls.get("scala_windows", {})
     for rel, line, fp, has_ob, last_arg in scala_window_sites():
         key = f"{rel}::{fp}"
+        live["scala_windows"].add(key)
         d = dw.get(key)
         if fp == "WINDOWSPEC_TYPE_USED":
             bad.append(f"{rel}:{line}: detached WindowSpec usage — the "
@@ -541,6 +584,7 @@ def lint(sqls, decls, verbose=True):
                        "value-invariance argument)")
     ow = decls.get("oracle_windows", {})
     for entry, func, clause, last in oracle_window_sites(sqls):
+        live["oracle_windows"].add(entry)
         d = ow.get(entry)
         if d is None:
             bad.append(f"oracle[{entry}]: UNDECLARED order-sensitive "
@@ -562,6 +606,7 @@ def lint(sqls, decls, verbose=True):
     rs = decls.get("round_scala", {})
     for rel, line, arg in round_quotient_sites_scala():
         key = f"{rel}::{arg}"
+        live["round_scala"].add(key)
         d = rs.get(key)
         if d is None:
             bad.append(f"{rel}:{line}: UNDECLARED round-on-quotient "
@@ -574,6 +619,7 @@ def lint(sqls, decls, verbose=True):
                        f"'{d.get('class')}'")
     rq = decls.get("round_sql", {})
     for entry, arg in round_quotient_sites_sql(sqls):
+        live["round_sql"].add(entry)
         d = rq.get(entry)
         if d is None:
             bad.append(f"oracle[{entry}]: UNDECLARED round-on-quotient "
@@ -584,6 +630,7 @@ def lint(sqls, decls, verbose=True):
                        f"'{d.get('class')}'")
     rt = decls.get("retry_scala", {})
     for rel, line, key, construct in retry_sites_scala():
+        live["retry_scala"].add(key)
         d = rt.get(key)
         if d is None:
             bad.append(f"{rel}:{line}: UNDECLARED retry-hazard "
@@ -598,6 +645,14 @@ def lint(sqls, decls, verbose=True):
         elif not d.get("reason"):
             bad.append(f"{rel}:{line}: retry site '{key}' class "
                        f"{d['class']} needs a reason")
+    # a declaration whose site is gone is dead: it no longer classifies
+    # anything, and new code that happens to fingerprint the same would
+    # inherit its class unreviewed
+    for table, keys in live.items():
+        for key in decls.get(table, {}):
+            if key not in keys:
+                bad.append(f"{table}: DEAD declaration '{key}' — its site "
+                           "is gone; delete it from tools/discipline.json")
     if verbose:
         for b in bad:
             print(f"[discipline] {b}")
@@ -696,6 +751,38 @@ def selftest(sqls, decls):
         bad5 = lint(sqls, d5, verbose=False)
         checks.append(("invalid retry class detected",
                        any("invalid class 'zz-bogus'" in b for b in bad5)))
+    # planted: a declaration whose site is gone
+    d6 = json.loads(json.dumps(decls))
+    d6.setdefault("scala_windows", {})[
+        "src/main/scala/graft/ops/Zz.scala::partitionBy(zz).orderBy(zz)"] = {
+        "class": "U", "reason": "planted dead key"}
+    bad6 = lint(sqls, d6, verbose=False)
+    checks.append(("dead declaration detected",
+                   any("DEAD declaration" in b and "Zz.scala" in b
+                       for b in bad6)))
+    # a frame added to a spec held in a val is its own spec: the scanner
+    # must fingerprint it, and the lint must fail when it is undeclared
+    held = ('object T {\n'
+            '  private val ord =\n'
+            '    Window.partitionBy(col("k")).orderBy(col("ts"), col("id"))\n'
+            '  val a = last(col("v")).over(ord.rowsBetween(-1, 0))\n'
+            '}\n')
+    fps = [fp for _, _, fp, _, _ in window_sites_in(strip_comments(held),
+                                                     "T.scala")]
+    checks.append(("frame on a val-held spec fingerprinted",
+                   "partitionBy(k).orderBy(ts,id).rowsBetween(-1,0)" in fps))
+    d7 = json.loads(json.dumps(decls))
+    framed = [k for k in d7.get("scala_windows", {})
+              if "Joins.scala::" in k and ".rowsBetween(" in k]
+    if framed:
+        d7["scala_windows"].pop(framed[0])
+        bad7 = lint(sqls, d7, verbose=False)
+        checks.append(("undeclared frame on a val-held spec detected",
+                       any("UNDECLARED window spec" in b and
+                           framed[0].split("::", 1)[1] in b for b in bad7)))
+    else:
+        checks.append(("undeclared frame on a val-held spec detected",
+                       False))
     # round-11 ADVICE: a quote or // inside s"...${ expr }..."
     # interpolation braces must re-enter code mode, not flip
     # string/comment state for the rest of the file — the scanner
