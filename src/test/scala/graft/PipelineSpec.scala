@@ -81,7 +81,7 @@ class PipelineSpec extends SparkSpec {
     caches.isEmpty shouldBe true
   }
 
-  test("a daily job over the fixture runs at most 58 Spark jobs") {
+  test("a daily job over the fixture runs at most 52 Spark jobs") {
     // With AQE every shuffle, broadcast and action is a Spark job, and at
     // small inputs the daily job's time follows its job count. The jobs
     // are counted by their own job group, so other suites' jobs are not.
@@ -100,6 +100,6 @@ class PipelineSpec extends SparkSpec {
     GraftProbeShim.drainListeners(sc)
     out("fact").unpersist()
     out("features").unpersist()
-    sc.statusTracker.getJobIdsForGroup(group).length should be <= 58
+    sc.statusTracker.getJobIdsForGroup(group).length should be <= 52
   }
 }
