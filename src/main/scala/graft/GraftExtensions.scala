@@ -1,57 +1,47 @@
 package graft
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{AnalysisException, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-import graft.expressions.{CdcBoundaries, FloatVecDot, Hash60All, MaskAndCount, Simhash60, SlidingWindows, SortedIntersectCount, WinnowFps}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import graft.expressions.Natives
 
-/** `SparkSessionExtensions` injection point — the deployment-grade way to
-  * ship this library's custom expressions to a cluster:
+/** `SparkSessionExtensions` injection point, the one way this library's
+  * native expressions get SQL names:
   *
   * {{{
   *   spark-submit --conf spark.sql.extensions=graft.GraftExtensions ...
   * }}}
   *
-  * Every session built with this config gets `vec_dot` (and any future
-  * custom expressions/rules) without per-session `register` calls.
-  * `FloatVecDot.register(spark)` remains for ad-hoc sessions.
+  * Every session built with this config resolves the eight names of
+  * [[Natives.sqlNames]] (`vec_dot`, `mask_and_count`, ...) from SQL,
+  * `expr` and `call_function`. Library code needs none of this: it builds
+  * the same nodes as typed Columns through [[Natives]].
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    // the builders validate arity with a clean WRONG_NUM_ARGS analysis
-    // error instead of children.head/children(1) crashing
-    ext.injectFunction((
-      FunctionIdentifier("vec_dot"),
-      new ExpressionInfo(classOf[FloatVecDot].getName, "vec_dot"),
-      FloatVecDot.builder))
-    ext.injectFunction((
-      FunctionIdentifier("mask_and_count"),
-      new ExpressionInfo(classOf[MaskAndCount].getName, "mask_and_count"),
-      MaskAndCount.builder))
-    ext.injectFunction((
-      FunctionIdentifier("sorted_intersect_count"),
-      new ExpressionInfo(classOf[SortedIntersectCount].getName,
-        "sorted_intersect_count"),
-      SortedIntersectCount.builder))
-    ext.injectFunction((
-      FunctionIdentifier("cdc_bounds"),
-      new ExpressionInfo(classOf[CdcBoundaries].getName, "cdc_bounds"),
-      CdcBoundaries.builder))
-    ext.injectFunction((
-      FunctionIdentifier("hash60_all"),
-      new ExpressionInfo(classOf[Hash60All].getName, "hash60_all"),
-      Hash60All.builder))
-    ext.injectFunction((
-      FunctionIdentifier("sliding_windows"),
-      new ExpressionInfo(classOf[SlidingWindows].getName, "sliding_windows"),
-      SlidingWindows.builder))
-    ext.injectFunction((
-      FunctionIdentifier("simhash60"),
-      new ExpressionInfo(classOf[Simhash60].getName, "simhash60"),
-      Simhash60.builder))
-    ext.injectFunction((
-      FunctionIdentifier("winnow_fps"),
-      new ExpressionInfo(classOf[WinnowFps].getName, "winnow_fps"),
-      WinnowFps.builder))
+  override def apply(ext: SparkSessionExtensions): Unit =
+    Natives.sqlNames.foreach { case (name, cls, arity, ctor) =>
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(cls.getName, name),
+        GraftExtensions.builder(name, arity, ctor)))
+    }
+}
+
+object GraftExtensions {
+
+  /** `ctor` behind an arity check, so `vec_dot(x)` fails analysis with
+    * the standard WRONG_NUM_ARGS error naming the function, not with an
+    * out-of-bounds crash inside the constructor. */
+  private def builder(name: String, arity: Int,
+                      ctor: Seq[Expression] => Expression)
+      : Seq[Expression] => Expression = children => {
+    if (children.length != arity)
+      throw new AnalysisException(
+        errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
+        messageParameters = Map(
+          "functionName" -> s"`$name`",
+          "expectedNum" -> arity.toString,
+          "actualNum" -> children.length.toString,
+          "docroot" -> "https://spark.apache.org/docs/latest"))
+    ctor(children)
   }
 }

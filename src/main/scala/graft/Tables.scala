@@ -109,11 +109,6 @@ object Tables {
   }
 
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    // every entry reads through here with its EXECUTING session — the
-    // one place that can guarantee the custom expressions are registered
-    // where the plan will be analyzed (round-14 ADVICE: construction-time
-    // getActiveSession registration can hit the wrong session)
-    graft.expressions.Registration.registerAll(spark)
     // only the relation is memoized: the layout probe runs on every call,
     // so a nanos-layout frame always has the flag re-asserted
     val df =

@@ -1,6 +1,5 @@
 package graft.expressions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -91,16 +90,4 @@ case class CdcBoundaries(child: Expression)
 
   override protected def withNewChildInternal(newChild: Expression): CdcBoundaries =
     copy(child = newChild)
-}
-
-object CdcBoundaries {
-
-  val builder: Seq[Expression] => Expression =
-    Registration.arityOneBuilder("cdc_bounds", CdcBoundaries(_))
-
-  /** Registers `cdc_bounds(text)` in the session's function registry.
-    * Idempotent. */
-  def register(spark: SparkSession): Unit =
-    Registration.register(spark, "cdc_bounds",
-      classOf[CdcBoundaries].getName, builder)
 }

@@ -1,9 +1,7 @@
 package graft.expressions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
@@ -77,20 +75,4 @@ case class FloatVecDot(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): FloatVecDot =
     copy(left = newLeft, right = newRight)
-}
-
-object FloatVecDot {
-
-  /** Registry builder shared by [[register]] and `GraftExtensions`:
-    * validates arity at plan-build time so `vec_dot(x)` fails with the
-    * standard WRONG_NUM_ARGS analysis error naming the signature, not a
-    * `NoSuchElementException` out of `children.head`/`children(1)`. */
-  val builder: Seq[Expression] => Expression =
-    Registration.arityTwoBuilder("vec_dot", FloatVecDot(_, _))
-
-  /** Registers `vec_dot(a, b)` in the session's function registry so it is
-    * usable from `expr(...)`/SQL. Idempotent. */
-  def register(spark: SparkSession): Unit =
-    Registration.register(spark, "vec_dot",
-      classOf[FloatVecDot].getName, builder)
 }

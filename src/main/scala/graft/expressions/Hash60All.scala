@@ -1,6 +1,5 @@
 package graft.expressions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -65,16 +64,4 @@ case class Hash60All(child: Expression)
 
   override protected def withNewChildInternal(newChild: Expression): Hash60All =
     copy(child = newChild)
-}
-
-object Hash60All {
-
-  val builder: Seq[Expression] => Expression =
-    Registration.arityOneBuilder("hash60_all", Hash60All(_))
-
-  /** Registers `hash60_all(arr)` in the session's function registry.
-    * Idempotent. */
-  def register(spark: SparkSession): Unit =
-    Registration.register(spark, "hash60_all",
-      classOf[Hash60All].getName, builder)
 }

@@ -1,9 +1,7 @@
 package graft.expressions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
@@ -78,18 +76,4 @@ case class MaskAndCount(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): MaskAndCount =
     copy(left = newLeft, right = newRight)
-}
-
-object MaskAndCount {
-
-  /** Registry builder (shared by [[register]] and `GraftExtensions`):
-    * validates arity with the standard WRONG_NUM_ARGS analysis error. */
-  val builder: Seq[Expression] => Expression =
-    Registration.arityTwoBuilder("mask_and_count", MaskAndCount(_, _))
-
-  /** Registers `mask_and_count(a, b)` in the session's function registry.
-    * Idempotent. */
-  def register(spark: SparkSession): Unit =
-    Registration.register(spark, "mask_and_count",
-      classOf[MaskAndCount].getName, builder)
 }

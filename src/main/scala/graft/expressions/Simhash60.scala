@@ -1,6 +1,5 @@
 package graft.expressions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -91,16 +90,4 @@ case class Simhash60(child: Expression)
 
   override protected def withNewChildInternal(newChild: Expression): Simhash60 =
     copy(child = newChild)
-}
-
-object Simhash60 {
-
-  val builder: Seq[Expression] => Expression =
-    Registration.arityOneBuilder("simhash60", Simhash60(_))
-
-  /** Registers `simhash60(arr)` in the session's function registry.
-    * Idempotent. */
-  def register(spark: SparkSession): Unit =
-    Registration.register(spark, "simhash60",
-      classOf[Simhash60].getName, builder)
 }

@@ -1,6 +1,5 @@
 package graft.expressions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -94,15 +93,4 @@ case class SlidingWindows(first: Expression, second: Expression,
       newFirst: Expression, newSecond: Expression,
       newThird: Expression): SlidingWindows =
     copy(first = newFirst, second = newSecond, third = newThird)
-}
-
-object SlidingWindows {
-
-  val builder: Seq[Expression] => Expression =
-    Registration.arityThreeBuilder("sliding_windows", SlidingWindows(_, _, _))
-
-  /** Registers `sliding_windows(text, width, stride)`. Idempotent. */
-  def register(spark: SparkSession): Unit =
-    Registration.register(spark, "sliding_windows",
-      classOf[SlidingWindows].getName, builder)
 }

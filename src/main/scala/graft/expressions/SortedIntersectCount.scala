@@ -1,6 +1,5 @@
 package graft.expressions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -116,16 +115,4 @@ case class SortedIntersectCount(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): SortedIntersectCount =
     copy(left = newLeft, right = newRight)
-}
-
-object SortedIntersectCount {
-
-  val builder: Seq[Expression] => Expression =
-    Registration.arityTwoBuilder("sorted_intersect_count",
-      SortedIntersectCount(_, _))
-
-  /** Registers `sorted_intersect_count(a, b)`. Idempotent. */
-  def register(spark: SparkSession): Unit =
-    Registration.register(spark, "sorted_intersect_count",
-      classOf[SortedIntersectCount].getName, builder)
 }

@@ -1,6 +1,5 @@
 package graft.expressions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -138,15 +137,4 @@ case class WinnowFps(first: Expression, second: Expression,
       newFirst: Expression, newSecond: Expression,
       newThird: Expression): WinnowFps =
     copy(first = newFirst, second = newSecond, third = newThird)
-}
-
-object WinnowFps {
-
-  val builder: Seq[Expression] => Expression =
-    Registration.arityThreeBuilder("winnow_fps", WinnowFps(_, _, _))
-
-  /** Registers `winnow_fps(text, width, w)`. Idempotent. */
-  def register(spark: SparkSession): Unit =
-    Registration.register(spark, "winnow_fps",
-      classOf[WinnowFps].getName, builder)
 }

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Tables
+import graft.expressions.Natives
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -285,7 +286,7 @@ object Clustering {
     * loop. */
   val extEmbedClusters: Q = (s, d) => {
     val emb = Tables.embeddings(s, d)
-    val pairs = Similarity.blockPairs(s, emb, blocks = 8)
+    val pairs = Similarity.blockPairs(emb, blocks = 8)
       .filter(col("cos") >= 0.35)
       .select(col("a"), col("b"))
     val labels = connectedComponents(pairs, emb.select(col("vec_id")))
@@ -329,8 +330,7 @@ object Clustering {
     * so ClusteringSpec can plan-assert the WindowGroupLimit shape —
     * [[mutualKnnEdges]] checkpoints this frame, which truncates the
     * visible plan. */
-  def knnCandidates(s: org.apache.spark.sql.SparkSession,
-                    emb: DataFrame, k: Int): DataFrame = {
+  def knnCandidates(emb: DataFrame, k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // The grid join is materialized ONCE and both direction projections
     // read the checkpointed pairs. History of this spelling: the
@@ -344,7 +344,7 @@ object Clustering {
     // and it is the scale-dominant form: at real corpus sizes the grid
     // join dwarfs a sequential write+read of its output, so the pair
     // source must execute once.
-    val pairs = Similarity.blockPairs(s, emb, blocks = 8).localCheckpoint()
+    val pairs = Similarity.blockPairs(emb, blocks = 8).localCheckpoint()
     val sym = pairs
       .select(col("a").as("node"), col("b").as("nbr"), col("cos"))
       .union(pairs.select(col("b").as("node"), col("a").as("nbr"),
@@ -377,13 +377,12 @@ object Clustering {
       .select(col("x.node").as("a"), col("x.nbr").as("b"))
   }
 
-  def mutualKnnEdges(s: org.apache.spark.sql.SparkSession,
-                     emb: DataFrame, k: Int): DataFrame =
-    mutualEdges(knnCandidates(s, emb, k))
+  def mutualKnnEdges(emb: DataFrame, k: Int): DataFrame =
+    mutualEdges(knnCandidates(emb, k))
 
   val extKnnMutualClusters: Q = (s, d) => {
     val emb = Tables.embeddings(s, d)
-    val mutual = mutualKnnEdges(s, emb, k = 2)
+    val mutual = mutualKnnEdges(emb, k = 2)
     val labels = connectedComponents(mutual, emb.select(col("vec_id")))
     clusterReport(labels, "vec_id")
   }
@@ -419,11 +418,9 @@ object Clustering {
     * sees it because the broadcast is explicit. Skewed cells (real
     * embedding spaces cluster) re-balance under AQE skew-join on the
     * cell equi-join. */
-  def annKnnCandidates(s: org.apache.spark.sql.SparkSession,
-                       emb: DataFrame, k: Int,
+  def annKnnCandidates(emb: DataFrame, k: Int,
                        nprobe: Int = 2): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.expressions.FloatVecDot.register(s)
     // one count() action to size the codebook (the entry family is
     // eager anyway — the CC loop runs jobs at construction time)
     val n = emb.count()
@@ -490,7 +487,7 @@ object Clustering {
   val extKnnAnnClusters: Q = (s, d) => {
     val emb = Tables.embeddings(s, d)
     // checkpoint: reused by the CC loop's symmetrization AND the audit
-    val mutual = mutualEdges(annKnnCandidates(s, emb, k = 2))
+    val mutual = mutualEdges(annKnnCandidates(emb, k = 2))
       .localCheckpoint()
     val labels = connectedComponents(mutual, emb.select(col("vec_id")))
 
@@ -573,7 +570,6 @@ object Clustering {
     // the per-task edge batches grow 10⁴× at corpus scale. Counts are
     // identical: adjacency arrays are sorted, distinct, non-null by
     // construction (collect_list over distinct oriented edges).
-    graft.expressions.SortedIntersectCount.register(s)
     val li = Tables.lineitem(s, d)
       .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
       .distinct()
@@ -607,7 +603,7 @@ object Clustering {
     val tri = or
       .join(adj.select(col("u"), col("nb").as("nb_u")), Seq("u"))
       .join(adj.select(col("u").as("v"), col("nb").as("nb_v")), Seq("v"))
-      .select(expr("sorted_intersect_count(nb_u, nb_v)").as("t"))
+      .select(Natives.sortedIntersectCount(col("nb_u"), col("nb_v")).as("t"))
       // coalesce 0: a triangle-free graph leaves the wedge join empty and
       // a bare global sum() returns NULL where the oracle's count(*)
       // returns 0 (fuzz seed 101, 20-event sparse graph)

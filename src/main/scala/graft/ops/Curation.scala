@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Tables
+import graft.expressions.Natives
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -202,11 +203,10 @@ object Curation {
     // bound (with the postings-grain rework below already in place).
     // native one-pass window expression (Dedup.extSubstringDedup note):
     // per-position substr is O(len²) on a giant row
-    graft.expressions.SlidingWindows.register(s)
     def chargrams(c: String): Column =
       bindOnce(lower(col(c))) { lt =>
         when(length(lt) >= 3,
-          call_function("sliding_windows", lt, lit(3), lit(1)))
+          Natives.slidingWindows(lt, 3, 1))
           .otherwise(array(lt))
       }
     // Postings grain, not occurrence grain: per-doc trigram COUNTS are

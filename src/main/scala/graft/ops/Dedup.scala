@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Tables
+import graft.expressions.Natives
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
@@ -68,24 +69,6 @@ object Dedup {
        |      CAST(strpos('0123456789abcdef', substr(md5($x), i, 1)) - 1 AS BIGINT)),
        |      (a, b) -> a * 16 + b)""".stripMargin
 
-  /** [[hash60]] of every element of a string array through the native
-    * [[graft.expressions.Hash60All]] loop (r14): `transform(arr, hash60)`
-    * pays one INTERPRETED md5+conv lambda per element — the dominant CPU
-    * of the signature kernels at token grain. Self-registering on the
-    * active/default session so every caller (entries, specs, the
-    * session-less helpers) keeps working; falls back to the declarative
-    * spelling when no session exists yet (Column construction without a
-    * session — only reachable from exotic test setups). Bit-identical
-    * either way (Hash60AllSpec). */
-  private def hash60All(arr: Column): Column =
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession) match {
-      case Some(s) =>
-        graft.expressions.Hash60All.register(s)
-        call_function("hash60_all", arr)
-      case None => transform(arr, x => hash60(x))
-    }
-
   private val P31 = 2147483647L // Mersenne prime 2^31-1
   /** Deterministic 31-bit affine-permutation constants (LCG, fixed seed);
     * 31-bit domain keeps a*h+b < 2^62, overflow-free under ANSI mode.
@@ -102,7 +85,8 @@ object Dedup {
     * each of the k permutation aggregates would recompute every
     * shingle's md5. */
   def minhashSig(shingles: Column, k: Int = 16): Column =
-    bindOnce(transform(hash60All(shingles), h => pmod(h, lit(P31)))) { hs =>
+    bindOnce(transform(Natives.hash60All(shingles),
+                       h => pmod(h, lit(P31)))) { hs =>
       array(permConsts(k).map { case (a, b) =>
         aggregate(hs, lit(Long.MaxValue),
           (acc, h) => least(acc, pmod(lit(a) * h + lit(b), lit(P31))))
@@ -115,23 +99,16 @@ object Dedup {
     * spelling below walks the hash array through 60 INTERPRETED
     * higher-order aggregates per document — the residual signature CPU
     * of the simhash family after r14 moved the md5 into `hash60_all`.
-    * Same session-registration discipline as [[hash60All]]; bit-identical
-    * either way (Simhash60Spec pins native against declarative). */
+    * Bit-identical to it (Simhash60Spec pins native against
+    * declarative). */
   def simhash60(text: Column): Column =
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession) match {
-      case Some(s) =>
-        graft.expressions.Simhash60.register(s)
-        call_function("simhash60", array_distinct(toks(text)))
-      case None => simhash60Decl(text)
-    }
+    Natives.simhash60(array_distinct(toks(text)))
 
   /** The declarative [[simhash60]] spelling (the form the DuckDB oracle
-    * replays): 60 per-bit `aggregate` folds over the [[hash60All]] hash
-    * array, bound once. Kept as the Simhash60Spec reference and the
-    * no-session fallback. */
+    * replays): 60 per-bit `aggregate` folds over the `hash60_all` hash
+    * array, bound once. Kept only as the Simhash60Spec reference. */
   private[graft] def simhash60Decl(text: Column): Column =
-    bindOnce(hash60All(array_distinct(toks(text)))) { hs =>
+    bindOnce(Natives.hash60All(array_distinct(toks(text)))) { hs =>
       val bitSums = (0 until 60).map { b =>
         aggregate(hs, lit(0),
           (acc, h) =>
@@ -442,7 +419,6 @@ object Dedup {
       case Some(vocab) =>
         val s = docsTok.sparkSession
         import s.implicits._
-        graft.expressions.MaskAndCount.register(s)
         val nSlots = (vocab.length + 63) / 64
         val vocabDf = vocab.zipWithIndex.toSeq.toDF("w", "wid")
         // one-shuffle assembly: nSlots is known at plan time, so each
@@ -467,7 +443,7 @@ object Dedup {
             col("x.source") === col("y.source") &&
             col("x.doc_id") < col("y.doc_id"))
           .select(col("x.doc_id").as("d1"), col("y.doc_id").as("d2"),
-            expr("mask_and_count(x.mask, y.mask)").as("n_common"),
+            Natives.maskAndCount(col("x.mask"), col("y.mask")).as("n_common"),
             col("x.nw").as("nw1"), col("y.nw").as("nw2"))
       case None =>
         val dw = docsTok.select(col("doc_id"), col("source"),
@@ -573,15 +549,13 @@ object Dedup {
     // single 100k-token doc turns into a 15-min task (round-11
     // giant-row fuzz finding); the oracle keeps the declarative substr
     // replay, SlidingWindowsSpec pins row-by-row equivalence
-    graft.expressions.SlidingWindows.register(s)
     // fanout + materialize (r14): same reasoning as extSuffixDedup —
     // the stride-grid hashing ran serially on the scan task and twice
     // (duplicate-key aggregate + join back)
     val sh = fanout(Tables.documents(s, d), col("doc_id"))
       .filter(length(col("text")) >= 32)
       .select(col("doc_id"), col("source"),
-        explode(call_function("sliding_windows",
-          col("text"), lit(32), lit(8))).as("shingle"))
+        explode(Natives.slidingWindows(col("text"), 32, 8)).as("shingle"))
       .select(col("doc_id"), col("source"), hash60(col("shingle")).as("wkey"))
       .localCheckpoint()
     val dup = sh.groupBy(col("wkey"))
@@ -632,8 +606,8 @@ object Dedup {
           // window STRINGS build in the (cheap) lambda; the md5+conv
           // step runs through the native hash60_all loop (r14)
           when(size(t) >= L,
-            hash60All(transform(sequence(lit(1), size(t) - (L - 1)), p =>
-              concat_ws(" ", slice(t, p, lit(L))))))
+            Natives.hash60All(transform(sequence(lit(1), size(t) - (L - 1)),
+              p => concat_ws(" ", slice(t, p, lit(L))))))
             .otherwise(array().cast("array<long>"))
         }))
       .toDF("doc_id", "source", "wpos", "wkey")
@@ -718,12 +692,10 @@ object Dedup {
     * to (shingle, source) grain BEFORE the self-join so the pair join is
     * over distinct source-postings, not raw occurrences. */
   val extSourceOverlap: Q = (s, d) => {
-    graft.expressions.SlidingWindows.register(s)
     val sh = Tables.documents(s, d)
       .filter(length(col("text")) >= 32)
       .select(col("source"),
-        explode(call_function("sliding_windows",
-          col("text"), lit(32), lit(8))).as("shingle"))
+        explode(Natives.slidingWindows(col("text"), 32, 8)).as("shingle"))
       .distinct()
     sh.as("x").join(sh.as("y"),
         col("x.shingle") === col("y.shingle") &&
@@ -741,12 +713,10 @@ object Dedup {
     * per-doc ratio is one division of exact longs, averaged per source
     * via the 12-decimal quantized sum. */
   val extNoveltyRate: Q = (s, d) => {
-    graft.expressions.SlidingWindows.register(s)
     val sh = Tables.documents(s, d)
       .filter(length(col("text")) >= 32)
       .select(col("doc_id"), col("source"),
-        explode(call_function("sliding_windows",
-          col("text"), lit(32), lit(8))).as("shingle"))
+        explode(Natives.slidingWindows(col("text"), 32, 8)).as("shingle"))
       .distinct()
     val firstSeen = sh.groupBy(col("shingle"))
       .agg(min(col("doc_id")).as("first_doc"))
@@ -790,7 +760,6 @@ object Dedup {
     * every SF — the candidate set is what grows, and it grows with true
     * duplicate density, not corpus². */
   val extDedupSweep: Q = (s, d) => {
-    graft.expressions.SortedIntersectCount.register(s)
     // ONE fanned-out, materialized pass computes the shingle array once
     // and derives BOTH the MinHash signature and the sorted shingle set
     // from it (r14): the old spelling ran shingles3+md5 serially on the
@@ -812,7 +781,7 @@ object Dedup {
                         col("nsh").as("na")), Seq("a"))
       .join(sets.select(col("doc_id").as("b"), col("ssh").as("sb"),
                         col("nsh").as("nb")), Seq("b"))
-      .select(expr("sorted_intersect_count(sa, sb)").as("inter"),
+      .select(Natives.sortedIntersectCount(col("sa"), col("sb")).as("inter"),
               col("na"), col("nb"))
       .withColumn("uni", col("na") + col("nb") - col("inter"))
       .select(explode(array((5 to 9).map(t => lit(t * 10L)): _*))
@@ -848,9 +817,7 @@ object Dedup {
     // transform — one lambda eval + w element_ats per corpus character
     // — plus two ~len-element intermediate arrays per doc. Bit-identical
     // to the declarative chain [[winnowFpsDecl]] (WinnowFpsSpec).
-    graft.expressions.WinnowFps.register(s)
-    val fps = call_function("winnow_fps", lower(col("text")),
-                            lit(8), lit(4))
+    val fps = Natives.winnowFps(lower(col("text")), 8, 4)
     // the gram-hash projection is ~1k md5/doc: without a repartition it
     // runs inside the single-split parquet scan (docs are ~1 KB, so the
     // split count tracks bytes while the cost is CPU) — one cheap
@@ -873,16 +840,16 @@ object Dedup {
 
   /** The declarative [[extWinnowing]] fingerprint chain (the form the
     * DuckDB oracle replays): character 8-grams via `sliding_windows`,
-    * [[hash60All]] per gram, w=4 window minima as least-of-4
+    * `hash60_all` per gram, w=4 window minima as least-of-4
     * element_ats, first-occurrence `array_distinct`. Kept as the
     * WinnowFpsSpec reference for the fused native kernel. */
   private[graft] def winnowFpsDecl(textLower: Column): Column = {
     val grams = bindOnce(textLower) { t =>
       when(length(t) >= 8,
-        call_function("sliding_windows", t, lit(8), lit(1)))
+        Natives.slidingWindows(t, 8, 1))
         .otherwise(array(t))
     }
-    bindOnce(call_function("hash60_all", grams)) { hs =>
+    bindOnce(Natives.hash60All(grams)) { hs =>
       when(size(hs) >= 4,
         array_distinct(transform(sequence(lit(0), size(hs) - 4),
           j => least(element_at(hs, j + 1), element_at(hs, j + 2),
@@ -1080,7 +1047,7 @@ object Dedup {
     * declarative: slice/zip_with/substr are cheap at chunk grain. */
   private[graft] def cdcChunks(text: Column): Column =
     bindOnce(text) { t =>
-      val bounds = call_function("cdc_bounds", t)
+      val bounds = Natives.cdcBounds(t)
       // slice length must be exact: start+length overflows Int.MaxValue
       val ends = concat(
         slice(bounds, lit(2), greatest(size(bounds) - 1, lit(0))),
@@ -1089,7 +1056,6 @@ object Dedup {
     }
 
   val extCdcChunks: Q = (s, d) => {
-    graft.expressions.CdcBoundaries.register(s)
     Tables.documents(s, d)
       .select(col("source"), explode(cdcChunks(col("text"))).as("chunk"))
       .select(col("source"), md5(col("chunk")).as("dig"),
@@ -1121,7 +1087,6 @@ object Dedup {
     * `ext_contamination`); pair aggregation at (a,b) grain; counts
     * joined back at doc grain. Never doc×doc on raw text. */
   val extCdcDedup: Q = (s, d) => {
-    graft.expressions.CdcBoundaries.register(s)
     // fanout + materialize (r14): the cdc_bounds md5 loop ran serially
     // on the scan task, and the distinct digest frame is read three
     // times below (df cap, the semi-join, the per-doc counts)

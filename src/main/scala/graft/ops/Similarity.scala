@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Tables
+import graft.expressions.Natives
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -28,11 +29,10 @@ import org.apache.spark.sql.functions._
 object Similarity {
 
   /** Σ double(x)·double(y) over zipped float arrays — exact, fold-ordered.
-    * Uses the codegen'd [[graft.expressions.FloatVecDot]] (register it on
-    * the session first); [[dotDHof]] is the declarative equivalent kept
-    * for A/B measurement — both produce bit-identical doubles. */
-  def dotD(a: Column, b: Column): Column =
-    call_function("vec_dot", a, b)
+    * Uses the codegen'd [[graft.expressions.FloatVecDot]] as a typed
+    * Column; [[dotDHof]] is the declarative equivalent kept for A/B
+    * measurement — both produce bit-identical doubles. */
+  def dotD(a: Column, b: Column): Column = Natives.vecDot(a, b)
 
   /** Higher-order-function form of [[dotD]] (interpreted; ~µs per call). */
   def dotDHof(a: Column, b: Column): Column =
@@ -73,7 +73,6 @@ object Similarity {
     * vectors; k = 5. The candidate side is broadcast (it's the smaller,
     * re-used side); ranking via per-query window. */
   val extKnnCosine: Q = (s, d) => {
-    graft.expressions.FloatVecDot.register(s)
     val e = Tables.embeddings(s, d)
     val q = e.select(col("vec_id").as("qid"), col("embedding").as("qe"))
       .filter(col("qid") < 10)
@@ -115,7 +114,7 @@ object Similarity {
     * before replication — identical fold-ordered double arithmetic, so
     * still bit-exact vs the oracle. */
   val extEmbedNeardup: Q = (s, d) =>
-    blockPairs(s, Tables.embeddings(s, d), blocks = 8)
+    blockPairs(Tables.embeddings(s, d), blocks = 8)
       .filter(col("cos") >= 0.35)
       .select(col("a"), col("b"), col("cos"))
       .orderBy(col("a"), col("b"))
@@ -125,8 +124,7 @@ object Similarity {
     * `blocks` bounds per-task memory (a task joins two blocks of
     * ~N/blocks rows); replication factor is blocks+1. Output columns:
     * (a, b, cos) with a < b. */
-  def blockPairs(s: SparkSession, emb: DataFrame, blocks: Int): DataFrame = {
-    graft.expressions.FloatVecDot.register(s)
+  def blockPairs(emb: DataFrame, blocks: Int): DataFrame = {
     val e = emb.select(col("vec_id"), col("embedding"),
         normD(col("embedding")).as("nrm"),
         pmod(col("vec_id"), lit(blocks)).cast("int").as("blk"))
@@ -161,9 +159,8 @@ object Similarity {
     * in PLANS.md (at threshold 0.35 on this corpus the theory caps recall
     * well under 1 — which is exactly why the oracle-bound entry ships the
     * exact grid instead). */
-  def neardupCandidatesLsh(s: SparkSession, emb: DataFrame,
-                           bands: Int, rows: Int): DataFrame = {
-    graft.expressions.FloatVecDot.register(s)
+  def neardupCandidatesLsh(emb: DataFrame, bands: Int,
+                           rows: Int): DataFrame = {
     val nPlanes = bands * rows
     val ps = morePlanes(nPlanes)
     val e = emb.select(col("vec_id"), col("embedding"),
@@ -194,7 +191,6 @@ object Similarity {
     * the vec_id < 10 queries `(qid, qe, qsig)` and the corpus
     * `(cid, ce, csig)`. */
   private def lshSides(s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    graft.expressions.FloatVecDot.register(s)
     val e = Tables.embeddings(s, d)
       .select(col("vec_id"), col("embedding"), lshSig(col("embedding")).as("sig"))
     (e.select(col("vec_id").as("qid"), col("embedding").as("qe"),
@@ -236,7 +232,6 @@ object Similarity {
     * MUST use this one definition. */
   private[graft] def ivfRanked(s: SparkSession, d: String)
       : org.apache.spark.sql.DataFrame = {
-    graft.expressions.FloatVecDot.register(s)
     val e = Tables.embeddings(s, d)
     val seeds = e.filter(col("vec_id") < 16)
       .select(col("vec_id").as("seed_id"), col("embedding").as("se"))
@@ -356,7 +351,6 @@ object Similarity {
     * [[extPqEncode]] and [[extPqAdc]] — argmax sub-cosine against the 16
     * seed sub-centroids of subspace m, ties to the smaller seed. */
   def pqCodes(s: SparkSession, d: String): DataFrame = {
-    graft.expressions.FloatVecDot.register(s)
     val sliced = pqSliced(s, d)
     val seeds = sliced.filter(col("vec_id") < 16)
       .select(col("m").as("sm"), col("vec_id").as("seed_id"),
@@ -405,7 +399,6 @@ object Similarity {
   /** Shared ADC scoring stage of [[extPqAdc]] / [[extPqRecall]]:
     * every (query, candidate) pair with its compressed-domain cosine. */
   private def adcScores(s: SparkSession, d: String): DataFrame = {
-    graft.expressions.FloatVecDot.register(s)
     val codes = pqCodes(s, d)
     val sliced = pqSliced(s, d)
     val seeds = sliced.filter(col("vec_id") < 16)
@@ -444,7 +437,6 @@ object Similarity {
     * mean. One map stage + one single-row aggregate at any corpus
     * size. */
   val extEmbedAudit: Q = (s, d) => {
-    graft.expressions.FloatVecDot.register(s)
     val sq = dotD(col("embedding"), col("embedding"))
     Tables.embeddings(s, d)
       .select(col("vec_id"), size(col("embedding")).as("dim"),
@@ -470,7 +462,6 @@ object Similarity {
     * corpus), the rank windows run over 10-row frames, and the fusion
     * join is 10×10-bounded. */
   val extHybridRank: Q = (s, d) => {
-    graft.expressions.FloatVecDot.register(s)
     val wS = org.apache.spark.sql.expressions.Window
       .orderBy(col("score").desc, col("doc_id"))
     val sparse = TextAnalysis.bm25Scored(s, d)
@@ -526,7 +517,6 @@ object Similarity {
   private[graft] def recallAt5(queries: DataFrame, corpus: DataFrame,
                                candidates: DataFrame,
                                score: String = "cos"): DataFrame = {
-    graft.expressions.FloatVecDot.register(queries.sparkSession)
     bruteTop5(queries, corpus).withColumn("b", lit(1))
       .join(perQueryTop5(candidates, score).withColumn("a", lit(1)),
             Seq("qid", "cid"), "full_outer")
@@ -714,7 +704,6 @@ object Similarity {
     * itself grows. Cosine is bit-identical cross-engine: sequential
     * fold dot, IEEE division/sqrt (same contract as ext_knn_cosine). */
   val extHardNegatives: Q = (s, d) => {
-    graft.expressions.FloatVecDot.register(s)
     val e = Tables.embeddings(s, d)
     val q = e.select(col("vec_id").as("qid"), col("label").as("qlabel"),
                      col("embedding").as("qe"))
@@ -753,7 +742,6 @@ object Similarity {
     * ratio is ONE IEEE division under round(6), zero-guarded for
     * queries with no relevant candidate. */
   val extNdcg: Q = (s, d) => {
-    graft.expressions.FloatVecDot.register(s)
     val e = Tables.embeddings(s, d)
     val q = e.select(col("vec_id").as("qid"), col("label").as("qlabel"),
                      col("embedding").as("qe"))
@@ -811,7 +799,6 @@ object Similarity {
     * reaches a query through at most ONE probe (its home cell is
     * unique), so no distinct is needed. */
   val extIvfpqAdc: Q = (s, d) => {
-    graft.expressions.FloatVecDot.register(s)
     val probes = ivfRanked(s, d)
       .filter(col("vec_id") < 10 && col("rn") <= 2)
       .select(col("vec_id").as("qid"), col("seed_id").as("plist"),
@@ -911,7 +898,6 @@ object Similarity {
     * (re, nn) only; the query batch broadcasts; top-3 per query via the
     * rank window. One corpus scan for stats + one for scoring at any N. */
   val extSq8Adc: Q = (s, d) => {
-    graft.expressions.FloatVecDot.register(s)
     val e = Tables.embeddings(s, d)
     val grids = e.select(posexplode(col("embedding")))
       .toDF("dim", "v")
@@ -976,7 +962,6 @@ object Similarity {
     * the truth set is the m=64 slice of the same ranking, and the only
     * window partitions by (m, qid) — 40 bounded groups. */
   val extMrlRecall: Q = (s, d) => {
-    graft.expressions.FloatVecDot.register(s)
     import s.implicits._
     val e = Tables.embeddings(s, d)
     val dims = Seq(8, 16, 32, 64).toDF("m")

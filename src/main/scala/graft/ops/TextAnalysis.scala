@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Tables
+import graft.expressions.Natives
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -208,10 +209,9 @@ object TextAnalysis {
   val extNgramProfile: Q = (s, d) => {
     // native one-pass window expression (Dedup.extSubstringDedup note):
     // per-position substr is O(len²) on a giant row
-    graft.expressions.SlidingWindows.register(s)
     val grams = bindOnce(lower(col("text"))) { lt =>
       when(length(lt) >= 3,
-        call_function("sliding_windows", lt, lit(3), lit(1)))
+        Natives.slidingWindows(lt, 3, 1))
         .otherwise(array(lt))
     }
     val counts = fanout(Tables.documents(s, d), col("doc_id"))

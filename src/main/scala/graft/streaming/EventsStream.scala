@@ -815,7 +815,6 @@ object EventsStream {
     * cells × batches. The scratch base is [[scopedBase]] keyed on the
     * embeddings file. */
   def embeddingDriftStream(s: SparkSession, sfDir: String): DataFrame = {
-    graft.expressions.FloatVecDot.register(s)
     val base = scopedBase("embdrift", Some(sfDir), table = "embeddings")
     val srcDir = s"$base/src4"
     if (!Files.exists(Paths.get(srcDir, "_SUCCESS")))

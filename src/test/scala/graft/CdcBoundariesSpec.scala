@@ -16,7 +16,6 @@ class CdcBoundariesSpec extends SparkSpec {
       i => i === 1 || pmod(Dedup.hash60(t.substr(i, lit(8))), lit(64L)) === 0)
 
   test("native cdc_bounds equals the declarative hash60 spelling on every corpus row") {
-    graft.expressions.CdcBoundaries.register(spark)
     val mismatches = Tables.documents(spark, sf("sf0.001"))
       .select(call_function("cdc_bounds", col("text")).as("nb"),
               declarative(col("text")).as("db"))
@@ -26,7 +25,6 @@ class CdcBoundariesSpec extends SparkSpec {
   }
 
   test("native cdc_bounds edge cases: empty, short, and BMP non-ascii input") {
-    graft.expressions.CdcBoundaries.register(spark)
     import spark.implicits._
     // the last two rows carry ASTRAL chars (surrogate pairs in Java's
     // UTF-16): the kernel must window by CODE POINTS like Spark substr

@@ -133,7 +133,7 @@ class ClusteringSpec extends SparkSpec {
     // scale shape: the rank-k cut must compile to WindowGroupLimit
     // (per-partition heaps), never a full per-node sort of the pair list
     val plan = Clustering.knnCandidates(
-      spark, spark.read.parquet(s"$dir/embeddings.parquet"), 2)
+      spark.read.parquet(s"$dir/embeddings.parquet"), 2)
       .queryExecution.executedPlan.toString
     assert(plan.contains("WindowGroupLimit"), plan.take(2000))
   }
@@ -177,7 +177,7 @@ class ClusteringSpec extends SparkSpec {
     // scale shape: the ANN rank-k cut must also compile to
     // WindowGroupLimit — per-partition heaps, no full candidate sort
     val plan = Clustering.annKnnCandidates(
-      spark, spark.read.parquet(s"$dir/embeddings.parquet"), 2)
+      spark.read.parquet(s"$dir/embeddings.parquet"), 2)
       .queryExecution.executedPlan.toString
     assert(plan.contains("WindowGroupLimit"), plan.take(2000))
     // and the candidate source must NOT be the exact grid: no

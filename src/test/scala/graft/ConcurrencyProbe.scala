@@ -5,9 +5,9 @@ import org.apache.spark.sql.SparkSession
 /** Shared-session CONCURRENCY probe (round 12, beyond the verdict's
   * asks): a 100 TB deployment runs many queries against shared compute;
   * within one SparkSession the hazards are session-GLOBAL mutable state
-  * — the nanos-layout conf flag ([[Tables.table]]), custom-expression
-  * registration (SlidingWindows/vec_dot re-register per entry), shared
-  * scratch materializations (partitioned layouts, MVs). This probe
+  * — the nanos-layout conf flag ([[Tables.table]]) and shared scratch
+  * materializations (partitioned layouts, MVs); the native expressions
+  * are typed Columns and touch no session state. This probe
   * (a) runs every batch entry sequentially (baseline rows + warms all
   * _SUCCESS-guarded scratch artifacts, so the concurrent pass tests
   * QUERY concurrency, not first-materialization races — a deliberate

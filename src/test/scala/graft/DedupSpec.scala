@@ -114,7 +114,6 @@ class DedupSpec extends SparkSpec {
 
   test("cdc chunking: boundaries re-align after a prefix insertion; chars conserve") {
     import spark.implicits._
-    graft.expressions.CdcBoundaries.register(spark)
     // index-salted sections so chunks don't collapse to repeats
     val t1 = (1 to 6).map(i => s"section$i " + base).mkString(" ")
     val t2 = "freshly inserted prefix words " + t1
@@ -141,7 +140,6 @@ class DedupSpec extends SparkSpec {
 
   test("cdc dedup: re-crawled doc with an inserted banner is caught with high containment") {
     import spark.implicits._
-    graft.expressions.CdcBoundaries.register(spark)
     val dir = SparkSpec.scratch("dedup_cdcdedup")
     val article = (1 to 8).map(i => s"paragraph$i " + base).mkString(" ")
     val recrawl = "new cookie banner text appended by the site template " + article

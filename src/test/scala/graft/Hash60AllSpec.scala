@@ -15,7 +15,6 @@ class Hash60AllSpec extends SparkSpec with Matchers { self: AnyFunSuite =>
     transform(c, x => graft.ops.Dedup.hash60(x))
 
   test("hash60_all equals transform(arr, hash60) on crafted edge classes") {
-    graft.expressions.Hash60All.register(spark)
     import spark.implicits._
     val rows = Seq(
       Seq("abc", "", "the quick brown fox"),
@@ -41,8 +40,6 @@ class Hash60AllSpec extends SparkSpec with Matchers { self: AnyFunSuite =>
 
   test("hash60_all equals the declarative spelling on the fixture's " +
        "winnowing grams (every doc, every gram)") {
-    graft.expressions.Hash60All.register(spark)
-    graft.expressions.SlidingWindows.register(spark)
     val lt = lower(col("text"))
     // (scalatest's `length` matcher shadows functions.length)
     val grams = when(org.apache.spark.sql.functions.length(lt) >= 8,

@@ -15,7 +15,6 @@ class Simhash60Spec extends SparkSpec with Matchers { self: AnyFunSuite =>
 
   test("simhash60 kernel equals the declarative 60-fold spelling on " +
        "crafted edge classes") {
-    graft.expressions.Simhash60.register(spark)
     import spark.implicits._
     val rows = Seq(
       "abc def the quick brown fox",
@@ -57,7 +56,6 @@ class Simhash60Spec extends SparkSpec with Matchers { self: AnyFunSuite =>
 
   test("simhash60 kernel equals the declarative spelling on every " +
        "fixture document") {
-    graft.expressions.Simhash60.register(spark)
     val diff = Tables.documents(spark, "/root/testdata/sf0.001")
       .select(graft.ops.Dedup.simhash60(col("text")).as("native"),
               graft.ops.Dedup.simhash60Decl(col("text")).as("decl"))

@@ -13,7 +13,6 @@ class SimilaritySpec extends SparkSpec {
 
   test("dotD/normD expression forms: cosine of a vector with itself is 1") {
     import spark.implicits._
-    graft.expressions.FloatVecDot.register(spark)
     val df = Seq((Array(1.0f, 2.0f, 3.0f), Array(1.0f, 2.0f, 3.0f)))
       .toDF("a", "b")
     val cos = df.select((dotD(col("a"), col("b")) /
@@ -22,7 +21,6 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("codegen'd FloatVecDot is bit-identical to the interpreted HOF form") {
-    graft.expressions.FloatVecDot.register(spark)
     val e = graft.Tables.embeddings(spark, sf("sf0.001"))
       .select(col("embedding").as("a"))
     val pairs = e.crossJoin(graft.Tables.embeddings(spark, sf("sf0.001"))
@@ -35,7 +33,6 @@ class SimilaritySpec extends SparkSpec {
 
   test("MaskAndCount equals the interpreted HOF popcount and validates arity") {
     import spark.implicits._
-    graft.expressions.MaskAndCount.register(spark)
     val df = Seq(
       (Array(0xF0F0L, 0x1L), Array(0x0FF0L, 0x3L)), // overlap: 4 + 1 bits
       (Array(0L, 0L), Array(-1L, -1L)),             // empty ∩ full = 0
@@ -65,7 +62,6 @@ class SimilaritySpec extends SparkSpec {
 
   test("SortedIntersectCount equals size(array_intersect) on sorted distinct arrays") {
     import spark.implicits._
-    graft.expressions.SortedIntersectCount.register(spark)
     val df = Seq(
       (Seq("a", "b", "c"), Seq("b", "c", "d")),
       (Seq("a"), Seq("b")),
@@ -88,7 +84,6 @@ class SimilaritySpec extends SparkSpec {
 
   test("lshSig buckets identical vectors together and is deterministic") {
     import spark.implicits._
-    graft.expressions.FloatVecDot.register(spark)
     val v = Array.tabulate(64)(i => (math.sin(i + 1) / 2).toFloat)
     val df = Seq((1L, v), (2L, v)).toDF("id", "embedding")
     val sigs = df.select(lshSig(col("embedding"))).collect().map(_.getInt(0))
@@ -114,7 +109,7 @@ class SimilaritySpec extends SparkSpec {
   test("block-pair grid equals brute-force all-pairs exactly (every pair once, exact cos)") {
     import spark.implicits._
     val d = sf("sf0.001")
-    val got = blockPairs(spark, graft.Tables.embeddings(spark, d), blocks = 8)
+    val got = blockPairs(graft.Tables.embeddings(spark, d), blocks = 8)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     // brute force in the test (collect is fine HERE; the operator must not)
     val all = graft.Tables.embeddings(spark, d)
@@ -137,10 +132,10 @@ class SimilaritySpec extends SparkSpec {
   test("banded-LSH candidates: subset of exact pairs, measured recall at threshold") {
     val d = sf("sf0.001")
     val t = 0.35
-    val exact = blockPairs(spark, graft.Tables.embeddings(spark, d), blocks = 8)
+    val exact = blockPairs(graft.Tables.embeddings(spark, d), blocks = 8)
       .filter(col("cos") >= t)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val cand = neardupCandidatesLsh(spark, graft.Tables.embeddings(spark, d),
+    val cand = neardupCandidatesLsh(graft.Tables.embeddings(spark, d),
         bands = 16, rows = 4)
       .filter(col("cos") >= t)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet

@@ -23,7 +23,6 @@ class SlidingWindowsSpec extends SparkSpec {
 
   test("sliding_windows == transform/sequence/substring on the sf0.001 " +
        "corpus for every operator (width, stride)") {
-    graft.expressions.SlidingWindows.register(spark)
     val docs = Tables.documents(spark, sf("sf0.001"))
     for ((w, s) <- cases) {
       val cmp = docs.filter(org.apache.spark.sql.functions.length(col("text")) >= w)
@@ -41,7 +40,6 @@ class SlidingWindowsSpec extends SparkSpec {
        "POINT grain (byte-offset windows would split chars; UTF-16 " +
        "grain would split surrogate pairs)") {
     import spark.implicits._
-    graft.expressions.SlidingWindows.register(spark)
     val rows = Seq(
       "café naïve 数据 模型 résumé",                 // 2-3 byte chars
       "🙂ok🙃 emoji 𝕊urrogate pairs 🚂🚃🚃",          // astral (4-byte)
@@ -73,7 +71,6 @@ class SlidingWindowsSpec extends SparkSpec {
   test("a 150k-char single row stays sub-second (the O(len²) blowup " +
        "the expression exists to kill)") {
     import spark.implicits._
-    graft.expressions.SlidingWindows.register(spark)
     val big = ("word " * 30000).trim
     val t0 = System.nanoTime()
     val n = Seq(big).toDF("text")

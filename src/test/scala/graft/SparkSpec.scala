@@ -28,6 +28,9 @@ object SparkSpec {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.warehouse.dir", scratch("warehouse"))
       .config("spark.ui.enabled", "false")
+      // the natives' SQL names, for the specs' call_function/selectExpr
+      // checks (library code builds them as typed Columns)
+      .config("spark.sql.extensions", "graft.GraftExtensions")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s

@@ -20,9 +20,6 @@ class WinnowFpsSpec extends SparkSpec with Matchers { self: AnyFunSuite =>
     graft.ops.Dedup.winnowFpsDecl(lower(col("text"))).as("decl"))
 
   test("winnow_fps equals the declarative chain on crafted edge classes") {
-    // the declarative reference needs sliding_windows + hash60_all too
-    // (frames here are toDF-built, so the Tables choke point never runs)
-    graft.expressions.Registration.registerAll(spark)
     import spark.implicits._
     val rows = Seq(
       "",                     // empty: whole-text gram, single min
@@ -44,7 +41,6 @@ class WinnowFpsSpec extends SparkSpec with Matchers { self: AnyFunSuite =>
   }
 
   test("winnow_fps equals the declarative chain on every fixture doc") {
-    graft.expressions.Registration.registerAll(spark)
     val diff = both(Tables.documents(spark, "/root/testdata/sf0.001"))
       .filter(!(col("native") <=> col("decl")))
       .count()
